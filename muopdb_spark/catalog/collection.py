@@ -44,6 +44,8 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from muopdb_spark.index.quantizer import QUANTIZERS, lookup
+
 
 @dataclass
 class CollectionConfig:
@@ -57,7 +59,7 @@ class CollectionConfig:
     max_posting_size: int | None = None
     max_clusters_per_vector: int = 1
     distance_threshold: float = 0.1
-    quantizer: str = "none"  # none|pq|rabitq|sq|opq (enums.rs:4-9 + SQ8/OPQ)
+    quantizer: str = "none"  # a quantizer.NAMES entry (enums.rs:4-9 + SQ8/OPQ)
     pq_subvectors: int = 4                   # collection.rs:43-63 subvector geometry
     pq_centers: int = 16
     vacuum_deleted_ratio: float = 0.1        # immutable_segment.rs:75-82
@@ -73,25 +75,23 @@ class CollectionConfig:
 
     def validate(self) -> None:
         """Reject config combinations whose search results would be
-        silently wrong. quantizer='sq' decodes to an L2-range estimate
-        (sq_est_score_cols is always an L2 distance), so under 'dot' or
-        'cosine' the candidate ranking is a DIFFERENT metric: rerank
+        silently wrong. A quantizer that declares l2_metric_only (the
+        per-user ones) decodes to an L2-range estimate, so under 'dot'
+        or 'cosine' the candidate ranking is a DIFFERENT metric: rerank
         recovers ordering only if containment happens to hold, and
-        without rerank the returned score IS the wrong metric. Refuse
-        at create/build time instead."""
-        if self.quantizer not in ("none", "pq", "pq_user", "rabitq", "sq",
-                                  "opq", "opq_user"):
-            raise ValueError(
-                f"unknown quantizer {self.quantizer!r} "
-                "(none|pq|pq_user|rabitq|sq|opq|opq_user)"
-            )
-        if self.quantizer in ("sq", "pq_user", "opq_user") and self.metric not in (
+        without rerank the returned score IS the wrong metric. Refuse at
+        create/build time instead. Names outside quantizer.NAMES fail
+        the registry lookup."""
+        q = lookup(self.quantizer, multi_user=True)
+        if q is not None and q.l2_metric_only and self.metric not in (
             "l2", "l2_squared"
         ):
+            ok = " or ".join(
+                repr(n) for n, e in QUANTIZERS.items() if not e.l2_metric_only)
             raise ValueError(
                 f"quantizer={self.quantizer!r} supports only l2/l2_squared "
                 "metrics (its candidate estimator is an L2 distance); got "
-                f"metric={self.metric!r} — use quantizer='pq' or 'rabitq' "
+                f"metric={self.metric!r} — use quantizer={ok} "
                 "for dot/cosine collections"
             )
 
@@ -768,107 +768,49 @@ class Collection:
     def _seg_index_dir(self, seg: str, kind: str) -> str:
         return os.path.join(self._segment_dir(seg), "index", kind)
 
-    def _codebook_path(self) -> str:
-        return os.path.join(self.root, f"{self.config.quantizer}_codebook.json")
+    def _train_codebook(self, q, docs: DataFrame):
+        return q.train(
+            docs, vec_col="vector", user_col="user_id",
+            num_subvectors=self.config.pq_subvectors,
+            num_centers=self.config.pq_centers,
+        )
 
-    def _load_or_train_codebook(self):
+    def _load_or_train_codebook(self, q):
         """Collection-level quantizer artifact (the reference selects the
         quantizer per collection, rs/index/src/collection/mod.rs:145-149;
         we also SCOPE the codebook per collection — one deviation from
         the reference's per-segment training — so codes from different
         segments score against one table and cross-segment merges need
-        no re-encoding). Trained once over a sample, persisted, reused."""
+        no re-encoding). Trained once over a sample, persisted at the
+        collection root (<name>_codebook.json, or a swap-managed parquet
+        table for per-user quantizers), reused."""
         self.config.validate()  # pre-existing collections: guard at build time
-        if self.config.quantizer == "pq":
-            from muopdb_spark.index.pq import PqCodebook, train_pq
-
-            if os.path.exists(self._codebook_path()):
-                with open(self._codebook_path()) as f:
-                    return PqCodebook.from_json(f.read())
-            cb = train_pq(
-                self.docs(with_tombstones=True), vec_col="vector",
-                num_subvectors=self.config.pq_subvectors,
-                num_centers=self.config.pq_centers,
-            )
-        elif self.config.quantizer == "sq":
-            # PER-USER SQ codebooks, collection-scoped: a (user_id,
-            # mins, scales) parquet table instead of a scalar JSON —
-            # each tenant quantizes in its own range (the recall-skew
-            # mitigation, index/sq.train_sq_per_user). build_index
-            # extends the table when a later segment introduces users
-            # unseen at training time.
-            from muopdb_spark.index.sq import train_sq_per_user
-
-            path = os.path.join(self.root, "sq_codebook")
-            if os.path.isdir(path) or os.path.isdir(path + ".old"):
-                return _read_swapped_parquet(self.spark, path)
-            cb_df = train_sq_per_user(
-                self.docs(with_tombstones=True),
-                user_col="user_id", vec_col="vector",
-            )
-            _swap_parquet_dir(cb_df, path)
-            return _read_swapped_parquet(self.spark, path)
-        elif self.config.quantizer == "pq_user":
-            # PER-USER PQ codebooks, collection-scoped (the PQ analog of
-            # the sq table above — index/pq.train_pq_per_user); same
-            # swap-managed root artifact, same unseen-user extension in
-            # build_index.
-            from muopdb_spark.index.pq import train_pq_per_user
-
-            path = os.path.join(self.root, "pq_codebook")
-            if os.path.isdir(path) or os.path.isdir(path + ".old"):
-                return _read_swapped_parquet(self.spark, path)
-            cb_df = train_pq_per_user(
-                self.docs(with_tombstones=True),
-                user_col="user_id", vec_col="vector",
-                num_subvectors=self.config.pq_subvectors,
-                num_centers=self.config.pq_centers,
-            )
-            _swap_parquet_dir(cb_df, path)
-            return _read_swapped_parquet(self.spark, path)
-        elif self.config.quantizer == "opq_user":
-            # PER-USER OPQ, collection-scoped: a (user_id, rotation,
-            # books) parquet table — the pq_user artifact contract
-            # (swap-managed root dir, unseen-user extension in
-            # build_index) with the per-tenant rotation on top.
-            from muopdb_spark.index.opq import train_opq_per_user
-
-            path = os.path.join(self.root, "opq_codebook")
-            if os.path.isdir(path) or os.path.isdir(path + ".old"):
-                return _read_swapped_parquet(self.spark, path)
-            cb_df = train_opq_per_user(
-                self.docs(with_tombstones=True),
-                user_col="user_id", vec_col="vector",
-                num_subvectors=self.config.pq_subvectors,
-                num_centers=self.config.pq_centers,
-            )
-            _swap_parquet_dir(cb_df, path)
-            return _read_swapped_parquet(self.spark, path)
-        elif self.config.quantizer == "opq":
-            from muopdb_spark.index.opq import OpqCodebook, train_opq
-
-            if os.path.exists(self._codebook_path()):
-                with open(self._codebook_path()) as f:
-                    return OpqCodebook.from_json(f.read())
-            cb = train_opq(
-                self.docs(with_tombstones=True), vec_col="vector",
-                num_subvectors=self.config.pq_subvectors,
-                num_centers=self.config.pq_centers,
-            )
-        else:  # rabitq
-            from muopdb_spark.index.rabitq import RabitQCodebook, train_rabitq
-
-            if os.path.exists(self._codebook_path()):
-                with open(self._codebook_path()) as f:
-                    return RabitQCodebook.from_json(f.read())
-            cb = train_rabitq(self.docs(with_tombstones=True), vec_col="vector")
-        _atomic_write(self._codebook_path(), cb.to_json())
+        cb = q.read_artifact(self.spark, self.root)
+        if cb is None:
+            cb = q.write_artifact(self.spark, self.root, self._train_codebook(
+                q, self.docs(with_tombstones=True)))
         return cb
+
+    def _cover_users(self, q, codebook: DataFrame, docs: DataFrame) -> DataFrame:
+        """A later segment can carry users unseen when a per-user
+        codebook trained: extend the root table for them (trained on
+        their docs) instead of silently dropping their postings."""
+        missing = docs.select("user_id").distinct().join(
+            codebook.select("user_id"), "user_id", "left_anti")
+        if missing.isEmpty():
+            return codebook
+        extra = self._train_codebook(q, self.docs(with_tombstones=True).join(
+            missing, "user_id", "left_semi"))
+        # localCheckpoint pins the union (it reads the directory being
+        # replaced) before the crash-safe two-rename swap of the
+        # authoritative root table
+        return q.write_artifact(self.spark, self.root, codebook.unionByName(
+            extra).localCheckpoint(eager=True))
 
     def build_index(self) -> dict:
         """S5's index-build half, durable: for every current-TOC segment
-        lacking an index, build per-user IVF tables (+ PQ codes when the
-        collection quantizer is 'pq') and the inverted term index, write
+        lacking an index, build per-user IVF tables (+ codes when the
+        collection is quantized) and the inverted term index, write
         them under segments/<seg>/index/{ivf,terms}/, and commit a TOC
         version referencing them (the flush artifact of core.rs:867-976
         / multi_spann/writer.rs + terms/writer.rs:22-56). A new session
@@ -880,8 +822,8 @@ class Collection:
 
         toc = self.toc()
         indexes = {s: list(v) for s, v in toc.get("indexes", {}).items()}
-        quant = self.config.quantizer
-        codebook = self._load_or_train_codebook() if quant != "none" else None
+        q = lookup(self.config.quantizer, multi_user=True)
+        codebook = self._load_or_train_codebook(q) if q is not None else None
         term_fields = {
             f: t for f, t in self.config.attribute_schema.items()
             if _attr_kind(t) in ("text", "keyword")
@@ -899,114 +841,12 @@ class Collection:
                     max_clusters_per_vector=self.config.max_clusters_per_vector,
                     carry_cols=["seq_no"],
                 )
-                if codebook is not None:
-                    if quant == "pq":
-                        from muopdb_spark.index.pq import pq_encode
-
-                        idx.postings = pq_encode(idx.postings, codebook, vec_col="vector")
-                    elif quant == "sq":
-                        from muopdb_spark.index.sq import (
-                            sq_encode_cols,
-                            train_sq_per_user,
-                        )
-
-                        # a later segment can carry users unseen when
-                        # the codebook trained — extend the table for
-                        # them (their docs' own min/max) instead of
-                        # silently dropping their postings in the join
-                        missing = docs.select("user_id").distinct().join(
-                            codebook.select("user_id"), "user_id", "left_anti")
-                        if not missing.isEmpty():
-                            extra = train_sq_per_user(
-                                self.docs(with_tombstones=True).join(
-                                    missing, "user_id", "left_semi"),
-                                user_col="user_id", vec_col="vector",
-                            )
-                            codebook = codebook.unionByName(extra)
-                            path = os.path.join(self.root, "sq_codebook")
-                            # localCheckpoint pins the union (it reads
-                            # the directory being replaced) before the
-                            # crash-safe two-rename swap of the
-                            # authoritative root table
-                            codebook = codebook.localCheckpoint(eager=True)
-                            _swap_parquet_dir(codebook, path)
-                            codebook = _read_swapped_parquet(self.spark, path)
-                        idx.postings = (
-                            idx.postings.join(F.broadcast(codebook), "user_id")
-                            .withColumn(
-                                "sq_code",
-                                sq_encode_cols(
-                                    F.col("vector"), F.col("mins"),
-                                    F.col("scales"),
-                                    self.config.num_features,
-                                ),
-                            )
-                            .drop("mins", "scales")
-                        )
-                    elif quant == "pq_user":
-                        from muopdb_spark.index.pq import (
-                            pq_encode_per_user,
-                            train_pq_per_user,
-                        )
-
-                        # unseen-user extension: same contract as sq
-                        missing = docs.select("user_id").distinct().join(
-                            codebook.select("user_id"), "user_id", "left_anti")
-                        if not missing.isEmpty():
-                            extra = train_pq_per_user(
-                                self.docs(with_tombstones=True).join(
-                                    missing, "user_id", "left_semi"),
-                                user_col="user_id", vec_col="vector",
-                                num_subvectors=self.config.pq_subvectors,
-                                num_centers=self.config.pq_centers,
-                            )
-                            codebook = codebook.unionByName(
-                                extra).localCheckpoint(eager=True)
-                            path = os.path.join(self.root, "pq_codebook")
-                            _swap_parquet_dir(codebook, path)
-                            codebook = _read_swapped_parquet(self.spark, path)
-                        idx.postings = pq_encode_per_user(
-                            idx.postings, codebook,
-                            user_col="user_id", vec_col="vector",
-                        )
-                    elif quant == "opq_user":
-                        from muopdb_spark.index.opq import (
-                            opq_encode_per_user,
-                            train_opq_per_user,
-                        )
-
-                        # unseen-user extension: same contract as
-                        # sq/pq_user
-                        missing = docs.select("user_id").distinct().join(
-                            codebook.select("user_id"), "user_id", "left_anti")
-                        if not missing.isEmpty():
-                            extra = train_opq_per_user(
-                                self.docs(with_tombstones=True).join(
-                                    missing, "user_id", "left_semi"),
-                                user_col="user_id", vec_col="vector",
-                                num_subvectors=self.config.pq_subvectors,
-                                num_centers=self.config.pq_centers,
-                            )
-                            codebook = codebook.unionByName(
-                                extra).localCheckpoint(eager=True)
-                            path = os.path.join(self.root, "opq_codebook")
-                            _swap_parquet_dir(codebook, path)
-                            codebook = _read_swapped_parquet(self.spark, path)
-                        idx.postings = opq_encode_per_user(
-                            idx.postings, codebook,
-                            user_col="user_id", vec_col="vector",
-                        )
-                    elif quant == "opq":
-                        from muopdb_spark.index.opq import opq_encode
-
-                        idx.postings = opq_encode(
-                            idx.postings, codebook, vec_col="vector")
-                    else:  # rabitq
-                        from muopdb_spark.index.rabitq import rabitq_encode
-
-                        idx.postings = rabitq_encode(idx.postings, codebook, vec_col="vector")
+                if q is not None:
+                    if q.per_user:
+                        codebook = self._cover_users(q, codebook, docs)
+                    idx.postings = q.encode(idx.postings, codebook)
                     idx.codebook = codebook
-                    idx.quantizer = quant
+                    idx.quantizer = q.name
                 multi_ivf_save(idx, self._seg_index_dir(seg, "ivf"))
                 have.add("ivf")
             if term_fields and "terms" not in have:
@@ -1065,6 +905,7 @@ class Collection:
         from muopdb_spark.functions.distance import score_expr
         from pyspark.sql.window import Window
 
+        q = lookup(self.config.quantizer, multi_user=True, dedup=True)
         if num_probes is None:
             num_probes = k
         segs = self._indexed_segments("ivf", version)
@@ -1072,7 +913,6 @@ class Collection:
             return self.spark.createDataFrame([], "user_id long, id long, score double")
         idxs = {s: self.load_segment_index(s) for s in segs}
         metric = self.config.metric
-        codebook = next(iter(idxs.values())).codebook
 
         def tagged(dfs: dict[str, DataFrame], pick) -> DataFrame:
             parts = [pick(ix).withColumn("_seg", F.lit(s)) for s, ix in dfs.items()]
@@ -1082,9 +922,9 @@ class Collection:
             return out
 
         users = [int(u) for u in user_ids]
-        q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+        qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
         cents = tagged(idxs, lambda ix: ix.centroids).filter(F.col("user_id").isin(users))
-        scored_c = cents.withColumn("d", score_expr(metric, F.col("centroid"), q))
+        scored_c = cents.withColumn("d", score_expr(metric, F.col("centroid"), qv))
         wp = Window.partitionBy("_seg", "user_id").orderBy(
             F.col("d").asc(), F.col("centroid_id").asc())
         probed = scored_c.withColumn("rnk", F.row_number().over(wp)).filter(
@@ -1112,58 +952,14 @@ class Collection:
             scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
                              how="left_semi")
 
-        exact = score_expr(metric, F.col("vector"), q)
-        if codebook is not None:
-            quant0 = next(iter(idxs.values())).quantizer
-            if quant0 == "rabitq":
-                from muopdb_spark.index.rabitq import rabitq_est_score
-
-                adc = rabitq_est_score(query_vector, codebook)
-            elif quant0 == "sq":
-                from muopdb_spark.index.sq import sq_est_score_cols
-
-                # authoritative per-user table lives at the collection
-                # root (a per-segment copy may predate users added by
-                # later segments' codebook extension); swap-aware read
-                # recovers a crashed mid-swap directory
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "sq_codebook"))
-                scan = scan.join(F.broadcast(codebook), "user_id")
-                adc = sq_est_score_cols(
-                    query_vector, F.col("mins"), F.col("scales")
-                )
-            elif quant0 == "pq_user":
-                from muopdb_spark.index.pq import (
-                    collect_pq_books,
-                    pq_adc_score_per_user,
-                )
-
-                # same authoritative-root contract as sq; only the
-                # REQUESTED users' books are collected (driver cost
-                # bounded by the request's user list)
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "pq_codebook"))
-                books = collect_pq_books(codebook, users)
-                adc = pq_adc_score_per_user(query_vector, books)
-            elif quant0 == "opq_user":
-                from muopdb_spark.index.opq import (
-                    collect_opq_books,
-                    opq_adc_score_per_user,
-                )
-
-                # same authoritative-root contract as sq/pq_user
-                codebook = _read_swapped_parquet(
-                    self.spark, os.path.join(self.root, "opq_codebook"))
-                books = collect_opq_books(codebook, users)
-                adc = opq_adc_score_per_user(query_vector, books)
-            elif quant0 == "opq":
-                from muopdb_spark.index.opq import opq_adc_score
-
-                adc = opq_adc_score(query_vector, codebook)
-            else:
-                from muopdb_spark.index.pq import pq_adc_score
-
-                adc = pq_adc_score(query_vector, codebook)
+        exact = score_expr(metric, F.col("vector"), qv)
+        if q is not None:
+            # the authoritative codebook lives at the collection root (a
+            # per-segment copy of a per-user table may predate users
+            # added by later segments' extension); per-user entries
+            # collect or join only the REQUESTED users' books
+            codebook = q.read_artifact(self.spark, self.root)
+            scan, adc = q.score(codebook, query_vector, scan, users)
             wu = Window.partitionBy("user_id").orderBy(
                 F.col("adc").asc_nulls_last(), F.col("id").asc())
             cand = (
@@ -1244,8 +1040,9 @@ class Collection:
 
     def build_quantizer(self, num_subvectors: int = 4, num_centers: int = 16):
         """M5 / QuantizerType: train the collection's PQ codebook when
-        config.quantizer == 'pq' (enums.rs:4-9 gates the same way)."""
-        if self.config.quantizer != "pq":
+        the collection's quantizer is PQ (enums.rs:4-9 gates the same
+        way)."""
+        if QUANTIZERS.get(self.config.quantizer) is not QUANTIZERS["pq"]:
             raise ValueError(
                 f"collection quantizer is {self.config.quantizer!r}, not 'pq'"
             )

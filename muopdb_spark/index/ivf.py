@@ -44,31 +44,28 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.index.quantizer import lookup
 
 
 @dataclass
 class IvfIndex:
     """centroids: (centroid_id int, centroid array<double>)
     postings:  (centroid_id int, id long, vector array<double>
-                [, pq_code array<int> | rq_code/rq_norm/rq_ip when
-                quantized])
-    codebook:  quantizer artifact when the index scores quantized
+                [, the quantizer's code columns])
+    quantizer: "none" or a single-user reading of a registry entry in
+               index/quantizer.py (pq | opq | rabitq | sq)
+    codebook:  that entry's codebook when the index scores quantized
                distances in the posting scan (the reference's
                per-collection quantizer, rs/index/src/collection/
                mod.rs:145-149; scan-side scoring at
-               ivf/block_based/index.rs:202-209): a PqCodebook for
-               quantizer="pq", a RabitQCodebook for quantizer="rabitq".
+               ivf/block_based/index.rs:202-209).
     """
 
     centroids: DataFrame
     postings: DataFrame
     metric: str = "l2"
     codebook: object | None = None
-    quantizer: str = "none"  # none | pq | rabitq
-
-    def __post_init__(self) -> None:
-        if self.quantizer == "none" and self.codebook is not None:
-            self.quantizer = "pq"  # pre-rabitq callers pass codebook only
+    quantizer: str = "none"
 
 
 def _fit_kmeans(df: DataFrame, vec_col: str, k: int, seed: int, max_iter: int,
@@ -161,14 +158,13 @@ def build_ivf(
     config (rs/config/src/collection.rs:65-115,176-210: 10 initial
     centroids, 20k training sample, <=1 cluster/vector, reindex on).
 
-    quantizer="pq" (enums.rs:4-9 QuantizerType) trains a PQ codebook
-    and stores per-posting codes, so searches can score quantized
-    distances inside the posting scan (ivf/block_based/index.rs:202-209)
-    — the coded scan reads m bytes/vector instead of 4*d.
-    quantizer="rabitq" stores 1-bit-per-dimension sign codes + two
-    scalars (index/rabitq.py) and scores the binary estimator in the
-    scan — ~D bits/vector (capability-exceeding: the reference ships
-    RaBitQ but never wires it into an index path)."""
+    A quantizer (enums.rs:4-9 QuantizerType; any single-user entry of
+    index/quantizer.py) trains a codebook and stores per-posting codes,
+    so searches score quantized distances inside the posting scan
+    (ivf/block_based/index.rs:202-209) — PQ reads m bytes/vector
+    instead of 4*d, RaBitQ ~D bits/vector (capability-exceeding: the
+    reference ships RaBitQ but never wires it into an index path)."""
+    q = lookup(quantizer, multi_user=False)
     spark = df.sparkSession
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vector"))
     n = base.count()
@@ -225,26 +221,12 @@ def build_ivf(
     ).repartition(F.col("centroid_id")).sortWithinPartitions("centroid_id", "id")
 
     codebook = None
-    if quantizer == "pq":
-        from muopdb_spark.index.pq import pq_encode, train_pq
-
-        codebook = train_pq(
+    if q is not None:
+        codebook = q.train(
             base, vec_col="vector", num_subvectors=pq_subvectors,
             num_centers=pq_centers, training_sample=pq_training_sample, seed=seed,
         )
-        postings = pq_encode(postings, codebook, vec_col="vector")
-    elif quantizer == "rabitq":
-        from muopdb_spark.index.rabitq import rabitq_encode, train_rabitq
-
-        codebook = train_rabitq(base, vec_col="vector", seed=seed)
-        postings = rabitq_encode(postings, codebook, vec_col="vector")
-    elif quantizer == "sq":
-        from muopdb_spark.index.sq import sq_encode, train_sq
-
-        codebook = train_sq(base, vec_col="vector")
-        postings = sq_encode(postings, codebook, vec_col="vector")
-    elif quantizer != "none":
-        raise ValueError(f"unknown quantizer {quantizer!r} (none|pq|rabitq|sq)")
+        postings = q.encode(postings, codebook, vec_col="vector")
     return IvfIndex(
         centroids=centroids, postings=postings.persist(), metric=metric,
         codebook=codebook, quantizer=quantizer,
@@ -260,27 +242,17 @@ def ivf_save(index: IvfIndex, path: str) -> None:
     import json
     import os
 
+    q = lookup(index.quantizer, multi_user=False)
     index.centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    postings = index.postings
-    if index.quantizer == "sq":
-        # persist SQ codes PACKED (1 byte/dim — the 4x storage form)
-        from muopdb_spark.index.sq import sq_pack_expr
-
-        postings = postings.withColumn(
-            "sq_packed", sq_pack_expr(F.col("sq_code"))
-        ).drop("sq_code")
+    postings = q.pack(index.postings) if q is not None else index.postings
     (
         postings.write.mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(os.path.join(path, "postings"))
     )
     meta = {"metric": index.metric, "quantizer": index.quantizer}
-    if index.quantizer == "pq":
-        meta["codebook"] = index.codebook.as_lists()
-    elif index.quantizer == "rabitq":
-        meta["codebook"] = json.loads(index.codebook.to_json())
-    elif index.quantizer == "sq":
-        meta["codebook"] = json.loads(index.codebook.to_json())
+    if q is not None:
+        q.save(index.codebook, path, meta)
     tmp = os.path.join(path, "meta.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
@@ -296,26 +268,13 @@ def ivf_load(spark: SparkSession, path: str) -> IvfIndex:
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    codebook = None
     quant = meta.get("quantizer", "none")
-    if quant == "pq":
-        import numpy as np
-
-        from muopdb_spark.index.pq import PqCodebook
-
-        codebook = PqCodebook([np.asarray(cb, dtype=np.float64) for cb in meta["codebook"]])
-    elif quant == "rabitq":
-        from muopdb_spark.index.rabitq import RabitQCodebook
-
-        codebook = RabitQCodebook.from_json(json.dumps(meta["codebook"]))
+    q = lookup(quant, multi_user=False)
+    codebook = None
     postings = spark.read.parquet(os.path.join(path, "postings"))
-    if quant == "sq":
-        from muopdb_spark.index.sq import SqCodebook, sq_unpack_expr
-
-        codebook = SqCodebook.from_json(json.dumps(meta["codebook"]))
-        postings = postings.withColumn(
-            "sq_code", sq_unpack_expr(F.col("sq_packed"), codebook.dim)
-        ).drop("sq_packed")
+    if q is not None:
+        codebook = q.load(spark, path, meta)
+        postings = q.unpack(postings, codebook)
     return IvfIndex(
         centroids=spark.read.parquet(os.path.join(path, "centroids")),
         postings=postings,
@@ -438,6 +397,7 @@ def ivf_search_batch(
     With full probes and no ratio prune the unquantized result is exact —
     that variant is DuckDB-oracle-checked; pruned-variant recall is
     pytest-gated."""
+    q = lookup(index.quantizer, multi_user=False, metric=index.metric, dedup=True)
     if num_probes is None:
         num_probes = k
     probes = probe_centroids_batch(
@@ -455,21 +415,8 @@ def ivf_search_batch(
     if tombstones is not None:
         cand = cand.join(tombstones.select("id").distinct(), on="id", how="left_anti")
     exact = score_expr(index.metric, F.col("vector"), F.col("qv"))
-    if index.quantizer != "none":
-        if index.metric != "l2":
-            raise ValueError("quantized scoring supports the l2 metric only")
-        if index.quantizer == "pq":
-            from muopdb_spark.index.pq import pq_adc_score_batch
-
-            approx = pq_adc_score_batch(index.codebook)
-        elif index.quantizer == "sq":
-            from muopdb_spark.index.sq import sq_est_score_batch
-
-            approx = sq_est_score_batch(index.codebook)
-        else:  # rabitq
-            from muopdb_spark.index.rabitq import rabitq_est_score_batch
-
-            approx = rabitq_est_score_batch(index.codebook)
+    if q is not None:
+        cand, approx = q.score_batch(index.codebook, cand, queries)
         carry = ["qv", "vector"] if rerank is not None else []
         scored = cand.select("query_id", "id", *carry, approx.alias("adc"))
         # V21 dedup per (query, id), then per-query candidate cut.
@@ -480,7 +427,8 @@ def ivf_search_batch(
         # the old row_number-over-(query_id, id) dedup forced its own
         # (query_id, id) exchange that the following per-query window
         # could not reuse. Duplicate (query, id) candidate rows are
-        # multi-assignment copies with IDENTICAL adc/qv/vector, so
+        # multi-assignment copies with IDENTICAL adc/qv/vector (codes
+        # are centroid-independent, checked by the lookup above), so
         # min/first reproduce the old keep-one-row semantics exactly.
         wcut = Window.partitionBy("query_id").orderBy(
             F.col("adc").asc_nulls_last(), F.col("id").asc()
@@ -563,13 +511,14 @@ def ivf_search(
     standard IVF-quantize + re-rank plan (N bounds the exact work to a
     constant per query regardless of corpus size).
     """
+    q = lookup(index.quantizer, multi_user=False, metric=index.metric)
     if num_probes is None:
         num_probes = k
     probed = probe_centroids(
         index, query_vector, num_probes=num_probes,
         centroid_distance_ratio=centroid_distance_ratio,
     )
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
     scan = index.postings.filter(F.col("centroid_id").isin(probed))
     if pre_filter is not None:
         scan = scan.filter(pre_filter)
@@ -577,22 +526,9 @@ def ivf_search(
         scan = scan.join(pre_filter_ids.select("id").distinct(), on="id", how="left_semi")
     if tombstones is not None:
         scan = scan.join(tombstones.select("id").distinct(), on="id", how="left_anti")
-    exact = score_expr(index.metric, F.col("vector"), q)
-    if index.quantizer != "none":
-        if index.metric != "l2":
-            raise ValueError("quantized scoring supports the l2 metric only")
-        if index.quantizer == "pq":
-            from muopdb_spark.index.pq import pq_adc_score
-
-            approx = pq_adc_score(query_vector, index.codebook)
-        elif index.quantizer == "sq":
-            from muopdb_spark.index.sq import sq_est_score
-
-            approx = sq_est_score(query_vector, index.codebook)
-        else:  # rabitq: the SIGMOD'24 estimator over the stored bit codes
-            from muopdb_spark.index.rabitq import rabitq_est_score
-
-            approx = rabitq_est_score(query_vector, index.codebook)
+    exact = score_expr(index.metric, F.col("vector"), qv)
+    if q is not None:
+        scan, approx = q.score(index.codebook, query_vector, scan, None)
         cand = (
             scan.select("id", "vector", approx.alias("adc"))
             # dedup multi-assignment by id before the candidate cut (V21)

@@ -38,25 +38,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.index.quantizer import lookup
 
 
 @dataclass
 class MultiIvfIndex:
     """centroids: (user_id long, centroid_id int, centroid array<double>)
     postings:  (user_id long, centroid_id int, id long, vector array<double>
-                [, carry cols][, pq_code array<int> |
-                rq_code/rq_norm/rq_ip when quantized])"""
+                [, carry cols][, the quantizer's code columns])
+    quantizer: "none" or a registry entry of index/quantizer.py
+               (pq | opq | rabitq | sq | pq_user | opq_user)
+    codebook:  that entry's codebook — one object for pq/opq/rabitq, a
+               (user_id, ...) table for the per-user sq/pq_user/opq_user"""
 
     centroids: DataFrame
     postings: DataFrame
     metric: str = "l2"
-    codebook: object | None = None  # PQ/RaBitQ codebook, or the per-user
-    # SQ codebook DataFrame (user_id, mins, scales) when quantizer="sq"
-    quantizer: str = "none"  # none | pq | rabitq | sq
-
-    def __post_init__(self) -> None:
-        if self.quantizer == "none" and self.codebook is not None:
-            self.quantizer = "pq"  # pre-rabitq callers pass codebook only
+    codebook: object | None = None
+    quantizer: str = "none"
 
 
 from muopdb_spark.index.kmeans import lloyd as _shared_lloyd
@@ -85,11 +84,13 @@ def build_multi_ivf(
     seq_no, so tombstone masking can stay seq_no-aware at search time
     without a join back to the docs table).
 
-    quantizer="pq"|"rabitq" trains ONE codebook across all users (the
-    reference's quantizer is per-collection, not per-user —
+    quantizer="pq"|"opq"|"rabitq" trains ONE codebook across all users
+    (the reference's quantizer is per-collection, not per-user —
     rs/index/src/collection/mod.rs:145-149 binds a single quantizer type
-    to the whole collection) and stores per-posting codes so searches
-    score quantized distances inside the scan."""
+    to the whole collection); "sq"|"pq_user"|"opq_user" train one book
+    per user (index/quantizer.py). Either way postings store codes so
+    searches score quantized distances inside the scan."""
+    q = lookup(quantizer, multi_user=True)
     base = df.select(
         F.col(user_col).alias("user_id"),
         F.col(id_col).alias("id"),
@@ -162,90 +163,15 @@ def build_multi_ivf(
         .sortWithinPartitions("user_id", "centroid_id", "id")
     )
     codebook = None
-    if quantizer == "pq":
-        from muopdb_spark.index.pq import pq_encode, train_pq
-
-        codebook = train_pq(
-            base, vec_col="vector", num_subvectors=pq_subvectors,
-            num_centers=pq_centers, training_sample=pq_training_sample, seed=seed,
-        )
-        postings = pq_encode(postings, codebook, vec_col="vector")
-    elif quantizer == "pq_user":
-        # PER-USER PQ codebooks — the PQ analog of the per-user SQ
-        # mitigation, closing the measured minority-user recall skew on
-        # the quantizer that showed it (tools/pq_recall_skew.py:
-        # rerank40 recall@10 0.883 vs 0.975 under the shared codebook).
-        # Training is the bounded per-user grouped fit; encoding is a
-        # salted cogroup so no codebook ever rides on a row.
-        from muopdb_spark.index.pq import pq_encode_per_user, train_pq_per_user
-
-        codebook = train_pq_per_user(
-            base, user_col="user_id", vec_col="vector",
+    if q is not None:
+        codebook = q.train(
+            base, vec_col="vector", user_col="user_id",
             num_subvectors=pq_subvectors, num_centers=pq_centers,
             training_sample=pq_training_sample, seed=seed,
-        ).persist()
-        postings = pq_encode_per_user(
-            postings, codebook, user_col="user_id", vec_col="vector"
         )
-    elif quantizer == "opq":
-        # OPQ: PQ after a learned orthonormal rotation (index/opq.py) —
-        # same code bytes on the postings, better recall per byte.
-        from muopdb_spark.index.opq import opq_encode, train_opq
-
-        codebook = train_opq(
-            base, vec_col="vector", num_subvectors=pq_subvectors,
-            num_centers=pq_centers, training_sample=pq_training_sample,
-            seed=seed,
-        )
-        postings = opq_encode(postings, codebook, vec_col="vector")
-    elif quantizer == "opq_user":
-        # PER-USER OPQ — one (rotation, codebook) pair per tenant
-        # (index/opq.train_opq_per_user): the pq_user center-budget
-        # argument plus the rotation itself, which a shared OPQ fits to
-        # the POOLED covariance and therefore to the dominant tenant's.
-        from muopdb_spark.index.opq import (
-            opq_encode_per_user,
-            train_opq_per_user,
-        )
-
-        codebook = train_opq_per_user(
-            base, user_col="user_id", vec_col="vector",
-            num_subvectors=pq_subvectors, num_centers=pq_centers,
-            training_sample=pq_training_sample, seed=seed,
-        ).persist()
-        postings = opq_encode_per_user(
-            postings, codebook, user_col="user_id", vec_col="vector"
-        )
-    elif quantizer == "rabitq":
-        from muopdb_spark.index.rabitq import rabitq_encode, train_rabitq
-
-        codebook = train_rabitq(base, vec_col="vector", seed=seed)
-        postings = rabitq_encode(postings, codebook, vec_col="vector")
-    elif quantizer == "sq":
-        # PER-USER SQ codebooks (beyond the reference's per-collection
-        # binding): each tenant quantizes in its own min/max range, the
-        # mitigation for the measured minority-user recall skew
-        # (index/sq.train_sq_per_user docstring / docs/SCALE.md).
-        from muopdb_spark.index.sq import sq_encode_cols, train_sq_per_user
-
-        dim = len(base.select("vector").first()["vector"])
-        codebook = train_sq_per_user(
-            base, user_col="user_id", vec_col="vector"
-        ).persist()
-        postings = (
-            postings.join(F.broadcast(codebook), "user_id")
-            .withColumn(
-                "sq_code",
-                sq_encode_cols(
-                    F.col("vector"), F.col("mins"), F.col("scales"), dim
-                ),
-            )
-            .drop("mins", "scales")
-        )
-    elif quantizer != "none":
-        raise ValueError(
-            f"unknown quantizer {quantizer!r} "
-            "(none|pq|pq_user|rabitq|sq|opq|opq_user)")
+        if q.per_user:
+            codebook = codebook.persist()
+        postings = q.encode(postings, codebook, vec_col="vector", user_col="user_id")
     return MultiIvfIndex(
         centroids=centroids, postings=postings.persist(), metric=metric,
         codebook=codebook, quantizer=quantizer,
@@ -261,27 +187,14 @@ def multi_ivf_save(index: MultiIvfIndex, path: str) -> None:
     import json
     import os
 
+    q = lookup(index.quantizer, multi_user=True)
     index.centroids.write.mode("overwrite").partitionBy("user_id").parquet(
         os.path.join(path, "centroids"))
     index.postings.write.mode("overwrite").partitionBy("user_id", "centroid_id").parquet(
         os.path.join(path, "postings"))
     meta = {"metric": index.metric, "quantizer": index.quantizer}
-    if index.quantizer == "pq":
-        meta["codebook"] = index.codebook.as_lists()
-    elif index.quantizer == "opq":
-        meta["codebook"] = json.loads(index.codebook.to_json())
-    elif index.quantizer == "rabitq":
-        meta["codebook"] = json.loads(index.codebook.to_json())
-    elif index.quantizer == "sq":
-        # per-user codebook is a (small) table, not a scalar artifact
-        index.codebook.write.mode("overwrite").parquet(
-            os.path.join(path, "sq_codebook"))
-    elif index.quantizer == "pq_user":
-        index.codebook.write.mode("overwrite").parquet(
-            os.path.join(path, "pq_codebook"))
-    elif index.quantizer == "opq_user":
-        index.codebook.write.mode("overwrite").parquet(
-            os.path.join(path, "opq_codebook"))
+    if q is not None:
+        q.save(index.codebook, path, meta)
     tmp = os.path.join(path, "meta.json.tmp")
     with open(tmp, "w") as f:
         json.dump(meta, f)
@@ -295,27 +208,9 @@ def multi_ivf_load(spark, path: str) -> MultiIvfIndex:
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    codebook = None
     quant = meta.get("quantizer", "none")
-    if quant == "pq":
-        from muopdb_spark.index.pq import PqCodebook
-
-        codebook = PqCodebook(
-            [np.asarray(cb, dtype=np.float64) for cb in meta["codebook"]])
-    elif quant == "opq":
-        from muopdb_spark.index.opq import OpqCodebook
-
-        codebook = OpqCodebook.from_json(json.dumps(meta["codebook"]))
-    elif quant == "rabitq":
-        from muopdb_spark.index.rabitq import RabitQCodebook
-
-        codebook = RabitQCodebook.from_json(json.dumps(meta["codebook"]))
-    elif quant == "sq":
-        codebook = spark.read.parquet(os.path.join(path, "sq_codebook"))
-    elif quant == "pq_user":
-        codebook = spark.read.parquet(os.path.join(path, "pq_codebook"))
-    elif quant == "opq_user":
-        codebook = spark.read.parquet(os.path.join(path, "opq_codebook"))
+    q = lookup(quant, multi_user=True)
+    codebook = q.load(spark, path, meta) if q is not None else None
     return MultiIvfIndex(
         centroids=spark.read.parquet(os.path.join(path, "centroids")),
         postings=spark.read.parquet(os.path.join(path, "postings")),
@@ -387,10 +282,11 @@ def multi_ivf_search_users(
     estimators as the batch path, so batch == per-request holds for
     every quantizer; `rerank=N` re-scores the quantized top-N exactly
     (exact given candidate containment, recall-pytest-gated)."""
+    q = lookup(index.quantizer, multi_user=True, metric=index.metric)
     if num_probes is None:
         num_probes = k
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
-    pairs = _probed_pairs(index, user_ids, q, num_probes, centroid_distance_ratio)
+    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    pairs = _probed_pairs(index, user_ids, qv, num_probes, centroid_distance_ratio)
     # one semi join prunes the postings scan to the probed pairs — with
     # postings partitioned by (user_id, centroid_id) this is the
     # partition-pruning analog of per-user index-blob opens
@@ -401,52 +297,9 @@ def multi_ivf_search_users(
         scan = scan.filter(pre_filter)
     if pre_filter_ids is not None:
         scan = scan.join(pre_filter_ids.select("id").distinct(), on="id", how="left_semi")
-    exact = score_expr(index.metric, F.col("vector"), q)
-    if index.quantizer != "none":
-        if index.metric != "l2":
-            raise ValueError("quantized scoring supports the l2 metric only")
-        if index.quantizer == "pq":
-            from muopdb_spark.index.pq import pq_adc_score
-
-            approx = pq_adc_score(query_vector, index.codebook)
-        elif index.quantizer == "opq":
-            from muopdb_spark.index.opq import opq_adc_score
-
-            approx = opq_adc_score(query_vector, index.codebook)
-        elif index.quantizer == "pq_user":
-            from muopdb_spark.index.pq import (
-                collect_pq_books,
-                pq_adc_score_per_user,
-            )
-
-            # one small collect bounded by the REQUEST's user list (the
-            # reference's per-user query loop, driver-side): each user
-            # scores against its own table
-            books = collect_pq_books(index.codebook, user_ids)
-            approx = pq_adc_score_per_user(query_vector, books)
-        elif index.quantizer == "opq_user":
-            from muopdb_spark.index.opq import (
-                collect_opq_books,
-                opq_adc_score_per_user,
-            )
-
-            # request-bounded collect, then per-user (rotation, table)
-            books = collect_opq_books(index.codebook, user_ids)
-            approx = opq_adc_score_per_user(query_vector, books)
-        elif index.quantizer == "sq":
-            from muopdb_spark.index.sq import sq_est_score_cols
-
-            # per-user codebooks: join the (user_id, mins, scales)
-            # table (broadcast — 2*dim doubles per user) so each row
-            # estimates in ITS OWN user's quantization range
-            scan = scan.join(F.broadcast(index.codebook), "user_id")
-            approx = sq_est_score_cols(
-                query_vector, F.col("mins"), F.col("scales")
-            )
-        else:  # rabitq
-            from muopdb_spark.index.rabitq import rabitq_est_score
-
-            approx = rabitq_est_score(query_vector, index.codebook)
+    exact = score_expr(index.metric, F.col("vector"), qv)
+    if q is not None:
+        scan, approx = q.score(index.codebook, query_vector, scan, user_ids)
         carry = ["vector"] if rerank is not None else []
         cand = scan.select("user_id", "id", *carry, approx.alias("adc"))
         # V21 dedup per (user, id), then the candidate cut
@@ -547,6 +400,7 @@ def multi_ivf_search_batch(
     rerank pool contains the true top-k (the standard candidate-
     containment condition — quantization error can violate it for small
     rerank, so containment is recall-pytest-gated, not assumed)."""
+    q = lookup(index.quantizer, multi_user=True, metric=index.metric, dedup=True)
     if num_probes is None:
         num_probes = k
     req = requests.select(
@@ -579,53 +433,8 @@ def multi_ivf_search_batch(
         )
     exact = score_expr(index.metric, F.col("vector"), F.col("qv"))
     keys = ["request_id", "user_id"] if per_user else ["request_id"]
-    if index.quantizer != "none":
-        if index.metric != "l2":
-            raise ValueError("quantized scoring supports the l2 metric only")
-        if index.quantizer == "pq":
-            from muopdb_spark.index.pq import pq_adc_score_batch
-
-            approx = pq_adc_score_batch(index.codebook)
-        elif index.quantizer == "opq":
-            from muopdb_spark.index.opq import opq_adc_score_batch
-
-            approx = opq_adc_score_batch(index.codebook)
-        elif index.quantizer == "pq_user":
-            from muopdb_spark.index.pq import (
-                collect_pq_books,
-                pq_adc_score_batch_per_user,
-            )
-
-            # bounded by the batch's DISTINCT users (one small collect
-            # of the request table's user column, then the codebook
-            # rows for those users only)
-            req_users = [
-                r["user_id"] for r in req.select("user_id").distinct().collect()
-            ]
-            books = collect_pq_books(index.codebook, req_users)
-            approx = pq_adc_score_batch_per_user(books)
-        elif index.quantizer == "opq_user":
-            from muopdb_spark.index.opq import (
-                collect_opq_books,
-                opq_adc_score_batch_per_user,
-            )
-
-            req_users = [
-                r["user_id"] for r in req.select("user_id").distinct().collect()
-            ]
-            books = collect_opq_books(index.codebook, req_users)
-            approx = opq_adc_score_batch_per_user(books)
-        elif index.quantizer == "sq":
-            from muopdb_spark.index.sq import sq_est_score_cols
-
-            cand = cand.join(F.broadcast(index.codebook), "user_id")
-            approx = sq_est_score_cols(
-                F.col("qv"), F.col("mins"), F.col("scales")
-            )
-        else:  # rabitq
-            from muopdb_spark.index.rabitq import rabitq_est_score_batch
-
-            approx = rabitq_est_score_batch(index.codebook)
+    if q is not None:
+        cand, approx = q.score_batch(index.codebook, cand, req)
         carry = ["qv", "vector"] if rerank is not None else []
         scored = cand.select(
             "request_id", "user_id", "id", *carry, approx.alias("adc")
@@ -635,7 +444,8 @@ def multi_ivf_search_batch(
         # windows — the old row_number-over-(request, user, id) dedup
         # forced its own exchange the per-request windows could not
         # reuse. Duplicate candidate rows are multi-assignment copies
-        # with identical adc/qv/vector, so min/first keep the same row
+        # with identical adc/qv/vector (centroid-independent codes,
+        # checked by the lookup above), so min/first keep the same row
         # content. Same change as ivf.ivf_search_batch.
         wcut = Window.partitionBy(*keys).orderBy(
             F.col("adc").asc_nulls_last(), F.col("id").asc()

@@ -251,6 +251,9 @@ def with_registered_domain(
     # the five broadcast subtrees still canonicalize identically and
     # joins 2-5 stay ReusedExchange (the r16 shared-broadcast win —
     # re-verified in plans/r17/).
+    # The column part of each qualified ref is backquoted, so caller
+    # columns with a dot in the name (`meta.id`) resolve as one name
+    # instead of as a struct field of a column `meta`.
     r_shared = F.broadcast(rules)
     for i in range(1, MAX_RULE_LABELS + 1):
         cand = F.when(
@@ -262,7 +265,8 @@ def with_registered_domain(
         out = left.join(
             r, cand == F.col(f"_r{i}.suffix"), "left"
         ).select(
-            *[F.col(f"_l{i}.{c}").alias(c) for c in left_cols],
+            *[F.col(f"_l{i}.`{c.replace('`', '``')}`").alias(c)
+              for c in left_cols],
             F.col(f"_r{i}.suffix").alias(f"_s{i}"),
             F.col(f"_r{i}.exact").alias(f"_exact{i}"),
             F.col(f"_r{i}.wild").alias(f"_wild{i}"),

@@ -251,21 +251,21 @@ def test_batch_search_one_plan_matches_per_query(index, clustered, spark):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("quantizer", ["pq", "rabitq"])
+@pytest.mark.parametrize("quantizer", ["pq", "opq", "rabitq", "sq"])
 @pytest.mark.parametrize("rerank", [None, 50])
 def test_batch_search_quantized_matches_per_query(clustered, spark, quantizer, rerank):
-    """Quantized batch path (pq_adc_score_batch / rabitq_est_score_batch
-    wired into ivf_search_batch): N queries in one plan must equal N
-    single-query ivf_search results for the SAME index, with and without
-    exact re-rank — the batch estimator and per-query estimator score
-    the same codes, so the results must be bit-identical."""
+    """Quantized batch path (each registry entry's batch score Column
+    wired into ivf_search_batch), for every quantizer a single-user ivf
+    index accepts: N queries in one plan must equal N single-query
+    ivf_search results for the SAME index, with and without exact
+    re-rank — the batch estimator and per-query estimator score the
+    same codes, so the results must be identical."""
     import numpy as np
 
     from muopdb_spark.index.ivf import ivf_search_batch
 
-    kwargs = dict(pq_subvectors=4, pq_centers=16) if quantizer == "pq" else {}
     idx = build_ivf(clustered, num_centroids=N_CLUSTERS, seed=7,
-                    quantizer=quantizer, **kwargs)
+                    quantizer=quantizer, pq_subvectors=4, pq_centers=16)
     rng = np.random.default_rng(11)
     qs = [
         (c, (np.full(DIM, c * 100.0) + rng.normal(0, 5.0, DIM)).tolist())

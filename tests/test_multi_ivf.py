@@ -10,6 +10,7 @@ from muopdb_spark.index.multi_ivf import (
     multi_ivf_search,
     multi_ivf_search_users,
 )
+from muopdb_spark.index.quantizer import QUANTIZERS
 from muopdb_spark.operators.knn import knn
 
 DIM = 6
@@ -156,21 +157,17 @@ def test_batch_requests_user_isolation(index, spark):
     assert all(r["id"] < 100 for r in out)  # user 0 owns ids 0..99
 
 
-@pytest.mark.parametrize("quantizer", ["pq", "rabitq", "opq"])
+@pytest.mark.parametrize("quantizer", list(QUANTIZERS))
 def test_batch_requests_quantized_match_per_request(users_df, spark, quantizer):
     """Quantized multi-user batch path (the round-3 feature that shipped
-    without a gate): batch == per-request for PQ, RaBitQ, and OPQ with
+    without a gate): batch == per-request for every registry entry with
     exact re-rank, same codes, same estimators."""
     from muopdb_spark.index.multi_ivf import (
         build_multi_ivf, multi_ivf_search_batch, multi_ivf_search_users,
     )
 
-    kwargs = (
-        dict(pq_subvectors=3, pq_centers=16)
-        if quantizer in ("pq", "opq") else {}
-    )
     idx = build_multi_ivf(users_df, num_centroids=2, seed=9,
-                          quantizer=quantizer, **kwargs)
+                          quantizer=quantizer, pq_subvectors=3, pq_centers=16)
     reqs = [
         (0, [0], [1.0] * DIM),
         (1, [0, 1], [50.0] * DIM),

@@ -209,6 +209,15 @@ def test_caller_columns_named_like_rule_columns_survive(spark):  # noqa: F811
     ).collect()[0]
     assert row2["suffix"] == "com" and row2["s2"] == "com"
     assert row2["d1"] == row2["d2"] == "example.com"
+    # a caller column with a dot in its name must resolve as one column,
+    # not as field `id` of a struct column `meta`
+    dotted = spark.createDataFrame(
+        [("www.example.co.uk", 5)], "host string, `meta.id` int"
+    )
+    out3 = with_registered_domain(dotted, host_col="host", out_col="dom")
+    assert set(out3.columns) == {"host", "meta.id", "dom"}
+    row3 = out3.collect()[0]
+    assert row3["meta.id"] == 5 and row3["dom"] == "example.co.uk"
 
 
 def test_arg_errors(spark):  # noqa: F811

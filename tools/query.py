@@ -45,9 +45,10 @@ Pipeline commands (operate on a documents parquet):
   python tools/query.py bpe --input docs.parquet --num-merges 200 \
       --output encoded/            # learn BPE merges, encode the corpus
 
-Collections accept the full quantizer matrix at create time:
+Collections accept every quantizer in the registry at create time
+(muopdb_spark/index/quantizer.py; `create --help` lists the names):
   python tools/query.py create --root /data --name memories \
-      --num-features 4 --quantizer sq      # none|pq|pq_user|rabitq|sq|opq|opq_user
+      --num-features 4 --quantizer sq
 """
 
 from __future__ import annotations
@@ -987,6 +988,8 @@ def _pipeline(spark, args, ap) -> dict:
 
 
 def main(argv=None) -> int:
+    from muopdb_spark.index.quantizer import NAMES as QUANTIZER_NAMES
+
     ap = argparse.ArgumentParser(prog="muopdb-spark-query")
     ap.add_argument("command", choices=sorted(COLLECTION_CMDS | PIPELINE_CMDS))
     ap.add_argument("--root")
@@ -1120,9 +1123,8 @@ def main(argv=None) -> int:
     ap.add_argument("--batch-id", type=int, default=0,
                     help="admit: batch id recorded in the audit trail")
     ap.add_argument("--num-features", type=int, default=4)
-    ap.add_argument("--quantizer", default="none",
-                    choices=["none", "pq", "pq_user", "rabitq", "sq", "opq",
-                             "opq_user"])
+    ap.add_argument("--quantizer", default="none", choices=QUANTIZER_NAMES,
+                    help="create: collection quantizer")
     ap.add_argument("--metric", default="l2",
                     choices=["l2", "l2_squared", "dot", "cosine"])
     ap.add_argument("--ids", type=int, nargs="*", default=None)
