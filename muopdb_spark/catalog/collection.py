@@ -24,7 +24,8 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
       (write temp + rename — the version-file swap of core.rs:1014-1162)
     - searches read ONLY flushed segments (W5 read-your-writes boundary:
       core.rs:812-813 "not immediately searchable") and anti-join
-      tombstones (V20)
+      tombstones when any exist (V20); each segment's tables are opened
+      once per Collection handle
     - merge_segments / vacuum (S10, §4.2 compaction; optimizers/merge.rs:38,
       vacuum.rs:38) rewrite segments and swap the TOC; old versions remain
       readable (MVCC snapshots, core.rs:978-1011) until garbage-collected
@@ -218,6 +219,13 @@ class Collection:
         # directory (Collection.create then Collection.open), which
         # per-instance locks would not serialize.
         self._append_lock = _append_lock_for(self.root)
+        # (segment, kind) -> opened table, kind in docs | ivf | terms.
+        # Segment directories never change once the TOC lists them
+        # (flush, vacuum and merge always write a new uuid-named
+        # segment), so each is opened once per handle, like the
+        # reference's reopen-as-ImmutableSegment at flush (core.rs:
+        # 928-950): later requests reuse its file listing and schema.
+        self._opened: dict[tuple[str, str], object] = {}
 
     # ------------------------------------------------------------ DDL
 
@@ -436,34 +444,40 @@ class Collection:
         elif os.path.exists(os.path.join(tmp, "_SUCCESS")):
             os.replace(tmp, d)
 
-    def tombstones(self) -> DataFrame:
+    def _has_tombstones(self) -> bool:
+        """Whether any tombstone file exists (after crash recovery).
+        Checked at plan-build time, the moment tombstones() lists the
+        directory, so a read plans no mask when there is nothing to
+        mask."""
         self._recover_tombstones()
         d = self._tombstone_dir()
-        if os.path.isdir(d) and any(p.endswith(".parquet") for p in os.listdir(d)):
-            return self.spark.read.parquet(d)
+        return os.path.isdir(d) and any(p.endswith(".parquet") for p in os.listdir(d))
+
+    def tombstones(self) -> DataFrame:
+        if self._has_tombstones():
+            return self.spark.read.parquet(self._tombstone_dir())
         return self.spark.createDataFrame([], "user_id long, doc_id long, seq_no long")
 
-    def _tomb_latest(self, tomb: DataFrame | None = None) -> DataFrame:
+    def _tomb_latest(self, tomb: DataFrame) -> DataFrame:
         """Newest tombstone per (user, doc) — the only one that matters
-        for masking, since tombstone seq_nos are totally ordered.
-        `tomb` pins the computation to a caller-held snapshot (see
-        _apply_tombstones)."""
-        return (
-            (tomb if tomb is not None else self.tombstones())
-            .groupBy("user_id", "doc_id")
-            .agg(F.max("seq_no").alias("tomb_seq"))
-        )
+        for masking, since tombstone seq_nos are totally ordered — with
+        the keys renamed apart from the masked table's."""
+        return tomb.groupBy("user_id", "doc_id").agg(
+            F.max("seq_no").alias("tomb_seq")
+        ).select(F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq")
 
     def _apply_tombstones(
-        self, df: DataFrame, tomb: DataFrame | None = None
+        self, df: DataFrame, tomb: DataFrame | None = None, id_col: str = "doc_id"
     ) -> DataFrame:
-        """V20 masking, seq_no-aware: a tombstone hides only doc rows
-        written AT OR BEFORE it (docs.seq_no <= tomb.seq_no), so a doc
-        re-inserted after a remove is searchable again — matching the
-        reference, which invalidates only ids present at remove time
-        (core.rs remove_impl guards on sequence_number). Planned as an
-        anti hash join on the (user_id, doc_id) equi keys with the
-        seq_no comparison as the join residual — no nested loop.
+        """V20 masking, seq_no-aware: a tombstone hides only rows of `df`
+        (keyed by user_id, `id_col`) written AT OR BEFORE it
+        (seq_no <= tomb.seq_no), so a doc re-inserted after a remove is
+        searchable again — matching the reference, which invalidates
+        only ids present at remove time (core.rs remove_impl guards on
+        sequence_number). Planned as an anti hash join on the equi keys
+        with the seq_no comparison as the join residual — no nested
+        loop. Without tombstone files `df` comes back unchanged: an
+        empty mask would still cost a shuffle and a join.
 
         `tomb` lets rewrite paths (merge/vacuum) pass ONE tombstone
         snapshot shared with their applied-watermark computation: a
@@ -472,11 +486,13 @@ class Collection:
         newer than the masking read) would mark a tombstone applied
         without applying it, and the subsequent prune would delete an
         unapplied deletion (r16 review finding on merge_segments)."""
-        t = self._tomb_latest(tomb).select(
-            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq"
-        )
+        if tomb is None:
+            if not self._has_tombstones():
+                return df
+            tomb = self.tombstones()
+        t = self._tomb_latest(tomb)
         cond = (
-            (df["user_id"] == t["_tu"]) & (df["doc_id"] == t["_td"])
+            (df["user_id"] == t["_tu"]) & (df[id_col] == t["_td"])
             & (df["seq_no"] <= t["tomb_seq"])
         )
         return df.join(t, cond, "left_anti")
@@ -527,8 +543,18 @@ class Collection:
 
     # ------------------------------------------------------------ reads
 
+    def _open_once(self, seg: str, kind: str, load):
+        """The segment's `kind` table, opened by `load()` on first use
+        and kept by this handle (see _opened in __init__). Two threads
+        racing on a first use both load, and both get the one kept."""
+        t = self._opened.get((seg, kind))
+        if t is None:
+            t = self._opened.setdefault((seg, kind), load())
+        return t
+
     def segment_docs(self, seg: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._segment_dir(seg), "docs"))
+        return self._open_once(seg, "docs", lambda: self.spark.read.parquet(
+            os.path.join(self._segment_dir(seg), "docs")))
 
     def docs(self, version: int | None = None, with_tombstones: bool = False) -> DataFrame:
         """All flushed docs at a TOC version (MVCC snapshot read), with
@@ -540,8 +566,7 @@ class Collection:
             return self.spark.createDataFrame([], empty)
         df = self.segment_docs(segs[0])
         for s in segs[1:]:
-            df = df.unionByName(self.spark.read.parquet(
-                os.path.join(self._segment_dir(s), "docs")), allowMissingColumns=True)
+            df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
         if not with_tombstones:
             df = self._apply_tombstones(df)
         return df
@@ -588,7 +613,8 @@ class Collection:
         admin GetSegments parity — the reference returns segment sizes,
         admin.proto / admin_server.rs). ONE Spark job for all segments:
         segments union with a segment tag column, left join the latest
-        tombstones, one groupBy — not a pair of count jobs per segment."""
+        tombstones (skipped when there are none: deleted is then 0), one
+        groupBy — not a pair of count jobs per segment."""
         toc = self.toc()
         out: dict = {}
         if toc["segments"]:
@@ -601,20 +627,17 @@ class Collection:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
-            t = self._tomb_latest().select(
-                F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq"
-            )
-            joined = df.join(
-                t, (df["user_id"] == t["_tu"]) & (df["doc_id"] == t["_td"]), "left"
-            )
-            agg = (
-                joined.groupBy("_seg")
-                .agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(
-                        F.when(F.col("seq_no") <= F.col("tomb_seq"), 1).otherwise(0)
-                    ).alias("deleted"),
+            deleted = F.lit(0)
+            if self._has_tombstones():
+                t = self._tomb_latest(self.tombstones())
+                df = df.join(
+                    t, (df["user_id"] == t["_tu"]) & (df["doc_id"] == t["_td"]), "left"
                 )
+                deleted = F.sum(
+                    F.when(F.col("seq_no") <= F.col("tomb_seq"), 1).otherwise(0))
+            agg = (
+                df.groupBy("_seg")
+                .agg(F.count(F.lit(1)).alias("total"), deleted.alias("deleted"))
                 .collect()
             )
             for r in agg:
@@ -696,7 +719,15 @@ class Collection:
         unrewritten segments only through their own TOCs; pruning keys
         off the CURRENT version, matching the reference (snapshots there
         hold invalidation bitmaps, not the tombstone log). Returns the
-        number of tombstone rows dropped."""
+        number of tombstone rows dropped.
+
+        A prune that drops every tombstone deletes the directory, so
+        reads plan no mask again (_has_tombstones). That is crash-safe
+        without a rewrite: every dropped tombstone is at or below every
+        current segment's watermark, so a half-deleted directory only
+        masks rows that are already gone."""
+        import shutil
+
         toc = self.toc()
         applied = toc.get("tomb_applied", {})
         if not toc["segments"]:
@@ -705,9 +736,16 @@ class Collection:
         if floor < 0:
             return 0
         tomb = self.tombstones()
-        doomed = tomb.filter(F.col("seq_no") <= floor).count()
+        n = tomb.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.sum((F.col("seq_no") <= floor).cast("long")).alias("doomed"),
+        ).first()
+        doomed = n["doomed"] or 0
         if not doomed:
             return 0
+        if doomed == n["total"]:
+            shutil.rmtree(self._tombstone_dir())
+            return doomed
         survivors = tomb.filter(F.col("seq_no") > floor)
         tmp = self._tombstone_dir() + ".rewrite"
         # write-tmp -> rmtree -> rename; the rmtree->rename window is
@@ -716,8 +754,6 @@ class Collection:
         # deletions NOT yet applied to every segment — can never be
         # silently lost; Spark's _SUCCESS is the completeness marker)
         survivors.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         shutil.rmtree(self._tombstone_dir())
         os.replace(tmp, self._tombstone_dir())
         return doomed
@@ -761,6 +797,9 @@ class Collection:
                 if seg not in referenced:
                     shutil.rmtree(os.path.join(seg_root, seg))
                     removed_segments.append(seg)
+        for key in list(self._opened):
+            if key[0] in removed_segments:
+                self._opened.pop(key, None)
         return {"versions": removed_versions, "segments": sorted(removed_segments)}
 
     # ------------------------------------------------- durable indexes
@@ -831,6 +870,10 @@ class Collection:
         built = []
         for seg in toc["segments"]:
             have = set(indexes.get(seg, []))
+            # an index the TOC does not list yet may be rewritten below:
+            # never keep a handle opened on an earlier write of it
+            for kind in {"ivf", "terms"} - have:
+                self._opened.pop((seg, kind), None)
             if "ivf" not in have:
                 docs = self.segment_docs(seg)
                 idx = build_multi_ivf(
@@ -865,10 +908,12 @@ class Collection:
         return {s: indexes.get(s, []) for s in toc["segments"]}
 
     def load_segment_index(self, seg: str):
-        """Reopen one segment's persisted IVF index (reader.rs analog)."""
+        """One segment's persisted IVF index (reader.rs analog), opened
+        once per Collection handle and reused by later calls."""
         from muopdb_spark.index.multi_ivf import multi_ivf_load
 
-        return multi_ivf_load(self.spark, self._seg_index_dir(seg, "ivf"))
+        return self._open_once(seg, "ivf", lambda: multi_ivf_load(
+            self.spark, self._seg_index_dir(seg, "ivf")))
 
     def _indexed_segments(self, kind: str, version: int | None = None) -> list[str]:
         toc = self.toc(version)
@@ -898,10 +943,13 @@ class Collection:
         the per-user / per-segment loops of snapshot.rs:39-109 collapse
         into ONE plan — union the TOC's segment index tables tagged by
         segment, window-probe every (segment, user) group at once,
-        semi-join the probed postings, tombstone-mask seq_no-aware,
-        score (ADC + exact re-rank when quantized), merge top-k.
-        No driver loop over users or segments; at 1,000 users x 50
-        segments this is still one job."""
+        semi-join the probed postings, tombstone-mask seq_no-aware
+        (only when tombstone files exist), score (ADC + exact re-rank
+        when quantized), merge top-k. No driver loop over users or
+        segments; at 1,000 users x 50 segments this is still one job.
+        Each segment's index tables are opened once per Collection
+        handle (load_segment_index), so a warm request lists no files
+        and infers no schema."""
         from muopdb_spark.functions.distance import score_expr
         from pyspark.sql.window import Window
 
@@ -939,15 +987,7 @@ class Collection:
         posts = tagged(idxs, lambda ix: ix.postings).filter(F.col("user_id").isin(users))
         scan = posts.join(F.broadcast(pairs), on=["_seg", "user_id", "centroid_id"],
                           how="left_semi")
-        # V20, seq_no-aware (tombstones mask only rows at-or-below them)
-        t = self._tomb_latest().select(
-            F.col("user_id").alias("_tu"), F.col("doc_id").alias("_td"), "tomb_seq")
-        scan = scan.join(
-            t,
-            (scan["user_id"] == t["_tu"]) & (scan["id"] == t["_td"])
-            & (scan["seq_no"] <= t["tomb_seq"]),
-            "left_anti",
-        )
+        scan = self._apply_tombstones(scan, id_col="id")  # V20
         if pre_filter_ids is not None:
             scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
                              how="left_semi")
@@ -1006,7 +1046,9 @@ class Collection:
         segs = self._indexed_segments("terms", version)
         users = [int(u) for u in user_ids]
         parts = [
-            self.spark.read.parquet(self._seg_index_dir(s, "terms")) for s in segs
+            self._open_once(s, "terms", lambda s=s: self.spark.read.parquet(
+                self._seg_index_dir(s, "terms")))
+            for s in segs
         ]
         index = parts[0]
         for p in parts[1:]:
@@ -1031,11 +1073,14 @@ class Collection:
             hits = matched.select("user_id", "doc_id").distinct()
         # visibility = the docs table's (seq_no-aware tombstone-masked)
         # view; index postings carry no seq_no, so the mask is a semi
-        # join against the masked doc ids (2-column pruned scan)
-        hits = hits.join(
-            self.docs(version=version).select("user_id", "doc_id").distinct(),
-            on=["user_id", "doc_id"], how="left_semi",
-        )
+        # join against the masked doc ids (2-column pruned scan). The
+        # index is built from segment_docs, so without tombstones the
+        # join could drop nothing and is not planned.
+        if self._has_tombstones():
+            hits = hits.join(
+                self.docs(version=version).select("user_id", "doc_id").distinct(),
+                on=["user_id", "doc_id"], how="left_semi",
+            )
         return hits.orderBy("doc_id").limit(limit)
 
     def build_quantizer(self, num_subvectors: int = 4, num_centers: int = 16):

@@ -3,6 +3,8 @@ vacuum/merge → MVCC snapshot reads. Models the reference's collection
 tests (core.rs:1566+, reader.rs:389-433 two-segment TOC versioning,
 optimizers/merge.rs + vacuum.rs scenarios)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,8 +159,17 @@ def test_tombstones_pruned_after_full_rewrite(col, spark):
     col.remove([0], [1])
     col.merge_segments()
     assert col.tombstones().count() == 0
+    # a full prune deletes the directory, so reads plan no mask again
+    assert not os.path.exists(col._tombstone_dir())
     # masking still correct: doc 1 was dropped by the rewrite itself
     assert sorted(r["doc_id"] for r in col.docs().collect()) == [2, 3]
+    col.build_index()
+    got = col.ann_search([0, 1], [1.0, 0.0, 0.0, 0.0], 5,
+                         num_probes=col.config.num_centroids,
+                         centroid_distance_ratio=None).collect()
+    assert sorted(r["id"] for r in got) == [2, 3]
+    got = col.term_search([0, 1], {"contains": {"path": "category", "value": "news"}}, 10)
+    assert [r["doc_id"] for r in got.collect()] == [3]
 
 
 def test_merge_segments(col, spark):
