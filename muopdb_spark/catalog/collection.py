@@ -36,15 +36,19 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import tempfile
 import uuid
 from dataclasses import asdict, dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from muopdb_spark.functions.distance import score_expr, score_np
 from muopdb_spark.index.quantizer import QUANTIZERS, lookup
 
 
@@ -141,6 +145,10 @@ def _append_lock_for(root: str) -> "threading.Lock":
         return _APPEND_LOCKS.setdefault(key, threading.Lock())
 
 
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def _atomic_write(path: str, content: str) -> None:
     d = os.path.dirname(path)
     os.makedirs(d, exist_ok=True)
@@ -219,7 +227,9 @@ class Collection:
         # directory (Collection.create then Collection.open), which
         # per-instance locks would not serialize.
         self._append_lock = _append_lock_for(self.root)
-        # (segment, kind) -> opened table, kind in docs | ivf | terms.
+        # (segment, kind) -> opened table, kind in docs | ivf | terms,
+        # or the centroids kind: user_id -> the ivf index's centroid
+        # arrays, filled per user on first request (_centroid_arrays).
         # Segment directories never change once the TOC lists them
         # (flush, vacuum and merge always write a new uuid-named
         # segment), so each is opened once per handle, like the
@@ -618,15 +628,12 @@ class Collection:
         toc = self.toc()
         out: dict = {}
         if toc["segments"]:
-            parts = [
+            df = _union([
                 self.segment_docs(s)
                 .select("user_id", "doc_id", "seq_no")
                 .withColumn("_seg", F.lit(s))
                 for s in toc["segments"]
-            ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
+            ])
             deleted = F.lit(0)
             if self._has_tombstones():
                 t = self._tomb_latest(self.tombstones())
@@ -872,7 +879,10 @@ class Collection:
             have = set(indexes.get(seg, []))
             # an index the TOC does not list yet may be rewritten below:
             # never keep a handle opened on an earlier write of it
-            for kind in {"ivf", "terms"} - have:
+            stale = {"ivf", "terms"} - have
+            if "ivf" in stale:
+                stale.add("centroids")  # read from the ivf index
+            for kind in stale:
                 self._opened.pop((seg, kind), None)
             if "ivf" not in have:
                 docs = self.segment_docs(seg)
@@ -925,6 +935,56 @@ class Collection:
             )
         return toc["segments"]
 
+    def _centroid_arrays(self, segs: list[str], users: list[int]) -> dict[str, dict]:
+        """Per segment, user_id -> (centroid ids, float64 centroid
+        matrix), kept by this handle under (seg, "centroids") like the
+        reference's per-user index map (multi_spann/index.rs:100). The
+        (segment, user) pairs not seen yet are filled by ONE collect
+        over those segments' centroid tables; a user without centroids
+        in a segment is kept as empty, so it is not collected again."""
+        arrays = {s: self._open_once(s, "centroids", dict) for s in segs}
+        missing = {s: [u for u in users if u not in arrays[s]] for s in segs}
+        parts = [
+            self.load_segment_index(s).centroids.filter(F.col("user_id").isin(us))
+            .select(F.lit(s).alias("_seg"), "user_id", "centroid_id", "centroid")
+            for s, us in missing.items() if us
+        ]
+        if not parts:
+            return arrays
+        found: dict[tuple[str, int], list] = {}
+        for r in _union(parts).collect():
+            found.setdefault((r["_seg"], r["user_id"]), []).append(
+                (r["centroid_id"], r["centroid"]))
+        for s, us in missing.items():
+            for u in us:
+                rows = found.get((s, u), [])
+                arrays[s].setdefault(u, (
+                    np.array([c for c, _ in rows], dtype=np.int64),
+                    np.array([v for _, v in rows], dtype=np.float64).reshape(
+                        len(rows), self.config.num_features),
+                ))
+        return arrays
+
+    def _probe(self, segs: list[str], users: list[int], query_vector,
+               num_probes: int, ratio: float | None) -> dict[str, dict[int, list[int]]]:
+        """Phase 1 on the driver: segment -> user_id -> probed centroid
+        ids. Per (segment, user) the same rule as multi_ivf's windowed
+        _probed_pairs: the num_probes nearest by (distance, centroid_id),
+        then the V19 ratio prune d - d_min <= abs(d_min) * ratio."""
+        arrays = self._centroid_arrays(segs, users)
+        pairs: dict[str, dict[int, list[int]]] = {}
+        for s in segs:
+            for u in users:
+                ids, matrix = arrays[s][u]
+                d = score_np(self.config.metric, matrix, query_vector)
+                order = np.lexsort((ids, d))[:max(num_probes, 0)]
+                ids, d = ids[order], d[order]
+                if ratio is not None and len(d):
+                    ids = ids[d - d[0] <= abs(d[0]) * ratio]
+                if len(ids):
+                    pairs.setdefault(s, {})[u] = ids.tolist()
+        return pairs
+
     def ann_search(
         self,
         user_ids,
@@ -939,59 +999,45 @@ class Collection:
         version: int | None = None,
         score_decimals: int | None = None,
     ) -> DataFrame:
-        """§3.1 ANN search over the DURABLE per-segment per-user indexes:
-        the per-user / per-segment loops of snapshot.rs:39-109 collapse
-        into ONE plan — union the TOC's segment index tables tagged by
-        segment, window-probe every (segment, user) group at once,
-        semi-join the probed postings, tombstone-mask seq_no-aware
-        (only when tombstone files exist), score (ADC + exact re-rank
-        when quantized), merge top-k. No driver loop over users or
-        segments; at 1,000 users x 50 segments this is still one job.
-        Each segment's index tables are opened once per Collection
-        handle (load_segment_index), so a warm request lists no files
-        and infers no schema."""
-        from muopdb_spark.functions.distance import score_expr
+        """§3.1 ANN search over the DURABLE per-segment per-user indexes,
+        in the reference's two phases (spann/index.rs:211-266). Phase 1
+        probes every (segment, user) centroid set on the driver
+        (_probe), from arrays this handle keeps once read: a first
+        request for a user runs one small collect over the segments
+        that hold it, later ones start no job. Phase 2 is one plan: each
+        segment's postings filtered to its probed (user_id, centroid_id)
+        pairs as literal partition filters, unioned, tombstone-masked
+        seq_no-aware (only when tombstone files exist), scored (ADC +
+        exact re-rank when quantized), deduped per (user, id), top-k.
+        Each segment's index tables are opened once per handle
+        (load_segment_index), so a warm request lists no files and
+        infers no schema."""
         from pyspark.sql.window import Window
 
         q = lookup(self.config.quantizer, multi_user=True, dedup=True)
         if num_probes is None:
             num_probes = k
         segs = self._indexed_segments("ivf", version)
-        if not segs:
-            return self.spark.createDataFrame([], "user_id long, id long, score double")
-        idxs = {s: self.load_segment_index(s) for s in segs}
-        metric = self.config.metric
-
-        def tagged(dfs: dict[str, DataFrame], pick) -> DataFrame:
-            parts = [pick(ix).withColumn("_seg", F.lit(s)) for s, ix in dfs.items()]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
         users = [int(u) for u in user_ids]
-        qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
-        cents = tagged(idxs, lambda ix: ix.centroids).filter(F.col("user_id").isin(users))
-        scored_c = cents.withColumn("d", score_expr(metric, F.col("centroid"), qv))
-        wp = Window.partitionBy("_seg", "user_id").orderBy(
-            F.col("d").asc(), F.col("centroid_id").asc())
-        probed = scored_c.withColumn("rnk", F.row_number().over(wp)).filter(
-            F.col("rnk") <= num_probes)
-        if centroid_distance_ratio is not None:
-            dmin = F.min("d").over(Window.partitionBy("_seg", "user_id"))
-            probed = probed.withColumn("d_min", dmin).filter(
-                F.col("d") - F.col("d_min")
-                <= F.abs(F.col("d_min")) * centroid_distance_ratio)
-        pairs = probed.select("_seg", "user_id", "centroid_id")
-
-        posts = tagged(idxs, lambda ix: ix.postings).filter(F.col("user_id").isin(users))
-        scan = posts.join(F.broadcast(pairs), on=["_seg", "user_id", "centroid_id"],
-                          how="left_semi")
+        pairs = self._probe(segs, users, query_vector, num_probes, centroid_distance_ratio)
+        if not pairs:
+            return self.spark.createDataFrame([], "user_id long, id long, score double")
+        # postings are partitioned by (user_id, centroid_id): literal
+        # pairs prune partitions statically, with no join to plan
+        scan = _union([
+            self.load_segment_index(s).postings.filter(functools.reduce(operator.or_, [
+                (F.col("user_id") == u) & F.col("centroid_id").isin(cids)
+                for u, cids in probed.items()
+            ]))
+            for s, probed in pairs.items()
+        ])
         scan = self._apply_tombstones(scan, id_col="id")  # V20
         if pre_filter_ids is not None:
             scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
                              how="left_semi")
 
+        metric = self.config.metric
+        qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
         exact = score_expr(metric, F.col("vector"), qv)
         if q is not None:
             # the authoritative codebook lives at the collection root (a
@@ -1044,22 +1090,16 @@ class Collection:
         postings, intersect/union, dedup across segments, sort + limit
         (snapshot.rs:141-146)."""
         segs = self._indexed_segments("terms", version)
+        if not segs or not terms:
+            return self.spark.createDataFrame([], "user_id long, doc_id long")
         users = [int(u) for u in user_ids]
-        parts = [
+        index = _union([
             self._open_once(s, "terms", lambda s=s: self.spark.read.parquet(
                 self._seg_index_dir(s, "terms")))
             for s in segs
-        ]
-        index = parts[0]
-        for p in parts[1:]:
-            index = index.unionByName(p)
-        index = index.filter(F.col("user_id").isin(users))
-        cond = None
-        for f_, t_ in terms:
-            c = (F.col("field") == f_) & (F.col("term") == t_)
-            cond = c if cond is None else (cond | c)
-        if cond is None:
-            return self.spark.createDataFrame([], "doc_id long")
+        ]).filter(F.col("user_id").isin(users))
+        cond = functools.reduce(operator.or_, [
+            (F.col("field") == f_) & (F.col("term") == t_) for f_, t_ in terms])
         matched = index.filter(cond).select(
             "user_id", "field", "term", F.explode("postings").alias("doc_id"))
         if mode == "and":

@@ -8,11 +8,13 @@ sqrt(sum((a-b)^2)) (rs/utils/src/distance/l2.rs:70-99).
 All expressions are pure Column math (zip_with + aggregate), so they run
 JVM-side inside whole-stage codegen — no Python in the hot path. Math is
 done in DOUBLE regardless of the input element type so results are
-stable across array<float> storage.
+stable across array<float> storage. score_np is the numpy twin for
+small matrices scored on the driver, equal to score_expr bit for bit.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -66,7 +68,6 @@ def cosine_similarity_batch(a: Column | str, b: Column | str) -> Column:
     The Column-expression twin (cosine_similarity) is exact and oracle-
     matched but evaluates higher-order functions interpreted per row —
     use this one when the pair count, not the row width, dominates."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
@@ -101,3 +102,30 @@ def score_expr(metric: str, a: Column | str, b: Column | str) -> Column:
         return _DISTANCES[metric](a, b)
     except KeyError:
         raise ValueError(f"unknown distance metric {metric!r}; choose from {sorted(_DISTANCES)}")
+
+
+def _fold(t: np.ndarray) -> np.ndarray:
+    # _fsum per row: a sequential left fold from 0.0 (cumsum never
+    # regroups, unlike np.sum's pairwise sum)
+    return np.cumsum(np.hstack([np.zeros((len(t), 1)), t]), axis=1)[:, -1]
+
+
+def score_np(metric: str, matrix, q) -> np.ndarray:
+    """score_expr(metric, row, q) for every row of `matrix`, on the
+    driver and bit for bit: the same double operations in the same
+    order. A zero norm under cosine raises, as Spark's ANSI division
+    does (DIVIDE_BY_ZERO), rather than giving NaN."""
+    if metric not in _DISTANCES:
+        raise ValueError(f"unknown distance metric {metric!r}; choose from {sorted(_DISTANCES)}")
+    a = np.asarray(matrix, dtype=np.float64)
+    b = np.asarray(q, dtype=np.float64)[None, :]
+    if metric in ("l2", "l2_squared"):
+        d = _fold((a - b) * (a - b))
+        return np.sqrt(d) if metric == "l2" else d
+    dot = _fold(a * b)
+    if metric == "dot":
+        return -dot
+    den = np.sqrt(_fold(a * a)) * np.sqrt(_fold(b * b))
+    if (den == 0).any():
+        raise ValueError("cosine distance of a zero-norm vector (division by zero)")
+    return 1.0 - dot / den

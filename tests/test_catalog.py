@@ -269,6 +269,22 @@ def test_term_search_indexed_durable(col, spark):
     col.remove([0], [1])
     got = col.term_search_indexed([0, 1], [("title", "run")], 10)
     assert [r["doc_id"] for r in got.collect()] == [5]
+    assert got.columns == ["user_id", "doc_id"]
+
+
+def test_term_search_indexed_empty_collection(col):
+    got = col.term_search_indexed([0], [("title", "run")], 10)
+    assert got.schema.simpleString() == "struct<user_id:bigint,doc_id:bigint>"
+    assert got.collect() == []
+
+
+def test_term_search_indexed_no_terms(col, spark):
+    col.insert(_docs_df(spark, R1))
+    col.flush()
+    col.build_index()
+    got = col.term_search_indexed([0, 1], [], 10)
+    assert got.schema.simpleString() == "struct<user_id:bigint,doc_id:bigint>"
+    assert got.collect() == []
 @pytest.mark.slow
 
 

@@ -58,3 +58,38 @@ def test_nan_sorts_last(spark):
     )
     got = [r["id"] for r in df.orderBy(F.col("score").asc_nulls_last(), "id").collect()]
     assert got == [2, 3, 1]
+
+
+@pytest.mark.parametrize("metric", ["l2", "l2_squared", "dot", "cosine"])
+def test_score_np_equals_score_expr_bit_for_bit(spark, metric):
+    import numpy as np
+
+    from muopdb_spark.functions.distance import score_np
+
+    rng = np.random.default_rng(7)
+    stored = (rng.standard_normal((200, 16)) * 3).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(stored)], "id long, a array<float>")
+    for q in rng.standard_normal((3, 16)) * 2:
+        qv = F.lit([float(x) for x in q]).cast("array<double>")
+        rows = df.select("id", score_expr(metric, "a", qv).alias("d")).orderBy("id").collect()
+        spark_d = np.array([r["d"] for r in rows])
+        np_d = score_np(metric, stored.astype(np.float64), q)
+        assert spark_d.dtype == np_d.dtype == np.float64
+        assert (spark_d == np_d).all(), np.flatnonzero(spark_d != np_d)
+
+
+def test_score_np_refuses_zero_norm_cosine(spark):
+    import numpy as np
+
+    from muopdb_spark.functions.distance import score_np
+
+    df = spark.createDataFrame([([0.0, 0.0],)], "a array<float>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.select(score_expr("cosine", "a", F.lit([1.0, 2.0]))).collect()
+    with pytest.raises(ValueError, match="zero-norm"):
+        score_np("cosine", np.zeros((1, 2)), [1.0, 2.0])
+    with pytest.raises(ValueError, match="zero-norm"):
+        score_np("cosine", np.ones((3, 2)), [0.0, 0.0])
+    with pytest.raises(ValueError, match="unknown distance metric"):
+        score_np("hamming", np.ones((1, 2)), [1.0, 1.0])
