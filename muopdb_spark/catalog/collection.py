@@ -44,11 +44,13 @@ import tempfile
 import uuid
 from dataclasses import asdict, dataclass, field
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from muopdb_spark.functions.distance import score_expr, score_np
+from muopdb_spark.index.multi_ivf import (
+    build_multi_ivf, centroid_arrays, multi_ivf_load, multi_ivf_save, probe,
+    probed_filter, rank,
+)
 from muopdb_spark.index.quantizer import QUANTIZERS, lookup
 
 
@@ -863,7 +865,6 @@ class Collection:
         reopens with Collection.open() + ann_search without rebuilding.
         Incremental by construction: a later flush indexes ONLY the new
         segment."""
-        from muopdb_spark.index.multi_ivf import build_multi_ivf, multi_ivf_save
         from muopdb_spark.index.terms import build_term_index
 
         toc = self.toc()
@@ -920,8 +921,6 @@ class Collection:
     def load_segment_index(self, seg: str):
         """One segment's persisted IVF index (reader.rs analog), opened
         once per Collection handle and reused by later calls."""
-        from muopdb_spark.index.multi_ivf import multi_ivf_load
-
         return self._open_once(seg, "ivf", lambda: multi_ivf_load(
             self.spark, self._seg_index_dir(seg, "ivf")))
 
@@ -951,39 +950,13 @@ class Collection:
         ]
         if not parts:
             return arrays
-        found: dict[tuple[str, int], list] = {}
-        for r in _union(parts).collect():
-            found.setdefault((r["_seg"], r["user_id"]), []).append(
-                (r["centroid_id"], r["centroid"]))
+        rows = _union(parts).collect()
         for s, us in missing.items():
-            for u in us:
-                rows = found.get((s, u), [])
-                arrays[s].setdefault(u, (
-                    np.array([c for c, _ in rows], dtype=np.int64),
-                    np.array([v for _, v in rows], dtype=np.float64).reshape(
-                        len(rows), self.config.num_features),
-                ))
+            built = centroid_arrays([r for r in rows if r["_seg"] == s], us,
+                                    self.config.num_features)
+            for u, a in built.items():
+                arrays[s].setdefault(u, a)
         return arrays
-
-    def _probe(self, segs: list[str], users: list[int], query_vector,
-               num_probes: int, ratio: float | None) -> dict[str, dict[int, list[int]]]:
-        """Phase 1 on the driver: segment -> user_id -> probed centroid
-        ids. Per (segment, user) the same rule as multi_ivf's windowed
-        _probed_pairs: the num_probes nearest by (distance, centroid_id),
-        then the V19 ratio prune d - d_min <= abs(d_min) * ratio."""
-        arrays = self._centroid_arrays(segs, users)
-        pairs: dict[str, dict[int, list[int]]] = {}
-        for s in segs:
-            for u in users:
-                ids, matrix = arrays[s][u]
-                d = score_np(self.config.metric, matrix, query_vector)
-                order = np.lexsort((ids, d))[:max(num_probes, 0)]
-                ids, d = ids[order], d[order]
-                if ratio is not None and len(d):
-                    ids = ids[d - d[0] <= abs(d[0]) * ratio]
-                if len(ids):
-                    pairs.setdefault(s, {})[u] = ids.tolist()
-        return pairs
 
     def ann_search(
         self,
@@ -1000,87 +973,44 @@ class Collection:
         score_decimals: int | None = None,
     ) -> DataFrame:
         """§3.1 ANN search over the DURABLE per-segment per-user indexes,
-        in the reference's two phases (spann/index.rs:211-266). Phase 1
-        probes every (segment, user) centroid set on the driver
-        (_probe), from arrays this handle keeps once read: a first
-        request for a user runs one small collect over the segments
-        that hold it, later ones start no job. Phase 2 is one plan: each
-        segment's postings filtered to its probed (user_id, centroid_id)
-        pairs as literal partition filters, unioned, tombstone-masked
-        seq_no-aware (only when tombstone files exist), scored (ADC +
-        exact re-rank when quantized), deduped per (user, id), top-k.
-        Each segment's index tables are opened once per handle
-        (load_segment_index), so a warm request lists no files and
-        infers no schema."""
-        from pyspark.sql.window import Window
-
+        through multi_ivf's single-request core (spann/index.rs:211-266).
+        Phase 1 runs multi_ivf.probe per segment on the driver, from
+        arrays this handle keeps once read: a first request for a user
+        runs one small collect over the segments that hold it, later
+        ones start no job. Phase 2 is one plan: each segment's postings
+        filtered to its probed pairs as literal partition filters,
+        unioned, tombstone-masked seq_no-aware (only when tombstone
+        files exist), then multi_ivf.rank with the collection's root
+        codebook. Each segment's index tables are opened once per
+        handle (load_segment_index), so a warm request lists no files
+        and infers no schema."""
         q = lookup(self.config.quantizer, multi_user=True, dedup=True)
         if num_probes is None:
             num_probes = k
         segs = self._indexed_segments("ivf", version)
         users = [int(u) for u in user_ids]
-        pairs = self._probe(segs, users, query_vector, num_probes, centroid_distance_ratio)
+        arrays = self._centroid_arrays(segs, users)
+        pairs = {}
+        for s in segs:
+            probed = probe({u: arrays[s][u] for u in users}, self.config.metric,
+                           query_vector, num_probes, centroid_distance_ratio)
+            if probed:
+                pairs[s] = probed
         if not pairs:
             return self.spark.createDataFrame([], "user_id long, id long, score double")
-        # postings are partitioned by (user_id, centroid_id): literal
-        # pairs prune partitions statically, with no join to plan
-        scan = _union([
-            self.load_segment_index(s).postings.filter(functools.reduce(operator.or_, [
-                (F.col("user_id") == u) & F.col("centroid_id").isin(cids)
-                for u, cids in probed.items()
-            ]))
-            for s, probed in pairs.items()
-        ])
+        scan = _union([self.load_segment_index(s).postings.filter(probed_filter(probed))
+                       for s, probed in pairs.items()])
         scan = self._apply_tombstones(scan, id_col="id")  # V20
         if pre_filter_ids is not None:
             scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
                              how="left_semi")
-
-        metric = self.config.metric
-        qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
-        exact = score_expr(metric, F.col("vector"), qv)
-        if q is not None:
-            # the authoritative codebook lives at the collection root (a
-            # per-segment copy of a per-user table may predate users
-            # added by later segments' extension); per-user entries
-            # collect or join only the REQUESTED users' books
-            codebook = q.read_artifact(self.spark, self.root)
-            scan, adc = q.score(codebook, query_vector, scan, users)
-            wu = Window.partitionBy("user_id").orderBy(
-                F.col("adc").asc_nulls_last(), F.col("id").asc())
-            cand = (
-                scan.select("user_id", "id", "vector", adc.alias("adc"))
-                .groupBy("user_id", "id").agg(
-                    F.min("adc").alias("adc"), F.first("vector").alias("vector"))
-                .withColumn("crnk", F.row_number().over(wu))
-                .filter(F.col("crnk") <= (rerank if rerank is not None else k))
-            )
-            score = exact if rerank is not None else F.col("adc")
-            if score_decimals is not None:
-                score = F.round(score, score_decimals)
-            deduped = cand.select("user_id", "id", score.alias("score"))
-        else:
-            score = exact
-            if score_decimals is not None:
-                score = F.round(score, score_decimals)
-            deduped = (
-                scan.select("user_id", "id", score.alias("score"))
-                .groupBy("user_id", "id").agg(F.min("score").alias("score"))
-            )
-        if per_user:
-            w = Window.partitionBy("user_id").orderBy(
-                F.col("score").asc_nulls_last(), F.col("id").asc())
-            return (
-                deduped.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .select("user_id", "id", "score")
-                .orderBy("user_id", F.col("score").asc_nulls_last(), "id")
-            )
-        return (
-            deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-            .limit(k)
-            .select("user_id", "id", "score")
-        )
+        # the authoritative codebook lives at the collection root (a
+        # per-segment copy of a per-user table may predate users added
+        # by later segments' extension); per-user entries collect or
+        # join only the REQUESTED users' books
+        codebook = q.read_artifact(self.spark, self.root) if q is not None else None
+        return rank(scan, q, codebook, self.config.metric, query_vector, users, k,
+                    rerank=rerank, per_user=per_user, score_decimals=score_decimals)
 
     def term_search_indexed(self, user_ids, terms, limit: int, *, mode: str = "and",
                             version: int | None = None) -> DataFrame:

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.index.multi_ivf import centroid_arrays, probe, probe_window
 from muopdb_spark.index.quantizer import lookup
 
 
@@ -291,30 +292,16 @@ def probe_centroids(
     num_probes: int,
     centroid_distance_ratio: float | None = 0.1,
 ) -> list[int]:
-    """Phase 1 (V4 + V19): exact top-num_probes centroids, then drop any
-    probed centroid farther than (1+ratio)*nearest. Runs on the (small)
-    centroid table; result is a plain id list used for partition pruning.
-    """
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
-    scored = (
-        index.centroids.withColumn("d", score_expr(index.metric, F.col("centroid"), q))
-        .orderBy(F.col("d").asc(), F.col("centroid_id").asc())
-        .limit(num_probes)
-        .collect()
-    )
-    if not scored:
-        return []
-    if centroid_distance_ratio is None:
-        return [r["centroid_id"] for r in scored]
-    d_min = scored[0]["d"]
-    # Ratio prune (V19). DELIBERATE deviation from the reference's
-    # `score - min <= min * ratio` (spann/index.rs:233-246): abs(d_min)
-    # instead of d_min, because under the negated-dot metric d_min is
-    # negative, which makes the reference's threshold negative and drops
-    # every centroid but the nearest. abs() preserves the intended
-    # "within ratio of the nearest" semantics for both metrics; the
-    # probe set is a recall-safe superset of the reference's.
-    return [r["centroid_id"] for r in scored if r["d"] - d_min <= abs(d_min) * centroid_distance_ratio]
+    """Phase 1 (V4 + V19): the (small) centroid table, collected and
+    probed on the driver by multi_ivf.probe as one user's — exact
+    top-num_probes centroids, then the ratio prune with its documented
+    abs(d_min) deviation. The result is a plain id list used for
+    partition pruning."""
+    rows = index.centroids.select(
+        F.lit(0).alias("user_id"), "centroid_id", "centroid").collect()
+    arrays = centroid_arrays(rows, [0], len(query_vector))
+    return probe(arrays, index.metric, query_vector, num_probes,
+                 centroid_distance_ratio).get(0, [])
 
 
 def probe_centroids_batch(
@@ -328,10 +315,9 @@ def probe_centroids_batch(
 ) -> DataFrame:
     """Set-based phase 1 for N queries in ONE plan: returns probed
     (query_id, qv, centroid_id) rows. The centroid table is broadcast,
-    the query table streams through it — no per-query driver round trip
-    (the batch analog of probe_centroids; same top-num_probes + ratio
-    prune semantics, including the documented abs() deviation for
-    negative-score metrics)."""
+    the query table streams through it and multi_ivf.probe_window ranks
+    it per query — no per-query driver round trip (the batch analog of
+    probe_centroids, same rule)."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).cast("array<double>").alias("qv"),
@@ -340,14 +326,8 @@ def probe_centroids_batch(
         q.crossJoin(F.broadcast(index.centroids))
         .withColumn("d", score_expr(index.metric, F.col("qv"), F.col("centroid")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("d").asc(), F.col("centroid_id").asc())
-    out = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= num_probes)
-    if centroid_distance_ratio is not None:
-        d_min = F.min("d").over(Window.partitionBy("query_id"))
-        out = out.withColumn("d_min", d_min).filter(
-            F.col("d") - F.col("d_min") <= F.abs(F.col("d_min")) * centroid_distance_ratio
-        )
-    return out.select("query_id", "qv", "centroid_id")
+    return probe_window(scored, ["query_id"], num_probes, centroid_distance_ratio).select(
+        "query_id", "qv", "centroid_id")
 
 
 def ivf_search_batch(

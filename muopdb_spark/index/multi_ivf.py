@@ -21,13 +21,20 @@ projection (user_id, id, vector) flows through it). The fit asserts
 the bound, so a regression fails loudly instead of OOMing. AQE
 skew-join handles the assignment join.
 
-Search prunes to the queried user's centroids/postings first (the
+Search has one core per shape. A single request (any number of users)
+collects the requested users' centroids, probes them on the driver
+(`probe`), reads only the probed (user_id, centroid_id) postings
+partitions through literal filters (`probed_filter` — the
 partition-pruning analog of per-user index-blob opens,
-multi_spann/index.rs:100-137).
+multi_spann/index.rs:100-137) and ranks them (`rank`);
+Collection.ann_search runs the same three steps over its segments. A
+batch of requests probes with one window (`probe_window`) instead.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -37,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.functions.distance import score_expr, score_np
 from muopdb_spark.index.quantizer import lookup
 
 
@@ -218,38 +225,138 @@ def multi_ivf_load(spark, path: str) -> MultiIvfIndex:
     )
 
 
-def _probed_pairs(
-    index: MultiIvfIndex,
-    user_ids: Sequence[int],
-    q,
-    num_probes: int,
-    centroid_distance_ratio: float | None,
-) -> DataFrame:
-    """Phase 1 for ALL requested users AT ONCE: one window over the
-    centroid table yields the probed (user_id, centroid_id) pairs as a
-    DataFrame — no per-user driver collect, no per-user Spark job. For a
-    1,000-user request this is still exactly one job over a small table
-    (the set-based shape of snapshot.rs:39-64, where the reference loops
-    in-process; a driver loop here would be 1,000 jobs).
-
-    Ratio prune (V19, spann/index.rs:233-246) uses abs(d_min) — a
-    DELIBERATE deviation from the reference's `min * ratio`: for the
-    negated-dot metric d_min is negative, making the reference's
-    threshold negative so every non-nearest centroid is dropped; abs()
-    keeps the intended "within ratio of nearest" semantics for both
-    metrics (recall-safe superset of the reference's probe set)."""
-    scored = (
-        index.centroids.filter(F.col("user_id").isin([int(u) for u in user_ids]))
-        .withColumn("d", score_expr(index.metric, F.col("centroid"), q))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("d").asc(), F.col("centroid_id").asc())
-    probed = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= num_probes)
-    if centroid_distance_ratio is not None:
-        d_min = F.min("d").over(Window.partitionBy("user_id"))
-        probed = probed.withColumn("d_min", d_min).filter(
-            F.col("d") - F.col("d_min") <= F.abs(F.col("d_min")) * centroid_distance_ratio
+def centroid_arrays(rows, users: Sequence[int], dim: int) -> dict[int, tuple]:
+    """user_id -> (centroid ids, float64 centroid matrix) from collected
+    (user_id, centroid_id, centroid) rows. A requested user absent from
+    the rows maps to empty arrays."""
+    found: dict[int, list] = {}
+    for r in rows:
+        found.setdefault(r["user_id"], []).append((r["centroid_id"], r["centroid"]))
+    out = {}
+    for u in users:
+        got = found.get(u, [])
+        out[u] = (
+            np.array([c for c, _ in got], dtype=np.int64),
+            np.array([v for _, v in got], dtype=np.float64).reshape(len(got), dim),
         )
-    return probed.select("user_id", "centroid_id")
+    return out
+
+
+def probe(arrays: dict, metric: str, query_vector, num_probes: int,
+          ratio: float | None) -> dict[int, list[int]]:
+    """Phase 1 of a single request, on the driver: user_id -> probed
+    centroid ids from `centroid_arrays`. Per user the num_probes
+    nearest by (distance, centroid_id), scored by score_np (bit for bit
+    score_expr), then the V19 ratio prune (spann/index.rs:233-246).
+    Users with nothing probed are left out.
+
+    The prune keeps d - d_min <= abs(d_min) * ratio — a DELIBERATE
+    deviation from the reference's `min * ratio`: for the negated-dot
+    metric d_min is negative, making the reference's threshold negative
+    so every non-nearest centroid is dropped; abs() keeps the intended
+    "within ratio of nearest" semantics for both metrics (recall-safe
+    superset of the reference's probe set). probe_window is the same
+    rule for batches."""
+    out: dict[int, list[int]] = {}
+    for u, (ids, matrix) in arrays.items():
+        d = score_np(metric, matrix, query_vector)
+        order = np.lexsort((ids, d))[:max(num_probes, 0)]
+        ids, d = ids[order], d[order]
+        if ratio is not None and len(d):
+            ids = ids[d - d[0] <= abs(d[0]) * ratio]
+        if len(ids):
+            out[u] = ids.tolist()
+    return out
+
+
+def probed_filter(probed: dict[int, list[int]]):
+    """The probed (user_id, centroid_id) pairs as one literal predicate.
+    Postings are partitioned by (user_id, centroid_id), so it prunes
+    partitions statically, with no join to plan — the analog of the
+    reference's per-user index-blob opens (multi_spann/index.rs:100-137)."""
+    conds = [(F.col("user_id") == u) & F.col("centroid_id").isin(cids)
+             for u, cids in probed.items()]
+    return functools.reduce(operator.or_, conds) if conds else F.lit(False)
+
+
+def probe_window(scored: DataFrame, keys: Sequence[str], num_probes: int,
+                 ratio: float | None) -> DataFrame:
+    """Phase 1 for a batch, as one window: the rows of `scored` (with
+    `d` and `centroid_id`) that are among the num_probes nearest per
+    `keys` by (d, centroid_id) and pass the ratio prune — `probe`'s
+    rule, set-based, so N requests are one job rather than N collects."""
+    w = Window.partitionBy(*keys).orderBy(F.col("d").asc(), F.col("centroid_id").asc())
+    out = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= num_probes)
+    if ratio is not None:
+        d_min = F.min("d").over(Window.partitionBy(*keys))
+        out = out.withColumn("d_min", d_min).filter(
+            F.col("d") - F.col("d_min") <= F.abs(F.col("d_min")) * ratio
+        )
+    return out
+
+
+def rank(
+    scan: DataFrame,
+    q,
+    codebook,
+    metric: str,
+    query_vector: Sequence[float],
+    users: Sequence[int],
+    k: int,
+    *,
+    rerank: int | None = None,
+    per_user: bool = False,
+    score_decimals: int | None = None,
+) -> DataFrame:
+    """Phase 2's ranking tail over the probed postings `scan`: score,
+    dedup multi-assignment copies per (user, id) (V21), top-k — global
+    across users (the reference's cross-user merge, snapshot.rs:60-61)
+    or, per_user=True, per user.
+
+    `q` is the quantizer entry (None when unquantized): the stored codes
+    are scored inside the scan (mod.rs:145-149), then each user's top
+    `rerank` (or k) candidates — a recall-safe superset of a global cut
+    — are kept, and re-scored exactly when `rerank` is set (exact given
+    candidate containment, recall-pytest-gated)."""
+    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    exact = score_expr(metric, F.col("vector"), qv)
+    if q is not None:
+        scan, adc = q.score(codebook, query_vector, scan, users)
+        wu = Window.partitionBy("user_id").orderBy(
+            F.col("adc").asc_nulls_last(), F.col("id").asc())
+        cand = (
+            scan.select("user_id", "id", "vector", adc.alias("adc"))
+            .groupBy("user_id", "id").agg(
+                F.min("adc").alias("adc"), F.first("vector").alias("vector"))
+            .withColumn("crnk", F.row_number().over(wu))
+            .filter(F.col("crnk") <= (rerank if rerank is not None else k))
+        )
+        score = exact if rerank is not None else F.col("adc")
+        if score_decimals is not None:
+            score = F.round(score, score_decimals)
+        deduped = cand.select("user_id", "id", score.alias("score"))
+    else:
+        score = exact
+        if score_decimals is not None:
+            score = F.round(score, score_decimals)
+        deduped = (
+            scan.select("user_id", "id", score.alias("score"))
+            .groupBy("user_id", "id").agg(F.min("score").alias("score"))
+        )
+    if per_user:
+        w = Window.partitionBy("user_id").orderBy(
+            F.col("score").asc_nulls_last(), F.col("id").asc())
+        return (
+            deduped.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k)
+            .select("user_id", "id", "score")
+            .orderBy("user_id", F.col("score").asc_nulls_last(), "id")
+        )
+    return (
+        deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
+        .limit(k)
+        .select("user_id", "id", "score")
+    )
 
 
 def multi_ivf_search_users(
@@ -266,82 +373,36 @@ def multi_ivf_search_users(
     score_decimals: int | None = None,
     rerank: int | None = None,
 ) -> DataFrame:
-    """Search N users' independent indexes in ONE plan (snapshot.rs:39-64
-    searches any number of users per request): windowed probe for all
-    users → one postings semi-join on (user_id, centroid_id) → score →
-    per-user dedup → top-k.
+    """Search N users' independent indexes for one request
+    (snapshot.rs:39-64 searches any number of users per request), in
+    the reference's two phases (spann/index.rs:211-266): one collect of
+    the requested users' centroids, `probe` on the driver, then one plan
+    — postings filtered by the probed pairs as literal partition filters
+    (`probed_filter`), pre-filtered, and ranked by `rank`.
 
-    per_user=False: global top-k across users (the reference's cross-user
-    merge, snapshot.rs:60-61). per_user=True: top-k PER user (rnk <= k).
-
-    pre_filter_ids: F8 plan_with_ids as a leftsemi join on id — the match
-    set never collects to the driver.
-
-    Quantized indexes score the stored codes inside the scan (the
-    reference's quantizer-always-on serving, mod.rs:145-149) — same
-    estimators as the batch path, so batch == per-request holds for
-    every quantizer; `rerank=N` re-scores the quantized top-N exactly
-    (exact given candidate containment, recall-pytest-gated)."""
-    q = lookup(index.quantizer, multi_user=True, metric=index.metric)
+    per_user=False: global top-k across users. per_user=True: top-k PER
+    user. pre_filter_ids: F8 plan_with_ids as a leftsemi join on id —
+    the match set never collects to the driver. Quantized indexes score
+    the stored codes inside the scan; `rerank=N` re-scores each user's
+    quantized top-N exactly. Collection.ann_search runs the same probe
+    and the same `rank` over its segments."""
+    q = lookup(index.quantizer, multi_user=True, metric=index.metric, dedup=True)
     if num_probes is None:
         num_probes = k
-    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
-    pairs = _probed_pairs(index, user_ids, qv, num_probes, centroid_distance_ratio)
-    # one semi join prunes the postings scan to the probed pairs — with
-    # postings partitioned by (user_id, centroid_id) this is the
-    # partition-pruning analog of per-user index-blob opens
-    scan = index.postings.join(
-        F.broadcast(pairs), on=["user_id", "centroid_id"], how="left_semi"
+    users = [int(u) for u in user_ids]
+    rows = (
+        index.centroids.filter(F.col("user_id").isin(users))
+        .select("user_id", "centroid_id", "centroid").collect()
     )
+    probed = probe(centroid_arrays(rows, users, len(query_vector)), index.metric,
+                   query_vector, num_probes, centroid_distance_ratio)
+    scan = index.postings.filter(probed_filter(probed))
     if pre_filter is not None:
         scan = scan.filter(pre_filter)
     if pre_filter_ids is not None:
         scan = scan.join(pre_filter_ids.select("id").distinct(), on="id", how="left_semi")
-    exact = score_expr(index.metric, F.col("vector"), qv)
-    if q is not None:
-        scan, approx = q.score(index.codebook, query_vector, scan, user_ids)
-        carry = ["vector"] if rerank is not None else []
-        cand = scan.select("user_id", "id", *carry, approx.alias("adc"))
-        # V21 dedup per (user, id), then the candidate cut
-        wdup = Window.partitionBy("user_id", "id").orderBy(F.col("adc").asc())
-        cand = cand.withColumn("rn", F.row_number().over(wdup)).filter(F.col("rn") == 1)
-        cut = rerank if rerank is not None else k
-        if per_user:
-            wcut = Window.partitionBy("user_id").orderBy(
-                F.col("adc").asc_nulls_last(), F.col("id").asc()
-            )
-            pool = cand.withColumn("rk", F.row_number().over(wcut)).filter(
-                F.col("rk") <= cut
-            )
-        else:
-            pool = cand.orderBy(
-                F.col("adc").asc_nulls_last(), F.col("id").asc()
-            ).limit(cut)
-        score = exact if rerank is not None else F.col("adc")
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        deduped = pool.select("user_id", "id", score.alias("score"))
-    else:
-        score = F.round(exact, score_decimals) if score_decimals is not None else exact
-        deduped = (
-            scan.select("user_id", "id", score.alias("score"))
-            .groupBy("user_id", "id").agg(F.min("score").alias("score"))  # V21 dedup
-        )
-    if per_user:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("score").asc_nulls_last(), F.col("id").asc()
-        )
-        return (
-            deduped.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("user_id", "id", "score")
-            .orderBy("user_id", F.col("score").asc_nulls_last(), "id")
-        )
-    return (
-        deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-        .limit(k)
-        .select("user_id", "id", "score")
-    )
+    return rank(scan, q, index.codebook, index.metric, query_vector, users, k,
+                rerank=rerank, per_user=per_user, score_decimals=score_decimals)
 
 
 def multi_ivf_search(
@@ -351,7 +412,7 @@ def multi_ivf_search(
     k: int,
     **kw,
 ) -> DataFrame:
-    """Search ONE user's index — the N=1 case of the set-based path."""
+    """Search ONE user's index — multi_ivf_search_users for one user."""
     return multi_ivf_search_users(index, [user_id], query_vector, k, **kw).select("id", "score")
 
 
@@ -377,8 +438,8 @@ def multi_ivf_search_batch(
     log or serves a request queue.
 
     Phase 1 equi-joins requests to the per-user centroid tables on
-    user_id (small per user) and windows per (request, user) — the
-    batched `_probed_pairs`. Phase 2 joins the probed (request, user,
+    user_id (small per user) and ranks them per (request, user) with
+    `probe_window` — `probe`'s rule, batched. Phase 2 joins the probed (request, user,
     centroid) rows to the postings ON THE POSTINGS' PARTITIONING KEY
     (user_id, centroid_id) — postings never shuffle, only the slim probe
     table moves. Per-request dedup and top-k (global across the
@@ -391,8 +452,9 @@ def multi_ivf_search_batch(
     Quantized indexes score stored codes inside the scan via the batch
     estimators (codebook in the UDF closure, requests stream through as
     (qv, code) pairs — the reference's quantizer-always-on serving,
-    rs/index/src/collection/mod.rs:145-149); `rerank=N` re-scores the
-    per-request quantized top-N exactly.
+    rs/index/src/collection/mod.rs:145-149); `rerank=N` keeps each
+    (request, user)'s quantized top-N, as `rank` does, and re-scores it
+    exactly.
 
     Returns (request_id, user_id, id, score). Full probes + no ratio
     prune => exact per request (DuckDB-oracle-able) for unquantized
@@ -412,15 +474,8 @@ def multi_ivf_search_batch(
         req.join(index.centroids, "user_id")
         .withColumn("d", score_expr(index.metric, F.col("centroid"), F.col("qv")))
     )
-    w = Window.partitionBy("request_id", "user_id").orderBy(
-        F.col("d").asc(), F.col("centroid_id").asc()
-    )
-    probes = scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= num_probes)
-    if centroid_distance_ratio is not None:
-        d_min = F.min("d").over(Window.partitionBy("request_id", "user_id"))
-        probes = probes.withColumn("d_min", d_min).filter(
-            F.col("d") - F.col("d_min") <= F.abs(F.col("d_min")) * centroid_distance_ratio
-        )
+    probes = probe_window(scored, ["request_id", "user_id"], num_probes,
+                          centroid_distance_ratio)
     cand = probes.select("request_id", "user_id", "centroid_id", "qv").join(
         index.postings, ["user_id", "centroid_id"]
     )
@@ -446,8 +501,10 @@ def multi_ivf_search_batch(
         # reuse. Duplicate candidate rows are multi-assignment copies
         # with identical adc/qv/vector (centroid-independent codes,
         # checked by the lookup above), so min/first keep the same row
-        # content. Same change as ivf.ivf_search_batch.
-        wcut = Window.partitionBy(*keys).orderBy(
+        # content. Same change as ivf.ivf_search_batch. The candidate
+        # cut is per (request, user), `rank`'s rule, so batch ==
+        # per-request; repartition(request_id) already clusters it.
+        wcut = Window.partitionBy("request_id", "user_id").orderBy(
             F.col("adc").asc_nulls_last(), F.col("id").asc()
         )
         pool = (

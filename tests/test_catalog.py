@@ -105,9 +105,9 @@ def test_term_search_with_stemming(col, spark):
     assert [r["doc_id"] for r in got.collect()] == [1, 5]
     got = col.term_search([0], {"contains": {"path": "category", "value": "news"}}, 10)
     assert [r["doc_id"] for r in got.collect()] == [1]
+
+
 @pytest.mark.slow
-
-
 def test_mvcc_snapshot_versions(col, spark):
     col.insert(_docs_df(spark, R1))
     col.flush()
@@ -117,9 +117,9 @@ def test_mvcc_snapshot_versions(col, spark):
     # old version still readable after new flush (MVCC)
     assert col.docs(version=v1).count() == 3
     assert col.docs().count() == 5
+
+
 @pytest.mark.slow
-
-
 def test_vacuum_threshold_and_rewrite(col, spark):
     col.insert(_docs_df(spark, R1))
     col.flush()
@@ -285,9 +285,9 @@ def test_term_search_indexed_no_terms(col, spark):
     got = col.term_search_indexed([0, 1], [], 10)
     assert got.schema.simpleString() == "struct<user_id:bigint,doc_id:bigint>"
     assert got.collect() == []
+
+
 @pytest.mark.slow
-
-
 def test_pq_collection_durable_index(spark, tmp_path):
     """quantizer='pq' collections persist the codebook and store PQ
     codes in the durable postings; ann_search scores ADC in the scan and
@@ -374,9 +374,9 @@ def test_pq_quantizer_gated_and_search(spark, tmp_path):
     raw = Collection.create(spark, str(tmp_path), cfg2)
     with pytest.raises(ValueError, match="quantizer"):
         raw.build_quantizer()
+
+
 @pytest.mark.slow
-
-
 def test_concurrent_writers_mint_distinct_seq_nos(spark, tmp_path):
     """Reference pattern-3 analog (core.rs concurrent group-commit
     tests): racing writers must never share a seq_no — the claim-file

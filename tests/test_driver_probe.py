@@ -1,15 +1,19 @@
-"""Collection.ann_search's phase 1 runs on the driver (Collection._probe).
-It must pick the same (segment, user_id, centroid_id) set as multi_ivf's
-windowed Spark probe (_probed_pairs) on each segment's loaded index:
-same scores, same (distance, centroid_id) order and tie-break, same
-ratio prune."""
+"""One probe rule, two shapes. A single request probes on the driver
+(multi_ivf.probe, over the per-(segment, user) arrays a Collection
+keeps); a batch probes with one window (multi_ivf.probe_window). On a
+batch of one request both must pick the same (segment, user_id,
+centroid_id) set: same scores, same (distance, centroid_id) order and
+tie-break, same ratio prune."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from muopdb_spark.catalog.collection import Collection, CollectionConfig
-from muopdb_spark.index.multi_ivf import MultiIvfIndex, _probed_pairs, multi_ivf_save
+from muopdb_spark.functions.distance import score_expr
+from muopdb_spark.index.multi_ivf import (
+    MultiIvfIndex, multi_ivf_save, probe, probe_window,
+)
 
 DIM = 6
 USERS = [0, 1, 7]  # 0 in both segments, 1 only in "sb", 7 in none
@@ -57,22 +61,43 @@ def indexed(request, spark, tmp_path_factory):
     return col, queries
 
 
+def _probe(col, segs, users, q, num_probes, ratio):
+    """segment -> user_id -> probed centroid ids, as ann_search probes."""
+    arrays = col._centroid_arrays(segs, users)
+    out = {}
+    for s in segs:
+        probed = probe({u: arrays[s][u] for u in users}, col.config.metric, q,
+                       num_probes, ratio)
+        if probed:
+            out[s] = probed
+    return out
+
+
+def _window_probe(spark, index, users, q, num_probes, ratio):
+    """probe_window over a batch holding one request for `users`."""
+    req = spark.createDataFrame(
+        [(0, u, [float(x) for x in q]) for u in users],
+        "request_id long, user_id long, qv array<double>")
+    scored = req.join(index.centroids, "user_id").withColumn(
+        "d", score_expr(index.metric, F.col("centroid"), F.col("qv")))
+    return probe_window(scored, ["request_id", "user_id"], num_probes, ratio)
+
+
 @pytest.mark.parametrize("ratio", [None, 0.1])
 @pytest.mark.parametrize("num_probes", [1, 3])
-def test_driver_probe_matches_windowed_probe(indexed, num_probes, ratio):
+def test_driver_probe_matches_windowed_probe(spark, indexed, num_probes, ratio):
     col, queries = indexed
     segs = col.toc()["segments"]
     for q in queries:
-        qv = F.lit([float(x) for x in q]).cast("array<double>")
         want = {
             (s, r["user_id"], r["centroid_id"])
             for s in segs
-            for r in _probed_pairs(col.load_segment_index(s), USERS, qv,
+            for r in _window_probe(spark, col.load_segment_index(s), USERS, q,
                                    num_probes, ratio).collect()
         }
         got = {
             (s, u, c)
-            for s, probed in col._probe(segs, USERS, q, num_probes, ratio).items()
+            for s, probed in _probe(col, segs, USERS, q, num_probes, ratio).items()
             for u, cids in probed.items() for c in cids
         }
         assert got == want
@@ -81,13 +106,13 @@ def test_driver_probe_matches_windowed_probe(indexed, num_probes, ratio):
 
 def test_ties_break_by_centroid_id(indexed):
     col, queries = indexed
-    probed = col._probe(["sa"], [0], queries[0], 2, None)
+    probed = _probe(col, ["sa"], [0], queries[0], 2, None)
     assert probed == {"sa": {0: [1, 3]}}
 
 
 def test_user_in_one_segment_and_unknown_user(indexed):
     col, queries = indexed
-    probed = col._probe(["sa", "sb"], [1, 7], queries[1], 2, None)
+    probed = _probe(col, ["sa", "sb"], [1, 7], queries[1], 2, None)
     assert list(probed) == ["sb"] and list(probed["sb"]) == [1]
-    assert col._probe(["sa", "sb"], [7], queries[1], 2, None) == {}
+    assert _probe(col, ["sa", "sb"], [7], queries[1], 2, None) == {}
     assert col.ann_search([7], queries[1], 5).collect() == []

@@ -1,12 +1,17 @@
 """Per-user independent IVF indexes (the MultiSpann analog): isolation,
 per-user recall, cross-user merge."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from muopdb_spark.catalog.collection import Collection, CollectionConfig
 from muopdb_spark.index.multi_ivf import (
     build_multi_ivf,
+    multi_ivf_load,
+    multi_ivf_save,
     multi_ivf_search,
     multi_ivf_search_users,
 )
@@ -65,9 +70,9 @@ def test_unknown_user_empty(index):
 
 
 def test_many_users_one_plan(spark):
-    """50 users in ONE request — the set-based path (snapshot.rs:39-64)
-    probes all users with one window + one postings semi-join, no
-    per-user driver loop. Each user u clusters at u*10, so the global
+    """50 users in ONE request (snapshot.rs:39-64): one collect of their
+    centroids, one driver probe and one postings scan filtered by the
+    probed pairs — no per-user Spark job. Each user u clusters at u*10, so the global
     top-k for a query at 250 is exactly user 25's points."""
     rng = np.random.default_rng(7)
     rows = []
@@ -264,3 +269,42 @@ def test_whale_user_oversize_group_trips_assert(spark):
     except Exception as e:  # pragma: no cover
         idx_err = e
     assert idx_err is None
+
+
+def test_reloaded_search_plans_literal_partition_filters(index, spark, tmp_path):
+    """Over a saved index the probe runs on the driver: the postings
+    scan prunes (user_id, centroid_id) partitions by literal filters —
+    no probe window, no broadcast semi-join, no dynamic pruning."""
+    multi_ivf_save(index, str(tmp_path))
+    idx = multi_ivf_load(spark, str(tmp_path))
+    df = multi_ivf_search_users(idx, [0, 1], [50.0] * DIM, 5, num_probes=1,
+                                centroid_distance_ratio=None)
+    assert [r["user_id"] for r in df.collect()] == [1] * 5
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for absent in ("Window", "BroadcastExchange", "dynamicpruning"):
+        assert absent not in plan, absent
+    final = plan.split("== Initial Plan ==")[0]
+    scans = re.findall(r"FileScan parquet .*?PartitionFilters: \[([^\]]*)", final)
+    assert len(scans) == 1, final
+    assert re.search(r"centroid_id#\d+ (= \d|IN \()", scans[0]), scans[0]
+
+
+@pytest.mark.parametrize("quantizer", list(QUANTIZERS))
+def test_collection_ann_search_is_the_multi_ivf_core(users_df, spark, tmp_path, quantizer):
+    """A one-segment collection searches exactly as multi_ivf_search_users
+    over that segment's index: same probe, same ranking tail."""
+    col = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="core", num_features=DIM, num_centroids=2, quantizer=quantizer,
+        pq_subvectors=3))
+    col.insert(users_df)
+    col.flush()
+    col.build_index()
+    (seg,) = col.toc()["segments"]
+    # queries between the two users' clusters, and a cut as small as k:
+    # both users' candidates compete, so the candidate-cut rule matters
+    cfg = dict(num_probes=2, rerank=5, score_decimals=6)
+    for qv in ([25.0] * DIM, [75.0] * DIM):
+        want = multi_ivf_search_users(col.load_segment_index(seg), [0, 1], qv, 5,
+                                      **cfg).collect()
+        assert col.ann_search([0, 1], qv, 5, **cfg).collect() == want
+        assert len(want) == 5

@@ -14,6 +14,7 @@ import uuid
 import pytest
 
 from muopdb_spark.catalog.collection import Collection, CollectionConfig
+from muopdb_spark.index import multi_ivf
 
 R1 = [
     (0, 1, [1.0, 0.0, 0.0, 0.0], "running fast", "news"),
@@ -191,6 +192,11 @@ def test_build_index_rewrite_drops_kept_centroids(col, spark, tmp_path):
     col.build_index()
     assert (segs[0], "centroids") not in col._opened
     fresh = Collection.open(spark, str(tmp_path), "rp")
-    probe = lambda c: c._probe(segs, [0, 1], Q, 10, None)  # noqa: E731
+
+    def probe(c):
+        arrays = c._centroid_arrays(segs, [0, 1])
+        return {s: multi_ivf.probe({u: arrays[s][u] for u in (0, 1)}, "l2", Q, 10, None)
+                for s in segs}
+
     assert probe(col) == probe(fresh)
     assert probe(col)[segs[0]] == {0: [0], 1: [0]}
