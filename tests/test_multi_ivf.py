@@ -72,8 +72,8 @@ def test_unknown_user_empty(index):
 def test_many_users_one_plan(spark):
     """50 users in ONE request (snapshot.rs:39-64): one collect of their
     centroids, one driver probe and one postings scan filtered by the
-    probed pairs — no per-user Spark job. Each user u clusters at u*10, so the global
-    top-k for a query at 250 is exactly user 25's points."""
+    probed pairs — no per-user Spark job. Each user u clusters at u*10,
+    so the global top-k for a query at 250 is exactly user 25's points."""
     rng = np.random.default_rng(7)
     rows = []
     did = 0
