@@ -25,7 +25,8 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
     - searches read ONLY flushed segments (W5 read-your-writes boundary:
       core.rs:812-813 "not immediately searchable") and anti-join
       tombstones when any exist (V20); each segment's tables are opened
-      once per Collection handle
+      once per Collection handle, and warm unquantized ann requests rank
+      the postings the handle keeps resident on the driver (no Spark job)
     - merge_segments / vacuum (S10, §4.2 compaction; optimizers/merge.rs:38,
       vacuum.rs:38) rewrite segments and swap the TOC; old versions remain
       readable (MVCC snapshots, core.rs:978-1011) until garbage-collected
@@ -41,17 +42,31 @@ import json
 import operator
 import os
 import tempfile
+import threading
 import uuid
+from collections import OrderedDict
 from dataclasses import asdict, dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
+from muopdb_spark.functions.distance import score_np
 from muopdb_spark.index.multi_ivf import (
     build_multi_ivf, centroid_arrays, multi_ivf_load, multi_ivf_save, probe,
     probed_filter, rank,
 )
 from muopdb_spark.index.quantizer import QUANTIZERS, lookup
+
+# Byte cap (numpy nbytes) of one handle's resident postings: the
+# reference's block cache default, 1 GB (rs/utils/src/block_cache/
+# cache.rs, env.rs:33-53).
+RESIDENT_POSTINGS_BYTES = 1 << 30
+
+_ANN_SCHEMA = "user_id long, id long, score double"
 
 
 @dataclass
@@ -129,19 +144,14 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-_APPEND_LOCKS: dict[str, "threading.Lock"] = {}
-_APPEND_LOCKS_GUARD = None  # created lazily (threading imported in-function)
+_APPEND_LOCKS: dict[str, threading.Lock] = {}
+_APPEND_LOCKS_GUARD = threading.Lock()
 
 
-def _append_lock_for(root: str) -> "threading.Lock":
+def _append_lock_for(root: str) -> threading.Lock:
     """Process-wide lock per collection directory (normalized path).
     The FileOutputCommitter `_temporary/0` staging race this guards is a
     property of the DIRECTORY, not of a Collection instance."""
-    import threading
-
-    global _APPEND_LOCKS_GUARD
-    if _APPEND_LOCKS_GUARD is None:
-        _APPEND_LOCKS_GUARD = threading.Lock()
     key = os.path.realpath(root)
     with _APPEND_LOCKS_GUARD:
         return _APPEND_LOCKS.setdefault(key, threading.Lock())
@@ -149,6 +159,85 @@ def _append_lock_for(root: str) -> "threading.Lock":
 
 def _union(parts: list[DataFrame]) -> DataFrame:
     return functools.reduce(DataFrame.unionByName, parts)
+
+
+@functools.lru_cache(maxsize=None)
+def _schemas(ddl: str):
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def _local(spark: SparkSession, ddl: str, **columns) -> DataFrame:
+    """A local relation of `columns` (absent ones empty) over the DDL
+    schema. It is built from a pyarrow Table, so it plans LocalTableScan
+    and collects with no Spark job; createDataFrame over Python rows
+    (even none) runs one."""
+    struct, arrow = _schemas(ddl)
+    return spark.createDataFrame(pa.table(
+        {f.name: columns.get(f.name, []) for f in arrow}, schema=arrow), struct)
+
+
+def _nbytes(entry) -> int:
+    """numpy nbytes of one entry's posting arrays."""
+    return sum(a.nbytes for a in entry)
+
+
+class _ResidentPostings:
+    """(segment, user) -> that user's postings in the segment as arrays
+    (centroid_id, id, seq_no: int64; vector: float64 matrix), one LRU
+    per Collection handle capped by numpy nbytes at
+    RESIDENT_POSTINGS_BYTES — the analog of the reference's block cache
+    (rs/utils/src/block_cache/cache.rs). Hits and misses count (segment,
+    user) lookups; a lock guards every access."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[tuple[str, int], tuple] = OrderedDict()
+        self.nbytes = self.hits = self.misses = self.evictions = 0
+
+    def take(self, keys) -> dict:
+        """The resident entries among `keys`, each marked recently used."""
+        with self._lock:
+            got = {}
+            for key in keys:
+                e = self._entries.get(key)
+                if e is None:
+                    self.misses += 1
+                    continue
+                self.hits += 1
+                self._entries.move_to_end(key)
+                got[key] = e
+            return got
+
+    def put(self, entries: dict) -> None:
+        """Keep `entries`, evicting the least recently used until the
+        cap holds; an entry larger than the cap alone is not kept."""
+        cap = RESIDENT_POSTINGS_BYTES
+        with self._lock:
+            for key, e in entries.items():
+                size = _nbytes(e)
+                if size > cap:
+                    continue
+                if key in self._entries:
+                    self.nbytes -= _nbytes(self._entries.pop(key))
+                while self._entries and self.nbytes + size > cap:
+                    self.nbytes -= _nbytes(self._entries.popitem(last=False)[1])
+                    self.evictions += 1
+                self._entries[key] = e
+                self.nbytes += size
+
+    def drop(self, segments) -> None:
+        """Forget every entry of `segments` (rewritten or deleted)."""
+        with self._lock:
+            segments = set(segments)
+            for key in [k for k in self._entries if k[0] in segments]:
+                self.nbytes -= _nbytes(self._entries.pop(key))
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {"bytes": self.nbytes, "entries": len(self._entries),
+                    "cap_bytes": RESIDENT_POSTINGS_BYTES, "hits": self.hits,
+                    "misses": self.misses, "evictions": self.evictions}
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -238,6 +327,11 @@ class Collection:
         # reference's reopen-as-ImmutableSegment at flush (core.rs:
         # 928-950): later requests reuse its file listing and schema.
         self._opened: dict[tuple[str, str], object] = {}
+        # ann postings kept on the driver (_resident_postings), and the
+        # newest tombstone per (user, doc) with the tombstone directory
+        # listing it was read under (_tomb_latest_map)
+        self._resident = _ResidentPostings()
+        self._tomb_kept: tuple[tuple[str, ...], dict] | None = None
 
     # ------------------------------------------------------------ DDL
 
@@ -468,7 +562,7 @@ class Collection:
     def tombstones(self) -> DataFrame:
         if self._has_tombstones():
             return self.spark.read.parquet(self._tombstone_dir())
-        return self.spark.createDataFrame([], "user_id long, doc_id long, seq_no long")
+        return _local(self.spark, "user_id long, doc_id long, seq_no long")
 
     def _tomb_latest(self, tomb: DataFrame) -> DataFrame:
         """Newest tombstone per (user, doc) — the only one that matters
@@ -574,8 +668,8 @@ class Collection:
         toc = self.toc(version)
         segs = toc["segments"]
         if not segs:
-            empty = "user_id long, doc_id long, vector array<float>, seq_no long"
-            return self.spark.createDataFrame([], empty)
+            return _local(self.spark,
+                          "user_id long, doc_id long, vector array<float>, seq_no long")
         df = self.segment_docs(segs[0])
         for s in segs[1:]:
             df = df.unionByName(self.segment_docs(s), allowMissingColumns=True)
@@ -809,6 +903,7 @@ class Collection:
         for key in list(self._opened):
             if key[0] in removed_segments:
                 self._opened.pop(key, None)
+        self._resident.drop(removed_segments)
         return {"versions": removed_versions, "segments": sorted(removed_segments)}
 
     # ------------------------------------------------- durable indexes
@@ -883,6 +978,7 @@ class Collection:
             stale = {"ivf", "terms"} - have
             if "ivf" in stale:
                 stale.add("centroids")  # read from the ivf index
+                self._resident.drop([seg])
             for kind in stale:
                 self._opened.pop((seg, kind), None)
             if "ivf" not in have:
@@ -958,6 +1054,155 @@ class Collection:
                 arrays[s].setdefault(u, a)
         return arrays
 
+    def _probe_segments(self, segs: list[str], users: list[int], query_vector,
+                        num_probes: int, ratio: float | None) -> dict[str, dict]:
+        """Phase 1: segment -> multi_ivf.probe's user_id -> probed
+        centroid ids, from _centroid_arrays. Segments with nothing
+        probed are left out."""
+        arrays = self._centroid_arrays(segs, users)
+        pairs = {}
+        for s in segs:
+            probed = probe({u: arrays[s][u] for u in users}, self.config.metric,
+                           query_vector, num_probes, ratio)
+            if probed:
+                pairs[s] = probed
+        return pairs
+
+    def _fetch_postings(self, keys: list[tuple[str, int]]) -> dict:
+        """(segment, user) -> (centroid_id, id, seq_no, vector) arrays of
+        that user's postings in the segment, by ONE collect over those
+        segments' postings filtered to those users. A user without
+        postings in a segment gets empty arrays."""
+        by_seg: dict[str, list[int]] = {}
+        for s, u in keys:
+            by_seg.setdefault(s, []).append(u)
+        segs = list(by_seg)
+        t = _union([
+            self.load_segment_index(s).postings.filter(F.col("user_id").isin(by_seg[s]))
+            .select(F.lit(i).alias("_seg"), "user_id", "centroid_id", "id", "seq_no", "vector")
+            for i, s in enumerate(segs)
+        ]).toArrow()
+        seg, user, cid, ids, seq = (np.asarray(t.column(c), dtype=np.int64) for c in (
+            "_seg", "user_id", "centroid_id", "id", "seq_no"))
+        vec = np.asarray(t.column("vector").combine_chunks().flatten(), dtype=np.float64)
+        vec = vec.reshape(len(ids), self.config.num_features)
+        out = {}
+        for s, u in keys:
+            m = (seg == segs.index(s)) & (user == u)
+            out[(s, u)] = (cid[m], ids[m], seq[m], vec[m])
+        return out
+
+    def _resident_postings(self, pairs: dict[str, dict]) -> tuple | None:
+        """The probed postings of `pairs` as (user_id, id, seq_no, vector)
+        arrays from the postings this handle keeps on the driver, or None
+        when the request's (segment, user) entries do not fit in
+        RESIDENT_POSTINGS_BYTES together. Entries not kept yet are filled
+        by one collect (_fetch_postings), unless their files on disk
+        already exceed the cap: those are not read."""
+        keys = [(s, u) for s, probed in pairs.items() for u in probed]
+        got = self._resident.take(keys)
+        missing = [key for key in keys if key not in got]
+        on_disk = sum(_dir_bytes(os.path.join(
+            self._seg_index_dir(s, "ivf"), "postings", f"user_id={u}")) for s, u in missing)
+        if sum(map(_nbytes, got.values())) + on_disk > RESIDENT_POSTINGS_BYTES:
+            return None
+        if missing:
+            fetched = self._fetch_postings(missing)
+            self._resident.put(fetched)
+            got.update(fetched)
+            if sum(map(_nbytes, got.values())) > RESIDENT_POSTINGS_BYTES:
+                return None
+        parts = []
+        for s, probed in pairs.items():
+            for u, cids in probed.items():
+                cid, ids, seq, vec = got[(s, u)]
+                m = np.isin(cid, cids)
+                parts.append((np.full(int(m.sum()), u, dtype=np.int64), ids[m], seq[m], vec[m]))
+        return tuple(np.concatenate(p) for p in zip(*parts))
+
+    def resident_stats(self) -> dict:
+        """The resident ann postings of this handle: bytes, entries,
+        cap_bytes, hits, misses and evictions ((segment, user)
+        lookups)."""
+        return self._resident.stats()
+
+    def _tomb_latest_map(self) -> dict:
+        """(user_id, doc_id) -> newest tombstone seq_no, for masking on
+        the driver. Collected again only when the tombstone directory's
+        listing changes, since another writer may append to it; the
+        listing is taken before the collect, so a file landing in
+        between costs one more collect, never a missed tombstone."""
+        if not self._has_tombstones():
+            return {}
+        listing = tuple(sorted(os.listdir(self._tombstone_dir())))
+        kept = self._tomb_kept
+        if kept is None or kept[0] != listing:
+            rows = self._tomb_latest(self.tombstones()).collect()
+            kept = self._tomb_kept = (
+                listing, {(r["_tu"], r["_td"]): r["tomb_seq"] for r in rows})
+        return kept[1]
+
+    def _ann_resident(self, cand: tuple, query_vector, k: int, *,
+                      pre_filter_ids: DataFrame | None = None,
+                      per_user: bool = False) -> DataFrame:
+        """Phase 2 in numpy over _resident_postings' arrays, by
+        multi_ivf.rank's rules for an unquantized collection: mask
+        tombstones seq_no-aware, keep pre_filter_ids, score with
+        score_np (bit for bit score_expr), take the min per (user, id),
+        order by (score, NaN last; id) and cut to k — per user with
+        per_user, then ordered by (user_id, score, id). Returned as a
+        local relation: collecting it runs no Spark job."""
+        user, ids, seq, vec = cand
+        keep = np.ones(len(ids), dtype=bool)
+        tomb = self._tomb_latest_map()  # V20
+        if tomb:
+            keep &= np.array([tomb.get((u, i), -1) < s for u, i, s in
+                              zip(user.tolist(), ids.tolist(), seq.tolist())], dtype=bool)
+        if pre_filter_ids is not None and keep.any():
+            # only the candidates' ids can pass, so only those are read
+            allowed = pre_filter_ids.select("id").filter(
+                F.col("id").isin(np.unique(ids[keep]).tolist())).toArrow().column("id")
+            keep &= np.isin(ids, np.asarray(allowed.drop_null(), dtype=np.int64))
+        user, ids = user[keep], ids[keep]
+        score = score_np(self.config.metric, vec[keep], query_vector)
+        # min per (user, id): the first row of each group in (user, id,
+        # score) order, NaN sorting last as in Spark
+        o = np.lexsort((score, ids, user))
+        user, ids, score = user[o], ids[o], score[o]
+        first = np.ones(len(ids), dtype=bool)
+        first[1:] = (user[1:] != user[:-1]) | (ids[1:] != ids[:-1])
+        user, ids, score = user[first], ids[first], score[first]
+        if per_user:
+            o = np.lexsort((ids, score, user))
+            u = user[o]
+            o = o[np.arange(len(o)) - np.searchsorted(u, u) < k]
+        else:
+            o = np.lexsort((user, ids, score))[:k]
+        return _local(self.spark, _ANN_SCHEMA, user_id=user[o], id=ids[o], score=score[o])
+
+    def _ann_plan(self, pairs: dict[str, dict], q, query_vector, users: list[int],
+                  k: int, *, rerank: int | None = None,
+                  pre_filter_ids: DataFrame | None = None, per_user: bool = False,
+                  score_decimals: int | None = None) -> DataFrame:
+        """Phase 2 as one Spark plan: each segment's postings filtered to
+        its probed pairs as literal partition filters, unioned,
+        tombstone-masked seq_no-aware (only when tombstone files exist),
+        semi-joined to pre_filter_ids, then multi_ivf.rank with the
+        collection's root codebook."""
+        scan = _union([self.load_segment_index(s).postings.filter(probed_filter(probed))
+                       for s, probed in pairs.items()])
+        scan = self._apply_tombstones(scan, id_col="id")  # V20
+        if pre_filter_ids is not None:
+            scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
+                             how="left_semi")
+        # the authoritative codebook lives at the collection root (a
+        # per-segment copy of a per-user table may predate users added
+        # by later segments' extension); per-user entries collect or
+        # join only the REQUESTED users' books
+        codebook = q.read_artifact(self.spark, self.root) if q is not None else None
+        return rank(scan, q, codebook, self.config.metric, query_vector, users, k,
+                    rerank=rerank, per_user=per_user, score_decimals=score_decimals)
+
     def ann_search(
         self,
         user_ids,
@@ -975,42 +1220,40 @@ class Collection:
         """§3.1 ANN search over the DURABLE per-segment per-user indexes,
         through multi_ivf's single-request core (spann/index.rs:211-266).
         Phase 1 runs multi_ivf.probe per segment on the driver, from
-        arrays this handle keeps once read: a first request for a user
-        runs one small collect over the segments that hold it, later
-        ones start no job. Phase 2 is one plan: each segment's postings
-        filtered to its probed pairs as literal partition filters,
-        unioned, tombstone-masked seq_no-aware (only when tombstone
-        files exist), then multi_ivf.rank with the collection's root
-        codebook. Each segment's index tables are opened once per
-        handle (load_segment_index), so a warm request lists no files
-        and infers no schema."""
+        centroid arrays this handle keeps once read: a first request for
+        a user runs one small collect over the segments that hold it,
+        later ones start no job.
+
+        Phase 2 ranks on the driver when it can, as the reference
+        answers from its in-process block cache: for an unquantized
+        collection without score_decimals (Spark's HALF_UP round is not
+        numpy's), when every probed (segment, user) is resident within
+        RESIDENT_POSTINGS_BYTES, _ann_resident ranks the handle's kept
+        posting arrays in numpy and returns a local relation. A user's
+        first request then runs the centroid and postings collects, a
+        warm one no Spark job (one collect for pre_filter_ids, plus one
+        when the tombstone directory changed). Otherwise _ann_plan runs
+        phase 2 as one Spark plan. Both give the same rows. Each
+        segment's index tables are opened once per handle
+        (load_segment_index), so a warm request lists no files and
+        infers no schema."""
         q = lookup(self.config.quantizer, multi_user=True, dedup=True)
         if num_probes is None:
             num_probes = k
         segs = self._indexed_segments("ivf", version)
         users = [int(u) for u in user_ids]
-        arrays = self._centroid_arrays(segs, users)
-        pairs = {}
-        for s in segs:
-            probed = probe({u: arrays[s][u] for u in users}, self.config.metric,
-                           query_vector, num_probes, centroid_distance_ratio)
-            if probed:
-                pairs[s] = probed
+        pairs = self._probe_segments(segs, users, query_vector, num_probes,
+                                     centroid_distance_ratio)
         if not pairs:
-            return self.spark.createDataFrame([], "user_id long, id long, score double")
-        scan = _union([self.load_segment_index(s).postings.filter(probed_filter(probed))
-                       for s, probed in pairs.items()])
-        scan = self._apply_tombstones(scan, id_col="id")  # V20
-        if pre_filter_ids is not None:
-            scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
-                             how="left_semi")
-        # the authoritative codebook lives at the collection root (a
-        # per-segment copy of a per-user table may predate users added
-        # by later segments' extension); per-user entries collect or
-        # join only the REQUESTED users' books
-        codebook = q.read_artifact(self.spark, self.root) if q is not None else None
-        return rank(scan, q, codebook, self.config.metric, query_vector, users, k,
-                    rerank=rerank, per_user=per_user, score_decimals=score_decimals)
+            return _local(self.spark, _ANN_SCHEMA)
+        if q is None and score_decimals is None:
+            cand = self._resident_postings(pairs)
+            if cand is not None:
+                return self._ann_resident(cand, query_vector, k,
+                                          pre_filter_ids=pre_filter_ids, per_user=per_user)
+        return self._ann_plan(pairs, q, query_vector, users, k, rerank=rerank,
+                              pre_filter_ids=pre_filter_ids, per_user=per_user,
+                              score_decimals=score_decimals)
 
     def term_search_indexed(self, user_ids, terms, limit: int, *, mode: str = "and",
                             version: int | None = None) -> DataFrame:
@@ -1021,7 +1264,7 @@ class Collection:
         (snapshot.rs:141-146)."""
         segs = self._indexed_segments("terms", version)
         if not segs or not terms:
-            return self.spark.createDataFrame([], "user_id long, doc_id long")
+            return _local(self.spark, "user_id long, doc_id long")
         users = [int(u) for u in user_ids]
         index = _union([
             self._open_once(s, "terms", lambda s=s: self.spark.read.parquet(
@@ -1052,31 +1295,3 @@ class Collection:
                 on=["user_id", "doc_id"], how="left_semi",
             )
         return hits.orderBy("doc_id").limit(limit)
-
-    def build_quantizer(self, num_subvectors: int = 4, num_centers: int = 16):
-        """M5 / QuantizerType: train the collection's PQ codebook when
-        the collection's quantizer is PQ (enums.rs:4-9 gates the same
-        way)."""
-        if QUANTIZERS.get(self.config.quantizer) is not QUANTIZERS["pq"]:
-            raise ValueError(
-                f"collection quantizer is {self.config.quantizer!r}, not 'pq'"
-            )
-        from muopdb_spark.index.pq import train_pq
-
-        return train_pq(
-            self.docs(), vec_col="vector",
-            num_subvectors=num_subvectors, num_centers=num_centers,
-        )
-
-    def search_pq(self, codebook, user_ids, query_vector, k) -> DataFrame:
-        """PQ-scored search: encode the (user-pruned, tombstone-masked)
-        docs and rank by asymmetric distance."""
-        from pyspark.sql import functions as SF
-
-        from muopdb_spark.index.pq import pq_encode, pq_search
-
-        docs = self.docs()
-        if user_ids is not None:
-            docs = docs.filter(SF.col("user_id").isin(list(user_ids)))
-        enc = pq_encode(docs, codebook, vec_col="vector")
-        return pq_search(enc, query_vector, codebook, k, id_col="doc_id")

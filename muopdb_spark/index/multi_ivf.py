@@ -27,7 +27,9 @@ collects the requested users' centroids, probes them on the driver
 partitions through literal filters (`probed_filter` — the
 partition-pruning analog of per-user index-blob opens,
 multi_spann/index.rs:100-137) and ranks them (`rank`);
-Collection.ann_search runs the same three steps over its segments. A
+Collection.ann_search runs the same three steps over its segments, or,
+when the postings it keeps on the driver cover an unquantized request,
+ranks them in numpy by `rank`'s rules (Collection._ann_resident). A
 batch of requests probes with one window (`probe_window`) instead.
 """
 

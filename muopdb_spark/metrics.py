@@ -56,7 +56,8 @@ class EngineMetrics:
     """num_requests counter per (request_name, collection_name),
     request_latency_ms histogram per request_name, plus the internal
     gauges (num_collections, num_active_segments, num_searchable_docs
-    per collection)."""
+    and the handle's resident_postings_* cache figures per
+    collection)."""
 
     def __init__(self) -> None:
         self.num_requests: dict[tuple[str, str], int] = defaultdict(int)
@@ -112,14 +113,17 @@ class EngineMetrics:
     # -------------------------------------------------------- internal
 
     def set_collection_gauges(self, collection) -> None:
-        """internal.rs gauges from a Collection: active segments and
-        searchable (live) docs."""
+        """internal.rs gauges from a Collection: active segments,
+        searchable (live) docs, and the handle's resident ann postings:
+        bytes, entries, cap_bytes, hits, misses and evictions."""
         st = collection.stats()
         name = collection.config.name
         self.gauges[("num_active_segments", name)] = float(len(st))
         self.gauges[("num_searchable_docs", name)] = float(
             sum(s["total"] - s["deleted"] for s in st.values())
         )
+        for key, v in collection.resident_stats().items():
+            self.gauges[(f"resident_postings_{key}", name)] = float(v)
 
     # --------------------------------------------------------- exports
 

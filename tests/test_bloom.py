@@ -69,9 +69,9 @@ def test_word_table_matches_referee_bitmap(spark):
     # 63 is set — normalize both sides to unsigned
     got = {w: b & ((1 << 64) - 1) for w, b in table.items()}
     assert got == want
+
+
 @pytest.mark.slow
-
-
 def test_no_false_negatives_and_bounded_false_positives(spark):
     bench, corpus = _bench_df(spark), _corpus_df(spark)
     bloom = bloom_build(bench, k=K, m_bits=M, n_hashes=H)

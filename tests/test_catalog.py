@@ -357,25 +357,6 @@ def test_gc_versions(col, spark):
         col.toc(1)
 
 
-def test_pq_quantizer_gated_and_search(spark, tmp_path):
-    cfg = CollectionConfig(
-        name="pq_col", num_features=4, quantizer="pq",
-        attribute_schema={"title": "text"},
-    )
-    col = Collection.create(spark, str(tmp_path), cfg)
-    col.insert(_docs_df(spark, R1)); col.insert(_docs_df(spark, R2))
-    col.flush()
-    cb = col.build_quantizer(num_subvectors=2, num_centers=4)
-    got = col.search_pq(cb, [0, 1], [0.0, 0.0, 1.0, 0.0], 2).collect()
-    assert [r["doc_id"] for r in got] == [3, 5]  # the two vectors near e3
-
-    # gate: non-pq collection refuses to train a codebook
-    cfg2 = CollectionConfig(name="raw_col", num_features=4)
-    raw = Collection.create(spark, str(tmp_path), cfg2)
-    with pytest.raises(ValueError, match="quantizer"):
-        raw.build_quantizer()
-
-
 @pytest.mark.slow
 def test_concurrent_writers_mint_distinct_seq_nos(spark, tmp_path):
     """Reference pattern-3 analog (core.rs concurrent group-commit

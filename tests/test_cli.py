@@ -335,9 +335,9 @@ def test_cli_decontaminate_fuzzy(spark, cli, capsys, tmp_path, sf_dir):
         threshold=0.8).collect()}
     kept = {row.doc_id for row in cleaned.select("doc_id").collect()}
     assert kept.isdisjoint(v) and len(kept) + len(v) == 475
+
+
 @pytest.mark.slow
-
-
 def test_cli_curate_full_ladder(spark, cli, capsys, tmp_path, sf_dir):
     bench_dir = str(tmp_path / "bench")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -449,9 +449,9 @@ def test_cli_quality_blocklist(cli, capsys, sf_dir):
                            "--blocklist", "dup,corrupt"])
     assert r["docs"] == 500 and r["blocklist_words"] == 2
     assert 0 < r["kept"] < 500  # 'dup' hits some fixture docs
+
+
 @pytest.mark.slow
-
-
 def test_cli_curate_with_blocklist_stage(cli, capsys, sf_dir):
     base = _run(cli, capsys, ["curate", "--input",
                               f"{sf_dir}/documents.parquet",

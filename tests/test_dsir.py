@@ -46,9 +46,9 @@ def test_dsir_separates_target_like_docs(spark, corpora):
     webby = [r.log_weight for r in w if r.doc_id % 2 == 1]
     assert min(sci) > max(webby)  # clean separation on this fixture
     assert all(r.n_grams > 0 for r in w)
+
+
 @pytest.mark.slow
-
-
 def test_dsir_weights_partition_invariant(spark, corpora):
     raw, target = corpora
     ratios = dsir_log_ratios(raw, target, n_buckets=512)
@@ -58,9 +58,9 @@ def test_dsir_weights_partition_invariant(spark, corpora):
          for r in dsir_weights(raw.repartition(13), ratios,
                                n_buckets=512).collect()}
     assert a == b
+
+
 @pytest.mark.slow
-
-
 def test_dsir_sample_gumbel_top_k(spark, corpora):
     raw, target = corpora
     ratios = dsir_log_ratios(raw, target, n_buckets=1024)

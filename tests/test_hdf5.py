@@ -603,9 +603,9 @@ def test_ragged_embeddings_rejected(spark, tmp_path):
     )
     with pytest.raises(Exception, match="ragged"):
         write_hdf5_vectors(df, str(tmp_path / "r.hdf5"))
+
+
 @pytest.mark.slow
-
-
 def test_probe_mutation_fuzz_only_named_refusals():
     """r16 mutation-fuzz hardening (the decode_jpeg rule): corrupting
     metadata bytes of a valid file must yield a parse, a ValueError
@@ -816,9 +816,9 @@ def test_ohdr_v2_bad_checksum_rejected(tmp_path):
             parser._ohdr_v2_messages(0)
     finally:
         parser.f.close()
+
+
 @pytest.mark.slow
-
-
 def test_v4_mutation_fuzz_only_named_refusals(tmp_path):
     """The decode_jpeg rule, extended to the v4 structures: corrupting
     metadata of a valid v4 file yields a parse, ValueError, or
@@ -998,9 +998,9 @@ def test_dense_group_huge_object_refused_by_name(tmp_path):
         assert getter(bytes([0x10 | 2]) + b"abc\x00\x00\x00") == b"abc"
     finally:
         parser.f.close()
+
+
 @pytest.mark.slow
-
-
 def test_dense_group_mutation_fuzz_only_named_refusals(tmp_path):
     import random
 

@@ -215,9 +215,9 @@ def test_multi_assignment_closure(clustered):
     out = ivf_search(idx, [0.0] * DIM, 10, num_probes=3).collect()
     ids = [r["id"] for r in out]
     assert len(ids) == len(set(ids)) == 10
+
+
 @pytest.mark.slow
-
-
 def test_batch_search_one_plan_matches_per_query(index, clustered, spark):
     """ivf_search_batch: N queries in one plan must equal N single-query
     ivf_search results — both for the exact full-probe config and the

@@ -162,9 +162,9 @@ def test_merge_terms_and_invalidation(col3, spark):
 
 
 # --- compaction interplay (r11 review additions) ---
+
+
 @pytest.mark.slow
-
-
 def test_vacuum_under_delete_race(col3, spark):
     """Deletes arriving BETWEEN vacuum passes: each pass applies the
     tombstones visible at its snapshot; a later remove against the

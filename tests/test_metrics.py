@@ -55,6 +55,24 @@ def test_collection_gauges(spark, tmp_path):
     m.set_collection_gauges(col)
     assert m.gauges[("num_active_segments", "m")] == 1.0
     assert m.gauges[("num_searchable_docs", "m")] == 2.0
+    assert m.gauges[("resident_postings_entries", "m")] == 0.0
+    # an ann request keeps user 0's postings of the segment resident
+    col.build_index()
+    for _ in range(2):
+        col.ann_search([0], [1.0, 0.0], 1, num_probes=2).collect()
+    m.set_collection_gauges(col)
+    g = {k: v for (k, c), v in m.gauges.items() if k.startswith("resident_postings_")}
+    assert g == {
+        "resident_postings_bytes": 2 * (3 * 8 + 2 * 8),  # 2 rows: 3 int64 + 2 doubles
+        "resident_postings_entries": 1.0,
+        "resident_postings_cap_bytes": float(1 << 30),
+        "resident_postings_hits": 1.0,
+        "resident_postings_misses": 1.0,
+        "resident_postings_evictions": 0.0,
+    }
+    text = m.to_prometheus()
+    assert 'resident_postings_bytes{name="m"} 80.0' in text
+    assert 'resident_postings_cap_bytes{name="m"} 1073741824.0' in text
 
 
 def test_prometheus_exposition(spark):

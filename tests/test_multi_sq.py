@@ -128,9 +128,9 @@ def test_sq_batch_equals_per_request(spark, skewed, sq_index):
             ).collect()
         ]
         assert sorted(by_req[rid]) == sorted(single)
+
+
 @pytest.mark.slow
-
-
 def test_collection_sq_quantizer_end_to_end(spark, tmp_path):
     """Collection-level quantizer='sq': insert -> flush -> build_index
     (per-user codebook at the collection root, codes in the segment

@@ -72,9 +72,9 @@ def test_per_user_pq_closes_minority_recall_gap(spark, skewed):
     # and the dominant user keeps its recall
     qd = dom[rng.choice(len(dom), 8, replace=False)]
     assert _recall(per_user, exact, 0, qd, rerank=40) >= 0.95
+
+
 @pytest.mark.slow
-
-
 def test_per_user_pq_save_load_roundtrip(spark, skewed, tmp_path):
     df, dom, off = skewed
     idx = build_multi_ivf(

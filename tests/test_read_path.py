@@ -1,11 +1,14 @@
 """Serve read path: each immutable segment table is opened once per
 Collection handle, ann_search probes centroids on the driver from
-per-(segment, user) arrays the handle keeps, and no tombstone mask is
-planned while no tombstone file exists. Pins the win (a warm request
-infers no parquet schema, runs at most two jobs and plans no window,
-broadcast or anti join) and the rules that keep the cache honest
-(removes, new segments, index rewrites and garbage-collected segments
-are always seen)."""
+per-(segment, user) arrays the handle keeps, ranks a warm unquantized
+request on the driver from the postings the handle keeps resident, and
+no tombstone mask is planned while no tombstone file exists. Pins the
+wins (a warm request infers no parquet schema; a warm resident ann
+request runs no Spark job and plans a local relation; a request that
+takes the Spark plan runs at most two jobs and plans no window,
+broadcast or anti join) and the rules that keep the caches honest
+(removes, re-inserts, new segments, index rewrites, garbage-collected
+segments and the byte cap are always seen)."""
 
 import os
 import re
@@ -13,6 +16,7 @@ import uuid
 
 import pytest
 
+from muopdb_spark.catalog import collection as collection_mod
 from muopdb_spark.catalog.collection import Collection, CollectionConfig
 from muopdb_spark.index import multi_ivf
 
@@ -50,9 +54,14 @@ def col(spark, tmp_path):
     return c
 
 
-def _ann(col, users=(0, 1), k=5, q=Q):
+def _ann(col, users=(0, 1), k=5, q=Q, **kw):
     return col.ann_search(list(users), q, k, num_probes=col.config.num_centroids,
-                          centroid_distance_ratio=None)
+                          centroid_distance_ratio=None, **kw)
+
+
+# score_decimals needs Spark's HALF_UP round, so it always takes the
+# Spark plan (_ann_plan)
+PLAN = {"score_decimals": 6}
 
 
 def _requests(col):
@@ -111,7 +120,8 @@ def test_remove_is_seen_by_the_same_handle(col, spark):
     assert _ids(reqs["term_search"]().collect()) == [1, 5]
     assert _ids(reqs["term_search_indexed"]().collect()) == [1, 5]
     col.remove([0], [1])
-    ann = reqs["ann_search"]()
+    assert _ids(reqs["ann_search"]().collect()) == [2, 3, 4, 5]
+    ann = _ann(col, **PLAN)
     assert "LeftAnti" in _plan(ann)
     assert _ids(ann.collect()) == [2, 3, 4, 5]
     assert _ids(reqs["term_search"]().collect()) == [5]
@@ -120,7 +130,8 @@ def test_remove_is_seen_by_the_same_handle(col, spark):
 
 def test_warm_ann_is_two_jobs_with_literal_partition_filters(col, spark):
     def ann():
-        return col.ann_search([0, 1], Q, 5, num_probes=1, centroid_distance_ratio=None)
+        return col.ann_search([0, 1], Q, 5, num_probes=1, centroid_distance_ratio=None,
+                              **PLAN)
 
     ann().collect()
     df, names = _job_names(spark, ann)
@@ -136,14 +147,71 @@ def test_warm_ann_is_two_jobs_with_literal_partition_filters(col, spark):
 
 
 def test_first_request_for_a_user_runs_one_collect(col, spark):
+    _ann(col, users=[0], **PLAN).collect()  # opens both segments' index tables
+    _, first = _job_names(spark, lambda: _ann(col, users=[1], **PLAN))
+    _, again = _job_names(spark, lambda: _ann(col, users=[1], **PLAN))
+    assert len(first) == len(again) + 1, (first, again)  # user 1 spans 2 segments
+    # an unknown user is kept as empty too: no second collect
+    _, unknown = _job_names(spark, lambda: _ann(col, users=[7], **PLAN))
+    _, unknown_again = _job_names(spark, lambda: _ann(col, users=[7], **PLAN))
+    assert len(unknown) == len(unknown_again) + 1, (unknown, unknown_again)
+
+
+def test_warm_ann_runs_no_job_and_plans_a_local_relation(col, spark):
+    for users in ([0], [0, 1]):  # ann and ann_multi
+        _ann(col, users=users).collect()
+        df, names = _job_names(spark, lambda: _ann(col, users=users))
+        assert names == [], (users, names)
+        assert "LocalTableScan" in _plan(df) and "FileScan" not in _plan(df)
+    # an unknown user: empty, and no job once its centroids are known
+    _ann(col, users=[7]).collect()
+    df, names = _job_names(spark, lambda: _ann(col, users=[7]))
+    assert names == [] and df.collect() == []
+
+
+def test_first_resident_request_runs_the_centroid_and_postings_collects(col, spark):
     _ann(col, users=[0]).collect()  # opens both segments' index tables
     _, first = _job_names(spark, lambda: _ann(col, users=[1]))
     _, again = _job_names(spark, lambda: _ann(col, users=[1]))
-    assert len(first) == len(again) + 1, (first, again)  # user 1 spans 2 segments
-    # an unknown user is kept as empty too: no second collect
-    _, unknown = _job_names(spark, lambda: _ann(col, users=[7]))
-    _, unknown_again = _job_names(spark, lambda: _ann(col, users=[7]))
-    assert len(unknown) == len(unknown_again) + 1, (unknown, unknown_again)
+    # one collect of user 1's centroids and one of its postings, both
+    # over the two segments that hold it
+    assert len(first) == 2 and again == [], (first, again)
+    assert col.resident_stats()["entries"] == 4
+
+
+def test_remove_then_reinsert_is_seen_by_the_same_handle(col, spark):
+    before = {r["id"]: r["score"] for r in _ann(col, users=[0]).collect()}
+    assert sorted(before) == [1, 2, 4]
+    col.remove([0], [1])
+    assert _ids(_ann(col, users=[0]).collect()) == [2, 4]
+    _, names = _job_names(spark, lambda: _ann(col, users=[0]))
+    assert names == []  # the tombstones are read once per listing
+    # the same doc again, with a later seq_no and another vector
+    _add_segment(col, spark, [(0, 1, [0.0, 0.0, 0.0, 2.0], "running late", "blog")])
+    after = {r["id"]: r["score"] for r in _ann(col, users=[0]).collect()}
+    assert sorted(after) == [1, 2, 4] and before[1] == 0.0
+    assert after[1] == pytest.approx(5 ** 0.5)  # scored from the new vector
+    col.remove([0], [2])  # a new tombstone file: read again
+    assert _ids(_ann(col, users=[0]).collect()) == [1, 4]
+
+
+def test_tiny_cap_falls_back_to_the_spark_plan(col, spark, tmp_path, monkeypatch):
+    want = _ann(col).collect()
+    assert col.resident_stats()["entries"] == 4
+    monkeypatch.setattr(collection_mod, "RESIDENT_POSTINGS_BYTES", 1)
+    fresh = Collection.open(spark, str(tmp_path), "rp")
+    df = _ann(fresh)
+    assert "FileScan" in _plan(df) and "LocalTableScan" not in _plan(df)
+    assert df.collect() == want
+    assert fresh.resident_stats()["entries"] == 0
+    # the same for the handle that holds them: the cap is read per fill
+    col._resident.drop(col.toc()["segments"])
+    assert "FileScan" in _plan(_ann(col))
+    assert _ann(col).collect() == want
+    # postings whose files exceed the cap are not even read
+    _, capped = _job_names(spark, lambda: _ann(col))
+    _, plan = _job_names(spark, lambda: _ann(col, **PLAN))
+    assert len(capped) == len(plan), (capped, plan)
 
 
 def test_new_segment_is_seen_by_the_same_handle(col, spark):
@@ -165,25 +233,34 @@ def _kept_centroids(col) -> set:
     return {seg for seg, kind in col._opened if kind == "centroids"}
 
 
+def _kept_postings(col) -> set:
+    return {seg for seg, _ in col._resident._entries}
+
+
 def test_gc_versions_evicts_deleted_segments(col, spark):
     _ann(col).collect()
     col.term_search_indexed([0], [("title", "run")], 10).collect()
     assert _kept_centroids(col) == set(col.toc()["segments"])
+    assert _kept_postings(col) == set(col.toc()["segments"])
     merged = col.merge_segments()
     col.build_index()
     gone = col.gc_versions(keep_latest=1)
     assert len(gone["segments"]) == 2
     assert _kept_centroids(col) == set()
+    assert _kept_postings(col) == set()
+    assert col.resident_stats()["bytes"] == 0
     assert os.listdir(os.path.join(col.root, "segments")) == [merged]
     assert _ids(_ann(col).collect()) == [1, 2, 3, 4, 5]
     assert {seg for seg, _ in col._opened} == {merged}
     assert _kept_centroids(col) == {merged}
+    assert _kept_postings(col) == {merged}
 
 
 def test_build_index_rewrite_drops_kept_centroids(col, spark, tmp_path):
     segs = col.toc()["segments"]
     _ann(col).collect()
     assert (segs[0], "centroids") in col._opened
+    assert _kept_postings(col) == set(segs)
     # a TOC that no longer lists the first segment's ivf index makes
     # build_index write it again, here with one centroid per user
     toc = col.toc()
@@ -191,6 +268,7 @@ def test_build_index_rewrite_drops_kept_centroids(col, spark, tmp_path):
     col.config.num_centroids = 1
     col.build_index()
     assert (segs[0], "centroids") not in col._opened
+    assert _kept_postings(col) == {segs[1]}
     fresh = Collection.open(spark, str(tmp_path), "rp")
 
     def probe(c):

@@ -41,9 +41,9 @@ def test_report_top_lang_deterministic_tie(spark):
     ]
     r = source_report(_docs(spark, rows), lang_col="lang").collect()[0]
     assert r["top_lang"] == "de" and r["n_langs"] == 2
+
+
 @pytest.mark.slow
-
-
 def test_report_contamination_rate(spark):
     leak = "alpha beta gamma delta epsilon zeta"
     rows = [

@@ -103,9 +103,9 @@ def test_precomputed_centroids_reused(spark, synth):
     a = sorted(map(tuple, semdedup(synth, centroids=cent).collect()))
     b = sorted(map(tuple, semdedup(synth, centroids=cent).collect()))
     assert a == b
+
+
 @pytest.mark.slow
-
-
 def test_two_level_full_probe_is_bit_identical(spark, synth, sf_dir):
     """The two-level assignment with meta_probes=None (every cell
     probed) must reproduce the flat assignment EXACTLY — candidate set

@@ -191,9 +191,9 @@ def test_ivf_sq_rerank_is_exact_on_fixture(spark, entry, sf):
         for a, b in con.execute(entry.oracle_sql()["v26_ivf_sq_rerank"]).fetchall()
     ]
     assert got == exp
+
+
 @pytest.mark.slow
-
-
 def test_ivf_sq_save_load_packed(spark, tmp_path):
     # the persisted SQ-IVF postings store packed binary codes; reload
     # restores array<int> codes and identical search results
@@ -213,9 +213,9 @@ def test_ivf_sq_save_load_packed(spark, tmp_path):
     b = ivf_search(back, qv, 5, num_probes=4, centroid_distance_ratio=None,
                    rerank=50, score_decimals=6).collect()
     assert [(r.id, r.score) for r in a] == [(r.id, r.score) for r in b]
+
+
 @pytest.mark.slow
-
-
 def test_ivf_sq_batch_matches_single(spark):
     from muopdb_spark.index.ivf import build_ivf, ivf_search, ivf_search_batch
 

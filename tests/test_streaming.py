@@ -222,9 +222,9 @@ def test_stream_ann_search_matches_batch(spark, tmp_path):
     assert got.select("query_id", "id", "score") \
               .exceptAll(want).count() == 0
     assert want.exceptAll(got.select("query_id", "id", "score")).count() == 0
+
+
 @pytest.mark.slow
-
-
 def test_stream_admission_incremental_dedup(spark, tmp_path):
     """Continuous corpus admission: batch 2's near-dup of a doc ADMITTED
     in batch 1 must be rejected — the signature artifact grows across
@@ -289,9 +289,9 @@ def test_stream_admission_incremental_dedup(spark, tmp_path):
         (20, 11, 1, "duplicate"),
         (22, 21, 1, "intra_duplicate"),
     }
+
+
 @pytest.mark.slow
-
-
 def test_admit_batch_replay_after_sig_only_crash(spark, tmp_path):
     """Crash-consistency contract (r16, signatures-before-corpus):
     a round that died AFTER the signature append but BEFORE the corpus
@@ -608,9 +608,9 @@ def test_stream_admission_blocklist_passthrough(spark, tmp_path):
     rejected = {(r["new_id"], r["reason"]) for r in
                 spark.read.parquet(rejected_path).collect()}
     assert rejected == {(11, "blocked")}
+
+
 @pytest.mark.slow
-
-
 def test_url_frontier_gate(spark, tmp_path):
     """r14 URL-frontier admission gate: canonical re-crawls are
     rejected reason='url_duplicate' before any content gate, the
@@ -668,9 +668,9 @@ def test_url_frontier_gate(spark, tmp_path):
     with __import__("pytest").raises(ValueError, match="url_col"):
         admit_batch(nb.drop("url"), 4, corpus, sig, rej,
                     url_state_path=state)
+
+
 @pytest.mark.slow
-
-
 def test_bloom_prefilter_is_outcome_invariant(spark, tmp_path):
     """The bloom pre-filter must not change WHO gets admitted or
     rejected — only how much exact-gate work runs."""

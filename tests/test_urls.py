@@ -165,9 +165,9 @@ def _domain_cap_single_window(df, *, cap, order_col=None):
         .filter(F.col("domain").isNull() | (F.col("_rn") <= cap))
         .drop("_rn")
     )
+
+
 @pytest.mark.slow
-
-
 def test_domain_cap_salted_matches_single_window(spark):
     # heavy skew: one whale domain with 400 rows, a handful of small
     # domains, quality ties, and relative URLs — the salted two-phase
