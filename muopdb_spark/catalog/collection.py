@@ -25,8 +25,10 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
     - searches read ONLY flushed segments (W5 read-your-writes boundary:
       core.rs:812-813 "not immediately searchable") and anti-join
       tombstones when any exist (V20); each segment's tables are opened
-      once per Collection handle, and warm unquantized ann requests rank
-      the postings the handle keeps resident on the driver (no Spark job)
+      once per Collection handle, warm unquantized ann requests rank the
+      postings the handle keeps resident on the driver, and warm term
+      requests evaluate their filter over the term index entries it
+      keeps resident there (no Spark job for either)
     - merge_segments / vacuum (S10, §4.2 compaction; optimizers/merge.rs:38,
       vacuum.rs:38) rewrite segments and swap the TOC; old versions remain
       readable (MVCC snapshots, core.rs:978-1011) until garbage-collected
@@ -49,12 +51,17 @@ from dataclasses import asdict, dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
+from muopdb_spark.filters.compiler import (
+    KEY_SEP, FilterSchema, compile_keys, compile_sets, term_search as _term_scan,
+)
 from muopdb_spark.functions.distance import score_np
+from muopdb_spark.functions.text import stemmed_tokens
 from muopdb_spark.index.multi_ivf import (
     build_multi_ivf, centroid_arrays, multi_ivf_load, multi_ivf_save, probe,
     probed_filter, rank,
@@ -67,6 +74,7 @@ from muopdb_spark.index.quantizer import QUANTIZERS, lookup
 RESIDENT_POSTINGS_BYTES = 1 << 30
 
 _ANN_SCHEMA = "user_id long, id long, score double"
+_NO_IDS = np.zeros(0, dtype=np.int64)
 
 
 @dataclass
@@ -177,22 +185,31 @@ def _local(spark: SparkSession, ddl: str, **columns) -> DataFrame:
         {f.name: columns.get(f.name, []) for f in arrow}, schema=arrow), struct)
 
 
+def _users_by_segment(keys) -> dict[str, list[int]]:
+    """segment -> users of (segment, user, kind) resident entry keys."""
+    by_seg: dict[str, list[int]] = {}
+    for s, u, _ in keys:
+        by_seg.setdefault(s, []).append(u)
+    return by_seg
+
+
 def _nbytes(entry) -> int:
     """numpy nbytes of one entry's posting arrays."""
     return sum(a.nbytes for a in entry)
 
 
 class _ResidentPostings:
-    """(segment, user) -> that user's postings in the segment as arrays
-    (centroid_id, id, seq_no: int64; vector: float64 matrix), one LRU
-    per Collection handle capped by numpy nbytes at
-    RESIDENT_POSTINGS_BYTES — the analog of the reference's block cache
-    (rs/utils/src/block_cache/cache.rs). Hits and misses count (segment,
-    user) lookups; a lock guards every access."""
+    """(segment, user, kind) -> numpy arrays of that user's part of the
+    segment's `kind` index, one LRU per Collection handle capped by
+    numpy nbytes at RESIDENT_POSTINGS_BYTES — the analog of the
+    reference's block cache (rs/utils/src/block_cache/cache.rs). Kind
+    "ivf" holds the ann postings (_fetch_postings), kind "terms" the
+    term index and doc visibility (_fetch_terms). Hits and misses count
+    entry lookups; a lock guards every access."""
 
     def __init__(self):
         self._lock = threading.Lock()
-        self._entries: OrderedDict[tuple[str, int], tuple] = OrderedDict()
+        self._entries: OrderedDict[tuple, tuple] = OrderedDict()
         self.nbytes = self.hits = self.misses = self.evictions = 0
 
     def take(self, keys) -> dict:
@@ -226,11 +243,13 @@ class _ResidentPostings:
                 self._entries[key] = e
                 self.nbytes += size
 
-    def drop(self, segments) -> None:
-        """Forget every entry of `segments` (rewritten or deleted)."""
+    def drop(self, segments, kinds=None) -> None:
+        """Forget the entries of `segments` (rewritten or deleted), only
+        those of `kinds` when given."""
         with self._lock:
             segments = set(segments)
-            for key in [k for k in self._entries if k[0] in segments]:
+            for key in [k for k in self._entries
+                        if k[0] in segments and (kinds is None or k[2] in kinds)]:
                 self.nbytes -= _nbytes(self._entries.pop(key))
 
     def stats(self) -> dict:
@@ -327,9 +346,10 @@ class Collection:
         # reference's reopen-as-ImmutableSegment at flush (core.rs:
         # 928-950): later requests reuse its file listing and schema.
         self._opened: dict[tuple[str, str], object] = {}
-        # ann postings kept on the driver (_resident_postings), and the
-        # newest tombstone per (user, doc) with the tombstone directory
-        # listing it was read under (_tomb_latest_map)
+        # ann postings and term index entries kept on the driver
+        # (_resident_postings, _resident_terms), and the newest tombstone
+        # per (user, doc) with the tombstone directory listing it was
+        # read under (_tomb_latest_map)
         self._resident = _ResidentPostings()
         self._tomb_kept: tuple[tuple[str, ...], dict] | None = None
 
@@ -692,25 +712,46 @@ class Collection:
             pre_filter=pre_filter,
         )
 
-    def term_search(self, user_ids, filter_tree, limit, *, version=None) -> DataFrame:
-        """§3.2 TermSearch over flushed docs."""
-        from muopdb_spark.filters.compiler import FilterSchema, term_search
-        from muopdb_spark.functions.text import stemmed_tokens
+    def _term_fields(self) -> dict:
+        return {f: t for f, t in self.config.attribute_schema.items()
+                if _attr_kind(t) in ("text", "keyword")}
 
+    def term_search(self, user_ids, filter_tree, limit, *, version=None) -> DataFrame:
+        """§3.2 TermSearch over flushed docs, answered as the reference
+        does (planner.rs:41-169, snapshot.rs:82-94): the filter tree is
+        compiled once on the driver (compile_sets) and evaluated per
+        (segment, user) over that user's term index and visible docs,
+        which this handle keeps resident (_resident_terms); the union of
+        the matches is sorted, deduplicated and cut to `limit` and
+        returned as a local relation. A user's first request runs the
+        two collects that fill its entries, a warm one no Spark job.
+
+        The scan takes over when a segment has no terms index yet (no
+        build_index since its flush), when the entries do not fit in
+        RESIDENT_POSTINGS_BYTES, or when a doc has several rows in one
+        segment (the index cannot tell which row a term came from): it
+        tokenizes and stems every flushed doc's fields and filters them
+        with compile_filter. Both give the same rows."""
+        schema = FilterSchema(self._term_fields())
+        evaluate = compile_sets(filter_tree, schema)
+        toc = self.toc(version)
+        segs, indexes = toc["segments"], toc.get("indexes", {})
+        users = [int(u) for u in dict.fromkeys(user_ids)]
+        if all("terms" in indexes.get(s, []) for s in segs):
+            entries = self._resident_terms(segs, users)
+            if entries is not None and not any(len(e[5]) for e in entries.values()):
+                hits = [ids for _, ids in self._term_hits(entries, evaluate)]
+                ids = np.unique(np.concatenate([_NO_IDS] + hits))
+                return _local(self.spark, "doc_id long", doc_id=ids[:limit])
         docs = self.docs(version=version)
-        schema_fields = {
-            f: t for f, t in self.config.attribute_schema.items()
-            if _attr_kind(t) in ("text", "keyword")
-        }
-        schema = FilterSchema(schema_fields)
         for fld in schema.fields:
             if schema.kind(fld) == "text":
                 docs = docs.withColumn(
                     fld + "_tokens",
                     stemmed_tokens(F.col(fld), schema.language(fld)),
                 )
-        return term_search(docs, filter_tree, schema, limit,
-                           id_col="doc_id", user_ids=user_ids)
+        return _term_scan(docs, filter_tree, schema, limit,
+                          id_col="doc_id", user_ids=user_ids)
 
     # ------------------------------------------------------ maintenance
 
@@ -966,19 +1007,16 @@ class Collection:
         indexes = {s: list(v) for s, v in toc.get("indexes", {}).items()}
         q = lookup(self.config.quantizer, multi_user=True)
         codebook = self._load_or_train_codebook(q) if q is not None else None
-        term_fields = {
-            f: t for f, t in self.config.attribute_schema.items()
-            if _attr_kind(t) in ("text", "keyword")
-        }
+        term_fields = self._term_fields()
         built = []
         for seg in toc["segments"]:
             have = set(indexes.get(seg, []))
             # an index the TOC does not list yet may be rewritten below:
             # never keep a handle opened on an earlier write of it
             stale = {"ivf", "terms"} - have
+            self._resident.drop([seg], stale)
             if "ivf" in stale:
                 stale.add("centroids")  # read from the ivf index
-                self._resident.drop([seg])
             for kind in stale:
                 self._opened.pop((seg, kind), None)
             if "ivf" not in have:
@@ -1068,14 +1106,12 @@ class Collection:
                 pairs[s] = probed
         return pairs
 
-    def _fetch_postings(self, keys: list[tuple[str, int]]) -> dict:
-        """(segment, user) -> (centroid_id, id, seq_no, vector) arrays of
-        that user's postings in the segment, by ONE collect over those
-        segments' postings filtered to those users. A user without
-        postings in a segment gets empty arrays."""
-        by_seg: dict[str, list[int]] = {}
-        for s, u in keys:
-            by_seg.setdefault(s, []).append(u)
+    def _fetch_postings(self, keys: list[tuple]) -> dict:
+        """(segment, user, "ivf") -> (centroid_id, id, seq_no, vector)
+        arrays of that user's postings in the segment, by ONE collect
+        over those segments' postings filtered to those users. A user
+        without postings in a segment gets empty arrays."""
+        by_seg = _users_by_segment(keys)
         segs = list(by_seg)
         t = _union([
             self.load_segment_index(s).postings.filter(F.col("user_id").isin(by_seg[s]))
@@ -1087,43 +1123,139 @@ class Collection:
         vec = np.asarray(t.column("vector").combine_chunks().flatten(), dtype=np.float64)
         vec = vec.reshape(len(ids), self.config.num_features)
         out = {}
-        for s, u in keys:
-            m = (seg == segs.index(s)) & (user == u)
-            out[(s, u)] = (cid[m], ids[m], seq[m], vec[m])
+        for key in keys:
+            m = (seg == segs.index(key[0])) & (user == key[1])
+            out[key] = (cid[m], ids[m], seq[m], vec[m])
         return out
 
-    def _resident_postings(self, pairs: dict[str, dict]) -> tuple | None:
-        """The probed postings of `pairs` as (user_id, id, seq_no, vector)
-        arrays from the postings this handle keeps on the driver, or None
-        when the request's (segment, user) entries do not fit in
-        RESIDENT_POSTINGS_BYTES together. Entries not kept yet are filled
-        by one collect (_fetch_postings), unless their files on disk
-        already exceed the cap: those are not read."""
-        keys = [(s, u) for s, probed in pairs.items() for u in probed]
+    def _terms_table(self, seg: str) -> DataFrame:
+        return self._open_once(seg, "terms", lambda: self.spark.read.parquet(
+            self._seg_index_dir(seg, "terms")))
+
+    def _fetch_terms(self, keys: list[tuple]) -> dict:
+        """(segment, user, "terms") -> (keys, offsets, postings, docs,
+        seq, multi) arrays of that user's part of the segment: the term
+        index's sorted term_key strings, each key's posting list as
+        postings[offsets[i]:offsets[i + 1]], the user's doc ids in the
+        segment with the newest seq_no of each, and the doc ids that
+        have more than one row there. Filled by one collect over those
+        segments' terms tables and one over their docs (user_id, doc_id
+        and seq_no only), filtered to those users."""
+        by_seg = _users_by_segment(keys)
+        segs = list(by_seg)
+        t = _union([
+            self._terms_table(s).filter(F.col("user_id").isin(by_seg[s]))
+            .select(F.lit(i).alias("_seg"), "user_id", "field", "term", "postings")
+            for i, s in enumerate(segs)
+        ]).toArrow()
+        d = _union([
+            self.segment_docs(s).filter(F.col("user_id").isin(by_seg[s]))
+            .select(F.lit(i).alias("_seg"), "user_id", "doc_id", "seq_no")
+            for i, s in enumerate(segs)
+        ]).toArrow()
+        t_seg, t_user = (np.asarray(t.column(c), dtype=np.int64) for c in ("_seg", "user_id"))
+        names = np.asarray(pc.binary_join_element_wise(
+            t.column("field"), t.column("term"), KEY_SEP), dtype=object)
+        lists = t.column("postings").combine_chunks()
+        offsets = np.asarray(lists.offsets, dtype=np.int64)
+        offsets -= offsets[0]
+        flat = np.asarray(lists.flatten(), dtype=np.int64)
+        d_seg, d_user, d_doc, d_seq = (np.asarray(d.column(c), dtype=np.int64) for c in (
+            "_seg", "user_id", "doc_id", "seq_no"))
+        out = {}
+        for key in keys:
+            i, u = segs.index(key[0]), key[1]
+            rows = np.flatnonzero((t_seg == i) & (t_user == u))
+            rows = rows[np.argsort(names[rows], kind="stable")]
+            starts, lengths = offsets[rows], offsets[rows + 1] - offsets[rows]
+            offs = np.zeros(len(rows) + 1, dtype=np.int64)
+            np.cumsum(lengths, out=offs[1:])
+            postings = flat[np.repeat(starts - offs[:-1], lengths) + np.arange(offs[-1])]
+            m = (d_seg == i) & (d_user == u)
+            o = np.lexsort((d_seq[m], d_doc[m]))
+            doc, seq = d_doc[m][o], d_seq[m][o]
+            last = np.ones(len(doc), dtype=bool)
+            last[:-1] = doc[1:] != doc[:-1]
+            out[key] = (np.asarray(names[rows], dtype=str), offs, postings,
+                        doc[last], seq[last], np.unique(doc[~last]))
+        return out
+
+    def _resident_entries(self, keys: list[tuple], files, fetch) -> dict | None:
+        """The resident entries for `keys`, those not kept yet filled by
+        `fetch(missing)`, or None when they do not fit in
+        RESIDENT_POSTINGS_BYTES together. A missing entry whose files on
+        disk (`files(segment, user)`) already exceed the cap is not
+        read."""
         got = self._resident.take(keys)
         missing = [key for key in keys if key not in got]
-        on_disk = sum(_dir_bytes(os.path.join(
-            self._seg_index_dir(s, "ivf"), "postings", f"user_id={u}")) for s, u in missing)
+        on_disk = sum(_dir_bytes(f) for s, u, _ in missing for f in files(s, u))
         if sum(map(_nbytes, got.values())) + on_disk > RESIDENT_POSTINGS_BYTES:
             return None
         if missing:
-            fetched = self._fetch_postings(missing)
+            fetched = fetch(missing)
             self._resident.put(fetched)
             got.update(fetched)
             if sum(map(_nbytes, got.values())) > RESIDENT_POSTINGS_BYTES:
                 return None
+        return got
+
+    def _resident_postings(self, pairs: dict[str, dict]) -> tuple | None:
+        """The probed postings of `pairs` as (user_id, id, seq_no, vector)
+        arrays from the postings this handle keeps on the driver, or None
+        when the request's entries do not fit in RESIDENT_POSTINGS_BYTES
+        (_resident_entries)."""
+        got = self._resident_entries(
+            [(s, u, "ivf") for s, probed in pairs.items() for u in probed],
+            lambda s, u: [os.path.join(self._seg_index_dir(s, "ivf"), "postings",
+                                       f"user_id={u}")],
+            self._fetch_postings)
+        if got is None:
+            return None
         parts = []
         for s, probed in pairs.items():
             for u, cids in probed.items():
-                cid, ids, seq, vec = got[(s, u)]
+                cid, ids, seq, vec = got[(s, u, "ivf")]
                 m = np.isin(cid, cids)
                 parts.append((np.full(int(m.sum()), u, dtype=np.int64), ids[m], seq[m], vec[m]))
         return tuple(np.concatenate(p) for p in zip(*parts))
 
+    def _resident_terms(self, segs: list[str], users: list[int]) -> dict | None:
+        """Each (segment, user)'s term index entry (_fetch_terms) from
+        this handle's resident entries, or None when they do not fit in
+        RESIDENT_POSTINGS_BYTES (_resident_entries)."""
+        return self._resident_entries(
+            [(s, u, "terms") for s in segs for u in users],
+            lambda s, u: [os.path.join(self._seg_index_dir(s, "terms"), f"user_id={u}"),
+                          os.path.join(self._segment_dir(s), "docs", f"user_id={u}")],
+            self._fetch_terms)
+
+    def _term_hits(self, entries: dict, evaluate) -> list[tuple[int, np.ndarray]]:
+        """(user, doc ids) per resident term entry: `evaluate` (a
+        compile_sets / compile_keys function) over the entry's postings
+        and visible docs, kept to the visible ones. Visible means the
+        doc's newest seq_no in that segment is above the newest
+        tombstone for (user, doc): the scan's seq_no-aware mask, applied
+        per segment."""
+        tomb = self._tomb_latest_map()  # V20
+        hits = []
+        for (_, u, _), (keys, offsets, postings, docs, seq, _) in entries.items():
+            if tomb:
+                docs = docs[seq > np.array([tomb.get((u, d), -1) for d in docs.tolist()],
+                                           dtype=np.int64)]
+
+            def lookup(key, keys=keys, offsets=offsets, postings=postings):
+                i = int(np.searchsorted(keys, key))
+                if i < len(keys) and keys[i] == key:
+                    return postings[offsets[i]:offsets[i + 1]]
+                return postings[:0]
+
+            hits.append((u, np.intersect1d(evaluate(lookup, docs), docs)))
+        return hits
+
     def resident_stats(self) -> dict:
-        """The resident ann postings of this handle: bytes, entries,
-        cap_bytes, hits, misses and evictions ((segment, user)
-        lookups)."""
+        """The resident entries of this handle, ann postings and term
+        index entries together: bytes, entries, cap_bytes, hits, misses
+        and evictions (entry lookups)."""
         return self._resident.stats()
 
     def _tomb_latest_map(self) -> dict:
@@ -1159,10 +1291,13 @@ class Collection:
             keep &= np.array([tomb.get((u, i), -1) < s for u, i, s in
                               zip(user.tolist(), ids.tolist(), seq.tolist())], dtype=bool)
         if pre_filter_ids is not None and keep.any():
-            # only the candidates' ids can pass, so only those are read
-            allowed = pre_filter_ids.select("id").filter(
-                F.col("id").isin(np.unique(ids[keep]).tolist())).toArrow().column("id")
-            keep &= np.isin(ids, np.asarray(allowed.drop_null(), dtype=np.int64))
+            # only ids in the candidates' range can pass, so only those
+            # are read: a range filter (isin makes one py4j call per id)
+            # collected as rows (toArrow runs a job even on a local
+            # relation, which collect does not)
+            lo, hi = int(ids[keep].min()), int(ids[keep].max())
+            rows = pre_filter_ids.select("id").filter(F.col("id").between(lo, hi)).collect()
+            keep &= np.isin(ids, np.array([r[0] for r in rows], dtype=np.int64))
         user, ids = user[keep], ids[keep]
         score = score_np(self.config.metric, vec[keep], query_vector)
         # min per (user, id): the first row of each group in (user, id,
@@ -1231,8 +1366,10 @@ class Collection:
         RESIDENT_POSTINGS_BYTES, _ann_resident ranks the handle's kept
         posting arrays in numpy and returns a local relation. A user's
         first request then runs the centroid and postings collects, a
-        warm one no Spark job (one collect for pre_filter_ids, plus one
-        when the tombstone directory changed). Otherwise _ann_plan runs
+        warm one no Spark job (plus one when the tombstone directory
+        changed; pre_filter_ids is read over the candidates' id range,
+        which runs no job on a local relation such as
+        term_search_indexed's). Otherwise _ann_plan runs
         phase 2 as one Spark plan. Both give the same rows. Each
         segment's index tables are opened once per handle
         (load_segment_index), so a warm request lists no files and
@@ -1258,40 +1395,61 @@ class Collection:
     def term_search_indexed(self, user_ids, terms, limit: int, *, mode: str = "and",
                             version: int | None = None) -> DataFrame:
         """§3.2 TermSearch over the DURABLE per-segment term indexes
-        (terms/writer.rs on-disk layout analog): union the segments'
-        term tables, filter to the queried (field, term) pairs, explode
-        postings, intersect/union, dedup across segments, sort + limit
-        (snapshot.rs:141-146)."""
+        (terms/writer.rs on-disk layout analog) for exact (field, term)
+        pairs: the docs holding all of them (mode "and") or any (mode
+        "or") in one segment, among the user's visible docs there, as
+        unique (user_id, doc_id) pairs ordered by (doc_id, user_id) and
+        cut to `limit` (snapshot.rs:141-146). Answered on the driver from
+        the handle's resident term entries (compile_keys, _term_hits) as
+        a local relation; _term_plan runs the same as a Spark plan when
+        the entries do not fit in RESIDENT_POSTINGS_BYTES."""
         segs = self._indexed_segments("terms", version)
         if not segs or not terms:
             return _local(self.spark, "user_id long, doc_id long")
-        users = [int(u) for u in user_ids]
-        index = _union([
-            self._open_once(s, "terms", lambda s=s: self.spark.read.parquet(
-                self._seg_index_dir(s, "terms")))
-            for s in segs
-        ]).filter(F.col("user_id").isin(users))
+        users = [int(u) for u in dict.fromkeys(user_ids)]
+        entries = self._resident_terms(segs, users)
+        if entries is None:
+            return self._term_plan(segs, users, terms, limit, mode)
+        hits = self._term_hits(entries, compile_keys(terms, mode))
+        user = np.concatenate([_NO_IDS] + [np.full(len(ids), u, dtype=np.int64)
+                                           for u, ids in hits])
+        doc = np.concatenate([_NO_IDS] + [ids for _, ids in hits])
+        o = np.lexsort((user, doc))
+        user, doc = user[o], doc[o]
+        first = np.ones(len(doc), dtype=bool)
+        first[1:] = (doc[1:] != doc[:-1]) | (user[1:] != user[:-1])
+        return _local(self.spark, "user_id long, doc_id long",
+                      user_id=user[first][:limit], doc_id=doc[first][:limit])
+
+    def _term_plan(self, segs: list[str], users: list[int], terms, limit: int,
+                   mode: str) -> DataFrame:
+        """term_search_indexed as one Spark plan: per segment, the
+        queried pairs' postings exploded and intersected (a distinct-pair
+        count) or unioned, then semi-joined to that segment's
+        tombstone-masked docs, since index postings carry no seq_no (a
+        doc removed and re-inserted elsewhere must not match on its old
+        terms); the segments' hits are unioned, deduplicated, sorted and
+        cut. The index is built from segment_docs, so without tombstones
+        the join could drop nothing and is not planned."""
         cond = functools.reduce(operator.or_, [
             (F.col("field") == f_) & (F.col("term") == t_) for f_, t_ in terms])
-        matched = index.filter(cond).select(
-            "user_id", "field", "term", F.explode("postings").alias("doc_id"))
-        if mode == "and":
-            hits = (
-                matched.groupBy("user_id", "doc_id")
-                .agg(F.countDistinct("field", "term").alias("n"))
-                .filter(F.col("n") == len(terms))
-                .select("user_id", "doc_id")
-            )
-        else:
-            hits = matched.select("user_id", "doc_id").distinct()
-        # visibility = the docs table's (seq_no-aware tombstone-masked)
-        # view; index postings carry no seq_no, so the mask is a semi
-        # join against the masked doc ids (2-column pruned scan). The
-        # index is built from segment_docs, so without tombstones the
-        # join could drop nothing and is not planned.
-        if self._has_tombstones():
-            hits = hits.join(
-                self.docs(version=version).select("user_id", "doc_id").distinct(),
-                on=["user_id", "doc_id"], how="left_semi",
-            )
-        return hits.orderBy("doc_id").limit(limit)
+        masked = self._has_tombstones()
+        parts = []
+        for s in segs:
+            matched = self._terms_table(s).filter(F.col("user_id").isin(users) & cond).select(
+                "user_id", "field", "term", F.explode("postings").alias("doc_id"))
+            if mode == "and":
+                hits = (
+                    matched.groupBy("user_id", "doc_id")
+                    .agg(F.countDistinct("field", "term").alias("n"))
+                    .filter(F.col("n") == len({(f_, t_) for f_, t_ in terms}))
+                    .select("user_id", "doc_id")
+                )
+            else:
+                hits = matched.select("user_id", "doc_id")
+            if masked:
+                visible = self._apply_tombstones(self.segment_docs(s))
+                hits = hits.join(visible.select("user_id", "doc_id"),
+                                 on=["user_id", "doc_id"], how="left_semi")
+            parts.append(hits)
+        return _union(parts).distinct().orderBy("doc_id", "user_id").limit(limit)

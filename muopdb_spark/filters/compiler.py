@@ -25,6 +25,13 @@ Semantics matrix (planner.rs:244-493 is the test model):
   - Ids: membership in a literal id list; sorted/deduped by isin.
   - Empty And/Or/missing filter => matches nothing (planner.rs:124-148).
 
+Driver target (compile_sets): the same tree compiled to a function over
+sorted doc-id arrays, evaluated once per (segment, user) against that
+user's resident term index (Collection.term_search). This is the
+reference's own planner target — posting lists combined per user —
+with numpy set algebra (intersect1d / union1d / setdiff1d) in place of
+leapfrog iterators.
+
 JSON encoding (FIXTURES.md F4):
     {"and": [f, ...]} | {"or": [f, ...]}
     {"contains": {"path": p, "value": v}}
@@ -35,9 +42,11 @@ JSON encoding (FIXTURES.md F4):
 
 from __future__ import annotations
 
+import functools
 import json
-from typing import Any
+from typing import Any, Callable
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -139,7 +148,8 @@ def compile_filter(
     if "not_contains" in tree:
         node = tree["not_contains"]
         inner = _contains(node["path"], node["value"], schema, stem=stem)
-        # NULL-safe negation: a row whose tokens column is null should not match
+        # NULL-safe negation: a row whose field is null (so its Contains
+        # is null) matches, as a doc without a posting does on the driver
         return ~F.coalesce(inner, F.lit(False))
     if "ids" in tree:
         ids = sorted(set(tree["ids"]))
@@ -147,6 +157,91 @@ def compile_filter(
             return F.lit(False)
         return F.col(id_col).isin(ids)
     raise ValueError(f"unknown DocumentFilter node: {list(tree)}")
+
+
+# ------------------------------------------------------ driver target
+
+# (postings, visible) -> doc ids: postings(key) gives the sorted doc ids
+# of one term_key in a (segment, user)'s term index, visible the sorted
+# ids of that user's visible docs in the segment.
+SetFilter = Callable[[Callable[[str], np.ndarray], np.ndarray], np.ndarray]
+
+_NO_IDS = np.zeros(0, dtype=np.int64)
+
+# joins a (field, term) pair into one key; the reference keys
+# "{field}:{term}" (mutable_segment.rs:92), but a field name may hold ":"
+KEY_SEP = "\x1f"
+
+
+def term_key(field: str, term: Any) -> str:
+    """The key of one (field, term) posting list in a resident term
+    index (build_term_index's field and term columns)."""
+    return f"{field}{KEY_SEP}{term}"
+
+
+def _nothing(postings, visible) -> np.ndarray:
+    return _NO_IDS
+
+
+def _key(key: str) -> SetFilter:
+    return lambda postings, visible: postings(key)
+
+
+def _all(kids: list[SetFilter]) -> SetFilter:
+    if not kids:
+        return _nothing
+    return lambda p, v: functools.reduce(np.intersect1d, [k(p, v) for k in kids])
+
+
+def _any(kids: list[SetFilter]) -> SetFilter:
+    if not kids:
+        return _nothing
+    return lambda p, v: functools.reduce(np.union1d, [k(p, v) for k in kids])
+
+
+def _contains_sets(path: str, value: Any, schema: FilterSchema, *, stem: bool) -> SetFilter:
+    if schema.kind(path) == "keyword":
+        # a null value matches nothing, as `col == NULL` in _contains
+        return _nothing if value is None else _key(term_key(path, value))
+    toks = _tokenize_value(str(value), schema.language(path), stem=stem)
+    return _all([_key(term_key(path, t)) for t in toks])
+
+
+def compile_sets(tree: dict | str | None, schema: FilterSchema, *,
+                 stem: bool = True) -> SetFilter:
+    """Compile a DocumentFilter JSON tree for the driver, with
+    compile_filter's semantics: And intersects, Or unions, Contains
+    looks up the value's (stemmed) tokens' keys and intersects them,
+    NotContains is the visible docs minus its Contains, Ids is the
+    literal ids among the visible docs, and an empty filter, And or Or
+    or a value without tokens matches nothing. Leaves may return ids of
+    docs that are not visible; the caller keeps the visible ones."""
+    if isinstance(tree, str):
+        tree = json.loads(tree) if tree.strip() else {}
+    if tree is None or tree == {}:
+        return _nothing
+    if "and" in tree:
+        return _all([compile_sets(c, schema, stem=stem) for c in tree["and"]])
+    if "or" in tree:
+        return _any([compile_sets(c, schema, stem=stem) for c in tree["or"]])
+    if "contains" in tree:
+        node = tree["contains"]
+        return _contains_sets(node["path"], node["value"], schema, stem=stem)
+    if "not_contains" in tree:
+        node = tree["not_contains"]
+        inner = _contains_sets(node["path"], node["value"], schema, stem=stem)
+        return lambda p, v: np.setdiff1d(v, inner(p, v))
+    if "ids" in tree:
+        ids = np.unique(np.asarray(tree["ids"], dtype=np.int64))
+        return lambda p, v: np.intersect1d(ids, v, assume_unique=True)
+    raise ValueError(f"unknown DocumentFilter node: {list(tree)}")
+
+
+def compile_keys(terms: list[tuple[str, str]], mode: str = "and") -> SetFilter:
+    """term_search_indexed's driver target: the AND (mode "and") or OR
+    of exact (field, term) keys; a repeated pair counts once."""
+    kids = [_key(term_key(f, t)) for f, t in dict.fromkeys((f, t) for f, t in terms)]
+    return _all(kids) if mode == "and" else _any(kids)
 
 
 def term_search(

@@ -105,7 +105,7 @@ def term_search_indexed(
 ) -> DataFrame:
     """TermSearch via the index: fetch the queried terms' index rows
     (broadcast-sized filter), explode their postings, then AND =
-    count-of-matched-terms equality (F2's leapfrog intersection as a
+    count-of-distinct-matched-pairs equality (F2's leapfrog intersection as a
     groupBy) or OR = distinct union (F3), sorted + limited
     (snapshot.rs:141-146). Fully distributed — only the queried terms'
     postings are ever materialized."""
@@ -123,7 +123,7 @@ def term_search_indexed(
         hits = (
             matched.groupBy("doc_id")
             .agg(F.countDistinct("field", "term").alias("n_terms"))
-            .filter(F.col("n_terms") == len(terms))
+            .filter(F.col("n_terms") == len({(f, t) for f, t in terms}))
             .select("doc_id")
         )
     else:

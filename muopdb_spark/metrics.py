@@ -57,7 +57,8 @@ class EngineMetrics:
     request_latency_ms histogram per request_name, plus the internal
     gauges (num_collections, num_active_segments, num_searchable_docs
     and the handle's resident_postings_* cache figures per
-    collection)."""
+    collection, which count its resident ann postings and term index
+    entries together)."""
 
     def __init__(self) -> None:
         self.num_requests: dict[tuple[str, str], int] = defaultdict(int)
@@ -114,8 +115,9 @@ class EngineMetrics:
 
     def set_collection_gauges(self, collection) -> None:
         """internal.rs gauges from a Collection: active segments,
-        searchable (live) docs, and the handle's resident ann postings:
-        bytes, entries, cap_bytes, hits, misses and evictions."""
+        searchable (live) docs, and the handle's resident entries (ann
+        postings and term index entries): bytes, entries, cap_bytes,
+        hits, misses and evictions."""
         st = collection.stats()
         name = collection.config.name
         self.gauges[("num_active_segments", name)] = float(len(st))

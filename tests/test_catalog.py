@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from muopdb_spark.catalog import collection as collection_mod
 from muopdb_spark.catalog.collection import Collection, CollectionConfig
 
 
@@ -270,6 +271,52 @@ def test_term_search_indexed_durable(col, spark):
     got = col.term_search_indexed([0, 1], [("title", "run")], 10)
     assert [r["doc_id"] for r in got.collect()] == [5]
     assert got.columns == ["user_id", "doc_id"]
+
+
+def _both_term_paths(col, spark, tmp_path, monkeypatch, request):
+    """term_search_indexed's rows on the resident path, then on the Spark
+    plan (a fresh handle with the byte cap at 1)."""
+    got = [tuple(r) for r in request(col).collect()]
+    monkeypatch.setattr(collection_mod, "RESIDENT_POSTINGS_BYTES", 1)
+    plan = [tuple(r) for r in request(
+        Collection.open(spark, str(tmp_path), col.config.name)).collect()]
+    monkeypatch.undo()
+    return got, plan
+
+
+def test_term_search_indexed_masks_each_segment(col, spark, tmp_path, monkeypatch):
+    """A doc removed and then re-inserted into a later segment matches
+    only on its new row's terms: the old segment's postings are masked
+    by that segment's rows, not by the doc's newest row anywhere."""
+    v = [1.0, 0.0, 0.0, 0.0]
+    col.insert(_docs_df(spark, [(0, 1, v, "apple pie", "news", 1),
+                                (0, 2, v, "apple tart", "blog", 2)]))
+    col.flush()
+    col.remove([0], [1])
+    col.insert(_docs_df(spark, [(0, 1, v, "banana split", "news", 3)]))
+    col.flush()
+    col.build_index()
+    apple = {"contains": {"path": "title", "value": "apple"}}
+    assert [r["doc_id"] for r in col.term_search([0], apple, 10).collect()] == [2]
+    for terms, want in (([("title", "appl")], [(0, 2)]),
+                        ([("title", "banana")], [(0, 1)]),
+                        ([("title", "appl"), ("title", "pie")], [])):
+        got, plan = _both_term_paths(
+            col, spark, tmp_path, monkeypatch,
+            lambda c: c.term_search_indexed([0], terms, 10))
+        assert got == plan == want, terms
+
+
+def test_term_search_indexed_and_counts_a_repeated_pair_once(col, spark, tmp_path,
+                                                             monkeypatch):
+    col.insert(_docs_df(spark, R1)); col.insert(_docs_df(spark, R2))
+    col.flush()
+    col.build_index()
+    for terms in ([("title", "run")] * 2, [("title", "run"), ("category", "news")] * 2):
+        got, plan = _both_term_paths(
+            col, spark, tmp_path, monkeypatch,
+            lambda c: c.term_search_indexed([0, 1], terms, 10))
+        assert got == plan == [(0, 1), (1, 5)], terms
 
 
 def test_term_search_indexed_empty_collection(col):

@@ -23,15 +23,23 @@ CORPUS = [
 ]
 
 
-def leaf_contains():
-    return st.one_of(
-        st.sampled_from(VOCAB + ["zzz"]).map(
-            lambda w: {"contains": {"path": "body", "value": w}}
+def tree_strategy(words, cats, max_id):
+    """Random DocumentFilter trees over a text field `body` (Contains
+    values drawn from `words`), a keyword field `cat` (from `cats`) and
+    doc ids 0..max_id, with And / Or / NotContains nodes."""
+    leaf = st.one_of(
+        st.sampled_from(words).map(lambda w: {"contains": {"path": "body", "value": w}}),
+        st.sampled_from(cats).map(lambda c: {"contains": {"path": "cat", "value": c}}),
+        st.lists(st.integers(0, max_id), max_size=4).map(lambda ids: {"ids": ids}),
+    )
+    return st.recursive(
+        leaf,
+        lambda kids: st.one_of(
+            st.lists(kids, max_size=3).map(lambda c: {"and": c}),
+            st.lists(kids, max_size=3).map(lambda c: {"or": c}),
+            kids.map(_negate),
         ),
-        st.sampled_from(CATS + ["nope"]).map(
-            lambda c: {"contains": {"path": "cat", "value": c}}
-        ),
-        st.lists(st.integers(0, 15), max_size=4).map(lambda ids: {"ids": ids}),
+        max_leaves=6,
     )
 
 
@@ -41,15 +49,7 @@ def _negate(leaf):
     return leaf
 
 
-trees = st.recursive(
-    leaf_contains(),
-    lambda kids: st.one_of(
-        st.lists(kids, max_size=3).map(lambda c: {"and": c}),
-        st.lists(kids, max_size=3).map(lambda c: {"or": c}),
-        kids.map(_negate),
-    ),
-    max_leaves=6,
-)
+trees = tree_strategy(VOCAB + ["zzz"], CATS + ["nope"], 15)
 
 
 def py_eval(tree, doc) -> bool:

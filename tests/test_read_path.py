@@ -1,14 +1,17 @@
 """Serve read path: each immutable segment table is opened once per
 Collection handle, ann_search probes centroids on the driver from
-per-(segment, user) arrays the handle keeps, ranks a warm unquantized
-request on the driver from the postings the handle keeps resident, and
-no tombstone mask is planned while no tombstone file exists. Pins the
-wins (a warm request infers no parquet schema; a warm resident ann
-request runs no Spark job and plans a local relation; a request that
-takes the Spark plan runs at most two jobs and plans no window,
-broadcast or anti join) and the rules that keep the caches honest
-(removes, re-inserts, new segments, index rewrites, garbage-collected
-segments and the byte cap are always seen)."""
+per-(segment, user) arrays the handle keeps, a warm unquantized ann
+request is ranked on the driver from the postings the handle keeps
+resident, a warm term_search / term_search_indexed is evaluated on the
+driver from the term index entries it keeps resident, and no tombstone
+mask is planned while no tombstone file exists. Pins the wins (a warm
+request infers no parquet schema; a warm resident ann, term or hybrid
+request runs no Spark job and plans a local relation; a user's first
+term request runs at most two jobs; a request that takes the Spark plan
+runs at most two jobs and plans no window, broadcast or anti join) and
+the rules that keep the caches honest (removes, re-inserts, new
+segments, index rewrites, garbage-collected segments and the byte cap
+are always seen)."""
 
 import os
 import re
@@ -214,6 +217,77 @@ def test_tiny_cap_falls_back_to_the_spark_plan(col, spark, tmp_path, monkeypatch
     assert len(capped) == len(plan), (capped, plan)
 
 
+def _local_only(df) -> bool:
+    return "LocalTableScan" in _plan(df) and "FileScan" not in _plan(df)
+
+
+def test_warm_term_requests_run_no_job_and_plan_a_local_relation(col, spark):
+    reqs = _requests(col)
+    for name in ("term_search", "term_search_indexed"):
+        reqs[name]().collect()
+        df, names = _job_names(spark, reqs[name])
+        assert names == [], (name, names)
+        assert _local_only(df), name
+    # an unknown user: empty, and no job once its entries are kept
+    col.term_search([7], RUN, 10).collect()
+    df, names = _job_names(spark, lambda: col.term_search([7], RUN, 10))
+    assert names == [] and df.collect() == []
+
+
+def test_first_term_request_runs_at_most_two_jobs(col, spark):
+    col.term_search([0], RUN, 10).collect()  # opens both segments' tables
+    _, first = _job_names(spark, lambda: col.term_search([1], RUN, 10))
+    _, again = _job_names(spark, lambda: col.term_search([1], RUN, 10))
+    # one collect of user 1's term index and one of its docs' seq_nos,
+    # both over the two segments that hold it
+    assert 0 < len(first) <= 2 and again == [], (first, again)
+    _, indexed = _job_names(spark, lambda: col.term_search_indexed([1], [("title", "run")], 10))
+    assert indexed == []  # the same entries
+
+
+def test_warm_hybrid_runs_no_job(col, spark):
+    def hybrid():
+        hits = col.term_search_indexed([0, 1], [("title", "run")], 100)
+        return _ann(col, pre_filter_ids=hits.select(hits["doc_id"].alias("id")))
+
+    assert _ids(hybrid().collect()) == [1, 5]
+    df, names = _job_names(spark, hybrid)
+    assert names == [] and _local_only(df), names
+
+
+def test_remove_is_seen_by_resident_term_requests(col, spark):
+    reqs = _requests(col)
+    for name in ("term_search", "term_search_indexed"):
+        reqs[name]().collect()
+    col.remove([0], [1])
+    for name in ("term_search", "term_search_indexed"):
+        df = reqs[name]()
+        assert _ids(df.collect()) == [5] and _local_only(df), name
+        _, names = _job_names(spark, reqs[name])
+        assert names == [], name  # the tombstones are read once per listing
+
+
+def test_tiny_cap_falls_back_to_the_term_scan_and_plan(col, spark, tmp_path, monkeypatch):
+    reqs = _requests(col)
+    want = {name: reqs[name]().collect() for name in ("term_search", "term_search_indexed")}
+    monkeypatch.setattr(collection_mod, "RESIDENT_POSTINGS_BYTES", 1)
+    fresh = Collection.open(spark, str(tmp_path), "rp")
+    for c in (fresh, col):  # the cap is read per request, as for ann
+        for name, build in _requests(c).items():
+            if name in want:
+                df = build()
+                assert "FileScan" in _plan(df), name
+                assert df.collect() == want[name], name
+    assert fresh.resident_stats()["entries"] == 0
+    # the Spark plan masks only when tombstones exist, and then per segment
+    indexed = _requests(col)["term_search_indexed"]
+    assert "LeftSemi" not in _plan(indexed())
+    col.remove([0], [1])
+    df = indexed()
+    assert _plan(df).count("LeftSemi") == 2  # one per segment
+    assert _ids(df.collect()) == [5]
+
+
 def test_new_segment_is_seen_by_the_same_handle(col, spark):
     reqs = _requests(col)
     for build in reqs.values():
@@ -233,8 +307,8 @@ def _kept_centroids(col) -> set:
     return {seg for seg, kind in col._opened if kind == "centroids"}
 
 
-def _kept_postings(col) -> set:
-    return {seg for seg, _ in col._resident._entries}
+def _kept_postings(col, kind="ivf") -> set:
+    return {seg for seg, _, k in col._resident._entries if k == kind}
 
 
 def test_gc_versions_evicts_deleted_segments(col, spark):
@@ -242,12 +316,14 @@ def test_gc_versions_evicts_deleted_segments(col, spark):
     col.term_search_indexed([0], [("title", "run")], 10).collect()
     assert _kept_centroids(col) == set(col.toc()["segments"])
     assert _kept_postings(col) == set(col.toc()["segments"])
+    assert _kept_postings(col, "terms") == set(col.toc()["segments"])
     merged = col.merge_segments()
     col.build_index()
     gone = col.gc_versions(keep_latest=1)
     assert len(gone["segments"]) == 2
     assert _kept_centroids(col) == set()
     assert _kept_postings(col) == set()
+    assert _kept_postings(col, "terms") == set()
     assert col.resident_stats()["bytes"] == 0
     assert os.listdir(os.path.join(col.root, "segments")) == [merged]
     assert _ids(_ann(col).collect()) == [1, 2, 3, 4, 5]
@@ -278,3 +354,21 @@ def test_build_index_rewrite_drops_kept_centroids(col, spark, tmp_path):
 
     assert probe(col) == probe(fresh)
     assert probe(col)[segs[0]] == {0: [0], 1: [0]}
+
+
+def test_build_index_rewrite_drops_kept_term_entries(col, spark):
+    segs = col.toc()["segments"]
+    _ann(col).collect()
+    assert _ids(_requests(col)["term_search"]().collect()) == [1, 5]
+    assert _kept_postings(col, "terms") == set(segs)
+    # a TOC that no longer lists the terms index of R2's segment makes
+    # build_index write it again, here without the title field
+    r2 = next(s for s in segs if col.segment_docs(s).filter("doc_id = 5").count())
+    toc = col.toc()
+    col._commit_toc(segs, toc["flushed_seq_no"], indexes={r2: ["ivf"]})
+    col.config.attribute_schema = {"title": "keyword", "category": "keyword"}
+    col.build_index()
+    assert _kept_postings(col, "terms") == set(segs) - {r2}
+    assert _kept_postings(col) == set(segs)  # the ann postings stay
+    got = col.term_search_indexed([0, 1], [("title", "running connections")], 10)
+    assert [tuple(r) for r in got.collect()] == [(1, 5)]

@@ -64,3 +64,10 @@ def test_unknown_term_empty(index):
     assert term_search_indexed(index, [("title", "zzz")], 10).isEmpty()
     # AND with one unknown term -> empty (planner.rs:90-116 semantics)
     assert term_search_indexed(index, [("title", "run"), ("title", "zzz")], 10).isEmpty()
+
+
+def test_indexed_and_counts_a_repeated_pair_once(index):
+    got = term_search_indexed(index, [("title", "run")] * 2, 10)
+    assert [r["doc_id"] for r in got.collect()] == [1, 2, 4]
+    got = term_search_indexed(index, [("title", "run"), ("title", "walk")] * 2, 10)
+    assert [r["doc_id"] for r in got.collect()] == [4]
