@@ -39,6 +39,7 @@ segment. Spark-first re-expression (SURVEY.md §1.1, §2.1, §2.9):
 
 from __future__ import annotations
 
+import bisect
 import functools
 import json
 import operator
@@ -58,7 +59,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 from muopdb_spark.filters.compiler import (
-    KEY_SEP, FilterSchema, compile_keys, compile_sets, term_search as _term_scan,
+    NO_IDS, FilterSchema, compile_keys, compile_sets, term_search as _term_scan,
 )
 from muopdb_spark.functions.distance import score_np
 from muopdb_spark.functions.text import stemmed_tokens
@@ -74,7 +75,11 @@ from muopdb_spark.index.quantizer import QUANTIZERS, lookup
 RESIDENT_POSTINGS_BYTES = 1 << 30
 
 _ANN_SCHEMA = "user_id long, id long, score double"
-_NO_IDS = np.zeros(0, dtype=np.int64)
+
+# joins a term index row's field and term into one resident key; the
+# reference keys "{field}:{term}" (mutable_segment.rs:92), but a field
+# name may hold ":"
+_TERM_SEP = "\x1f"
 
 
 @dataclass
@@ -183,6 +188,13 @@ def _local(spark: SparkSession, ddl: str, **columns) -> DataFrame:
     struct, arrow = _schemas(ddl)
     return spark.createDataFrame(pa.table(
         {f.name: columns.get(f.name, []) for f in arrow}, schema=arrow), struct)
+
+
+def _held_on_driver(df: DataFrame) -> bool:
+    """Whether `df` optimizes to a local relation: rows the driver holds
+    already, which collect reads without a Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def _users_by_segment(keys) -> dict[str, list[int]]:
@@ -739,9 +751,9 @@ class Collection:
         users = [int(u) for u in dict.fromkeys(user_ids)]
         if all("terms" in indexes.get(s, []) for s in segs):
             entries = self._resident_terms(segs, users)
-            if entries is not None and not any(len(e[5]) for e in entries.values()):
+            if entries is not None and not any(len(multi) for *_, multi in entries.values()):
                 hits = [ids for _, ids in self._term_hits(entries, evaluate)]
-                ids = np.unique(np.concatenate([_NO_IDS] + hits))
+                ids = np.unique(np.concatenate([NO_IDS] + hits))
                 return _local(self.spark, "doc_id long", doc_id=ids[:limit])
         docs = self.docs(version=version)
         for fld in schema.fields:
@@ -1038,8 +1050,13 @@ class Collection:
                 multi_ivf_save(idx, self._seg_index_dir(seg, "ivf"))
                 have.add("ivf")
             if term_fields and "terms" not in have:
+                # from the tombstone-masked rows: a row removed before
+                # its segment was flushed (a doc removed and re-inserted
+                # before one flush) must not lend the doc its terms;
+                # a later remove masks every row of the doc there, so
+                # readers mask per doc (_term_hits, _term_plan)
                 tdf = build_term_index(
-                    self.segment_docs(seg), term_fields,
+                    self._apply_tombstones(self.segment_docs(seg)), term_fields,
                     id_col="doc_id", user_col="user_id",
                 )
                 tdf.write.mode("overwrite").partitionBy("user_id").parquet(
@@ -1133,14 +1150,17 @@ class Collection:
             self._seg_index_dir(seg, "terms")))
 
     def _fetch_terms(self, keys: list[tuple]) -> dict:
-        """(segment, user, "terms") -> (keys, offsets, postings, docs,
-        seq, multi) arrays of that user's part of the segment: the term
-        index's sorted term_key strings, each key's posting list as
-        postings[offsets[i]:offsets[i + 1]], the user's doc ids in the
-        segment with the newest seq_no of each, and the doc ids that
-        have more than one row there. Filled by one collect over those
-        segments' terms tables and one over their docs (user_id, doc_id
-        and seq_no only), filtered to those users."""
+        """(segment, user, "terms") -> (key_data, key_offsets, offsets,
+        postings, docs, seq, multi) arrays of that user's part of the
+        segment: the term index's "field\\x1fterm" keys in byte order,
+        key i being key_data[key_offsets[i]:key_offsets[i + 1]] in
+        UTF-8 (variable width, so nbytes is the keys' real size), key
+        i's posting list as postings[offsets[i]:offsets[i + 1]], the
+        user's doc ids in the segment with the newest seq_no of each,
+        and the doc ids that have more than one row there. Filled by one
+        collect over those segments' terms tables and one over their
+        docs (user_id, doc_id and seq_no only), filtered to those
+        users."""
         by_seg = _users_by_segment(keys)
         segs = list(by_seg)
         t = _union([
@@ -1154,8 +1174,8 @@ class Collection:
             for i, s in enumerate(segs)
         ]).toArrow()
         t_seg, t_user = (np.asarray(t.column(c), dtype=np.int64) for c in ("_seg", "user_id"))
-        names = np.asarray(pc.binary_join_element_wise(
-            t.column("field"), t.column("term"), KEY_SEP), dtype=object)
+        names = pc.binary_join_element_wise(
+            t.column("field"), t.column("term"), _TERM_SEP).combine_chunks()
         lists = t.column("postings").combine_chunks()
         offsets = np.asarray(lists.offsets, dtype=np.int64)
         offsets -= offsets[0]
@@ -1166,7 +1186,13 @@ class Collection:
         for key in keys:
             i, u = segs.index(key[0]), key[1]
             rows = np.flatnonzero((t_seg == i) & (t_user == u))
-            rows = rows[np.argsort(names[rows], kind="stable")]
+            sel = names.take(rows)
+            o = np.asarray(pc.sort_indices(sel), dtype=np.int64)
+            rows, enc = rows[o], sel.take(o).cast(pa.binary()).to_pylist()
+            key_offs = np.zeros(len(enc) + 1, dtype=np.int64)
+            np.cumsum(np.fromiter(map(len, enc), dtype=np.int64, count=len(enc)),
+                      out=key_offs[1:])
+            key_data = np.frombuffer(b"".join(enc), dtype=np.uint8)
             starts, lengths = offsets[rows], offsets[rows + 1] - offsets[rows]
             offs = np.zeros(len(rows) + 1, dtype=np.int64)
             np.cumsum(lengths, out=offs[1:])
@@ -1176,7 +1202,7 @@ class Collection:
             doc, seq = d_doc[m][o], d_seq[m][o]
             last = np.ones(len(doc), dtype=bool)
             last[:-1] = doc[1:] != doc[:-1]
-            out[key] = (np.asarray(names[rows], dtype=str), offs, postings,
+            out[key] = (key_data, key_offs, offs, postings,
                         doc[last], seq[last], np.unique(doc[~last]))
         return out
 
@@ -1238,14 +1264,18 @@ class Collection:
         per segment."""
         tomb = self._tomb_latest_map()  # V20
         hits = []
-        for (_, u, _), (keys, offsets, postings, docs, seq, _) in entries.items():
+        for (_, u, _), (data, key_offs, offsets, postings, docs, seq, _) in entries.items():
             if tomb:
                 docs = docs[seq > np.array([tomb.get((u, d), -1) for d in docs.tolist()],
                                            dtype=np.int64)]
 
-            def lookup(key, keys=keys, offsets=offsets, postings=postings):
-                i = int(np.searchsorted(keys, key))
-                if i < len(keys) and keys[i] == key:
+            def lookup(field, term, data=data, key_offs=key_offs, offsets=offsets,
+                       postings=postings):
+                # binary search of the byte-ordered UTF-8 keys
+                key = f"{field}{_TERM_SEP}{term}".encode()
+                at = lambda j: data[key_offs[j]:key_offs[j + 1]].tobytes()
+                i = bisect.bisect_left(range(len(offsets) - 1), key, key=at)
+                if i < len(offsets) - 1 and at(i) == key:
                     return postings[offsets[i]:offsets[i + 1]]
                 return postings[:0]
 
@@ -1291,12 +1321,16 @@ class Collection:
             keep &= np.array([tomb.get((u, i), -1) < s for u, i, s in
                               zip(user.tolist(), ids.tolist(), seq.tolist())], dtype=bool)
         if pre_filter_ids is not None and keep.any():
-            # only ids in the candidates' range can pass, so only those
-            # are read: a range filter (isin makes one py4j call per id)
-            # collected as rows (toArrow runs a job even on a local
-            # relation, which collect does not)
-            lo, hi = int(ids[keep].min()), int(ids[keep].max())
-            rows = pre_filter_ids.select("id").filter(F.col("id").between(lo, hi)).collect()
+            pre = pre_filter_ids.select("id")
+            if not _held_on_driver(pre):
+                # only the candidates' ids are read, so a large id set
+                # is never pulled to the driver: one SQL IN list (isin
+                # makes one py4j call per id)
+                wanted = ",".join(map(str, np.unique(ids[keep]).tolist()))
+                pre = pre.filter(f"id IN ({wanted})")
+            # collected as rows: toArrow runs a job even on a local
+            # relation, which collect reads with none
+            rows = pre.collect()
             keep &= np.isin(ids, np.array([r[0] for r in rows], dtype=np.int64))
         user, ids = user[keep], ids[keep]
         score = score_np(self.config.metric, vec[keep], query_vector)
@@ -1367,9 +1401,9 @@ class Collection:
         posting arrays in numpy and returns a local relation. A user's
         first request then runs the centroid and postings collects, a
         warm one no Spark job (plus one when the tombstone directory
-        changed; pre_filter_ids is read over the candidates' id range,
-        which runs no job on a local relation such as
-        term_search_indexed's). Otherwise _ann_plan runs
+        changed; pre_filter_ids is read whole when it is a local
+        relation such as term_search_indexed's, which runs no job, and
+        otherwise only at the candidates' ids). Otherwise _ann_plan runs
         phase 2 as one Spark plan. Both give the same rows. Each
         segment's index tables are opened once per handle
         (load_segment_index), so a warm request lists no files and
@@ -1411,9 +1445,9 @@ class Collection:
         if entries is None:
             return self._term_plan(segs, users, terms, limit, mode)
         hits = self._term_hits(entries, compile_keys(terms, mode))
-        user = np.concatenate([_NO_IDS] + [np.full(len(ids), u, dtype=np.int64)
+        user = np.concatenate([NO_IDS] + [np.full(len(ids), u, dtype=np.int64)
                                            for u, ids in hits])
-        doc = np.concatenate([_NO_IDS] + [ids for _, ids in hits])
+        doc = np.concatenate([NO_IDS] + [ids for _, ids in hits])
         o = np.lexsort((user, doc))
         user, doc = user[o], doc[o]
         first = np.ones(len(doc), dtype=bool)
@@ -1429,8 +1463,8 @@ class Collection:
         tombstone-masked docs, since index postings carry no seq_no (a
         doc removed and re-inserted elsewhere must not match on its old
         terms); the segments' hits are unioned, deduplicated, sorted and
-        cut. The index is built from segment_docs, so without tombstones
-        the join could drop nothing and is not planned."""
+        cut. Without tombstones the join could drop nothing and is not
+        planned."""
         cond = functools.reduce(operator.or_, [
             (F.col("field") == f_) & (F.col("term") == t_) for f_, t_ in terms])
         masked = self._has_tombstones()

@@ -161,30 +161,21 @@ def compile_filter(
 
 # ------------------------------------------------------ driver target
 
-# (postings, visible) -> doc ids: postings(key) gives the sorted doc ids
-# of one term_key in a (segment, user)'s term index, visible the sorted
-# ids of that user's visible docs in the segment.
-SetFilter = Callable[[Callable[[str], np.ndarray], np.ndarray], np.ndarray]
+# (postings, visible) -> doc ids: postings(field, term) gives the sorted
+# doc ids of one (field, term) posting list in a (segment, user)'s term
+# index, visible the sorted ids of that user's visible docs in the
+# segment.
+SetFilter = Callable[[Callable[[str, str], np.ndarray], np.ndarray], np.ndarray]
 
-_NO_IDS = np.zeros(0, dtype=np.int64)
-
-# joins a (field, term) pair into one key; the reference keys
-# "{field}:{term}" (mutable_segment.rs:92), but a field name may hold ":"
-KEY_SEP = "\x1f"
-
-
-def term_key(field: str, term: Any) -> str:
-    """The key of one (field, term) posting list in a resident term
-    index (build_term_index's field and term columns)."""
-    return f"{field}{KEY_SEP}{term}"
+NO_IDS = np.zeros(0, dtype=np.int64)
 
 
 def _nothing(postings, visible) -> np.ndarray:
-    return _NO_IDS
+    return NO_IDS
 
 
-def _key(key: str) -> SetFilter:
-    return lambda postings, visible: postings(key)
+def _key(field: str, term: str) -> SetFilter:
+    return lambda postings, visible: postings(field, term)
 
 
 def _all(kids: list[SetFilter]) -> SetFilter:
@@ -199,19 +190,19 @@ def _any(kids: list[SetFilter]) -> SetFilter:
     return lambda p, v: functools.reduce(np.union1d, [k(p, v) for k in kids])
 
 
-def _contains_sets(path: str, value: Any, schema: FilterSchema, *, stem: bool) -> SetFilter:
+def _contains_sets(path: str, value: Any, schema: FilterSchema) -> SetFilter:
     if schema.kind(path) == "keyword":
         # a null value matches nothing, as `col == NULL` in _contains
-        return _nothing if value is None else _key(term_key(path, value))
-    toks = _tokenize_value(str(value), schema.language(path), stem=stem)
-    return _all([_key(term_key(path, t)) for t in toks])
+        return _nothing if value is None else _key(path, str(value))
+    # stemmed, as build_index builds the resident term index
+    toks = _tokenize_value(str(value), schema.language(path), stem=True)
+    return _all([_key(path, t) for t in toks])
 
 
-def compile_sets(tree: dict | str | None, schema: FilterSchema, *,
-                 stem: bool = True) -> SetFilter:
+def compile_sets(tree: dict | str | None, schema: FilterSchema) -> SetFilter:
     """Compile a DocumentFilter JSON tree for the driver, with
     compile_filter's semantics: And intersects, Or unions, Contains
-    looks up the value's (stemmed) tokens' keys and intersects them,
+    looks up the value's stemmed tokens and intersects them,
     NotContains is the visible docs minus its Contains, Ids is the
     literal ids among the visible docs, and an empty filter, And or Or
     or a value without tokens matches nothing. Leaves may return ids of
@@ -221,15 +212,15 @@ def compile_sets(tree: dict | str | None, schema: FilterSchema, *,
     if tree is None or tree == {}:
         return _nothing
     if "and" in tree:
-        return _all([compile_sets(c, schema, stem=stem) for c in tree["and"]])
+        return _all([compile_sets(c, schema) for c in tree["and"]])
     if "or" in tree:
-        return _any([compile_sets(c, schema, stem=stem) for c in tree["or"]])
+        return _any([compile_sets(c, schema) for c in tree["or"]])
     if "contains" in tree:
         node = tree["contains"]
-        return _contains_sets(node["path"], node["value"], schema, stem=stem)
+        return _contains_sets(node["path"], node["value"], schema)
     if "not_contains" in tree:
         node = tree["not_contains"]
-        inner = _contains_sets(node["path"], node["value"], schema, stem=stem)
+        inner = _contains_sets(node["path"], node["value"], schema)
         return lambda p, v: np.setdiff1d(v, inner(p, v))
     if "ids" in tree:
         ids = np.unique(np.asarray(tree["ids"], dtype=np.int64))
@@ -239,8 +230,8 @@ def compile_sets(tree: dict | str | None, schema: FilterSchema, *,
 
 def compile_keys(terms: list[tuple[str, str]], mode: str = "and") -> SetFilter:
     """term_search_indexed's driver target: the AND (mode "and") or OR
-    of exact (field, term) keys; a repeated pair counts once."""
-    kids = [_key(term_key(f, t)) for f, t in dict.fromkeys((f, t) for f, t in terms)]
+    of exact (field, term) posting lists; a repeated pair counts once."""
+    kids = [_key(f, t) for f, t in dict.fromkeys((f, t) for f, t in terms)]
     return _all(kids) if mode == "and" else _any(kids)
 
 

@@ -285,26 +285,40 @@ def _both_term_paths(col, spark, tmp_path, monkeypatch, request):
 
 
 def test_term_search_indexed_masks_each_segment(col, spark, tmp_path, monkeypatch):
-    """A doc removed and then re-inserted into a later segment matches
-    only on its new row's terms: the old segment's postings are masked
-    by that segment's rows, not by the doc's newest row anywhere."""
+    """A doc removed and then re-inserted matches only on its new row's
+    terms: user 0's doc 1 is re-inserted into a later segment, whose
+    old segment's postings are masked by that segment's rows, not by
+    the doc's newest row anywhere; user 1's doc 1 is removed and
+    re-inserted before one flush, so both rows land in one segment and
+    the removed row's terms must not be indexed for the doc."""
     v = [1.0, 0.0, 0.0, 0.0]
     col.insert(_docs_df(spark, [(0, 1, v, "apple pie", "news", 1),
                                 (0, 2, v, "apple tart", "blog", 2)]))
     col.flush()
     col.remove([0], [1])
-    col.insert(_docs_df(spark, [(0, 1, v, "banana split", "news", 3)]))
+    col.insert(_docs_df(spark, [(1, 1, v, "apple pie", "news", 1)]))
+    col.remove([1], [1])
+    col.insert(_docs_df(spark, [(0, 1, v, "banana split", "news", 3),
+                                (1, 1, v, "banana split", "news", 3)]))
     col.flush()
     col.build_index()
     apple = {"contains": {"path": "title", "value": "apple"}}
     assert [r["doc_id"] for r in col.term_search([0], apple, 10).collect()] == [2]
-    for terms, want in (([("title", "appl")], [(0, 2)]),
-                        ([("title", "banana")], [(0, 1)]),
-                        ([("title", "appl"), ("title", "pie")], [])):
-        got, plan = _both_term_paths(
-            col, spark, tmp_path, monkeypatch,
-            lambda c: c.term_search_indexed([0], terms, 10))
-        assert got == plan == want, terms
+    assert col.term_search([1], apple, 10).collect() == []
+    for users, terms, want in (
+            ([0], [("title", "appl")], [(0, 2)]),
+            ([0], [("title", "banana")], [(0, 1)]),
+            ([0], [("title", "appl"), ("title", "pie")], []),
+            ([1], [("title", "appl")], []),
+            ([1], [("title", "pie"), ("title", "split")], []),
+            ([0, 1], [("title", "banana")], [(0, 1), (1, 1)])):
+        for mode in ("and", "or"):
+            got, plan = _both_term_paths(
+                col, spark, tmp_path, monkeypatch,
+                lambda c: c.term_search_indexed(users, terms, 10, mode=mode))
+            assert got == plan, (users, terms, mode)
+            if mode == "and":
+                assert got == want, (users, terms)
 
 
 def test_term_search_indexed_and_counts_a_repeated_pair_once(col, spark, tmp_path,

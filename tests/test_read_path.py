@@ -255,6 +255,30 @@ def test_warm_hybrid_runs_no_job(col, spark):
     assert names == [] and _local_only(df), names
 
 
+def test_hybrid_reads_only_the_candidates_of_a_large_pre_filter(col, spark, monkeypatch):
+    """A pre_filter_ids that is not a local relation is read at the
+    candidates' ids, not over their id range: with candidates 1-5 and
+    9999, a 20000-id pre-filter gives the driver at most one row per
+    candidate."""
+    _add_segment(col, spark, [(0, 9_999, [0.9, 0.1, 0.0, 0.0], "far", "news")])
+    big = spark.range(0, 20_000)
+    collected = []
+    collect = type(big).collect
+
+    def counted(df):
+        rows = collect(df)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(big), "collect", counted)
+    got = _ann(col, k=10, pre_filter_ids=big)
+    assert _local_only(got)
+    monkeypatch.undo()
+    assert collected and max(collected) <= 6, collected
+    assert _ids(got.collect()) == [1, 2, 3, 4, 5, 9_999]
+    assert _ids(_ann(col, k=10, pre_filter_ids=big, **PLAN).collect()) == [1, 2, 3, 4, 5, 9_999]
+
+
 def test_remove_is_seen_by_resident_term_requests(col, spark):
     reqs = _requests(col)
     for name in ("term_search", "term_search_indexed"):

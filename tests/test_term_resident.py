@@ -157,3 +157,26 @@ def test_a_doc_twice_in_one_segment_takes_the_scan(spark, tmp_path):
     assert "FileScan" in _plan(got) and got.collect() == []
     either = {"or": both["and"]}
     assert [r["doc_id"] for r in col.term_search([3], either, 10).collect()] == [1]
+
+
+def test_a_long_keyword_value_costs_its_own_length(spark, tmp_path):
+    """Resident term keys are variable width: one long keyword value
+    adds its own length to the entry, not that length times the number
+    of keys (fixed-width strings would take about 6 MB here)."""
+    col = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="long", num_features=2, attribute_schema={"body": "text", "cat": "keyword"}))
+    long = "x" * 5000
+    col.insert(spark.createDataFrame(
+        [_row(0, d, "alpha", f"k{d}") for d in range(300)] + [_row(0, 300, "beta", long)],
+        SCHEMA))
+    col.flush()
+    col.build_index()
+    tree = {"or": [{"contains": {"path": "cat", "value": long}},
+                   {"contains": {"path": "cat", "value": "k7"}}]}
+    got = col.term_search([0], tree, 10)
+    assert "FileScan" not in _plan(got) and _rows(got) == [(7,), (300,)]
+    (entry,) = [e for key, e in col._resident._entries.items() if key[2] == "terms"]
+    keys = [f"cat\x1fk{d}" for d in range(300)] + [f"cat\x1f{long}", "body\x1falpha",
+                                                     "body\x1fbeta"]
+    assert entry[0].nbytes == sum(len(k.encode()) for k in keys)
+    assert collection_mod._nbytes(entry) < 64_000
