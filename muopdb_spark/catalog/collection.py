@@ -176,25 +176,66 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 
 @functools.lru_cache(maxsize=None)
 def _schemas(ddl: str):
+    """(StructType, arrow schema, StructType JSON) of a DDL string."""
     struct = _parse_datatype_string(ddl)
-    return struct, to_arrow_schema(struct)
+    return struct, to_arrow_schema(struct), struct.json()
+
+
+# py4j gateway -> its PythonSQLUtils (readArrowStreamFromFile,
+# toDataFrame) static members, looked up once for _local
+_ARROW_ENTRY: dict = {}
 
 
 def _local(spark: SparkSession, ddl: str, **columns) -> DataFrame:
     """A local relation of `columns` (absent ones empty) over the DDL
-    schema. It is built from a pyarrow Table, so it plans LocalTableScan
+    schema. It is built from Arrow batches, so it plans LocalTableScan
     and collects with no Spark job; createDataFrame over Python rows
-    (even none) runs one."""
-    struct, arrow = _schemas(ddl)
-    return spark.createDataFrame(pa.table(
-        {f.name: columns.get(f.name, []) for f in arrow}, schema=arrow), struct)
+    (even none) runs one.
+
+    The batches enter the JVM through the two calls that
+    createDataFrame(pyarrow.Table) ends in: _serialize_to_jvm writes
+    them to a file that readArrowStreamFromFile reads (with encryption
+    on, to an ArrowIteratorServer socket), and toDataFrame builds the
+    relation. That is 2 py4j round trips against createDataFrame's 21:
+    the two static members are looked up once per gateway (a JVM class
+    lookup costs a round trip each time), the schema JSON is cached
+    with the DDL, and the session conf reads createDataFrame makes are
+    skipped: time zone, timestamp-NTZ preference and large var types
+    change no long, double or array<float> column, and records per
+    batch only sets where the batches are cut. No other code here calls
+    these private PySpark entry points."""
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+
+    struct, arrow, schema_json = _schemas(ddl)
+    table = pa.table({f.name: columns.get(f.name, []) for f in arrow}, schema=arrow)
+    sc = spark.sparkContext
+    entry = _ARROW_ENTRY.get(sc._gateway)
+    if entry is None:
+        utils = spark._jvm.PythonSQLUtils
+        entry = _ARROW_ENTRY.setdefault(
+            sc._gateway, (utils.readArrowStreamFromFile, utils.toDataFrame))
+    read, to_df = entry
+    jiter = sc._serialize_to_jvm(table.to_batches(), ArrowStreamSerializer(), read,
+                                 lambda: spark._jvm.ArrowIteratorServer())
+    df = DataFrame(to_df(jiter, schema_json, spark._jsparkSession), spark)
+    df._schema = struct
+    return df
 
 
 def _held_on_driver(df: DataFrame) -> bool:
     """Whether `df` optimizes to a local relation: rows the driver holds
-    already, which collect reads without a Spark job."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    return plan.getClass().getSimpleName() == "LocalRelation"
+    already, which collect reads without a Spark job. Costs 3 py4j round
+    trips; the optimized plan it computes is the one collect then runs."""
+    return df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+
+def _newest_tomb(tomb: tuple[np.ndarray, np.ndarray], ids: np.ndarray) -> np.ndarray:
+    """The newest tombstone seq_no of each of one user's `ids` (-1 where
+    none), from that user's sorted (doc ids, seq_nos) tombstone arrays
+    (Collection._tomb_latest_map)."""
+    docs, seq = tomb
+    at = np.minimum(np.searchsorted(docs, ids), len(docs) - 1)
+    return np.where(docs[at] == ids, seq[at], -1)
 
 
 def _users_by_segment(keys) -> dict[str, list[int]]:
@@ -1265,9 +1306,8 @@ class Collection:
         tomb = self._tomb_latest_map()  # V20
         hits = []
         for (_, u, _), (data, key_offs, offsets, postings, docs, seq, _) in entries.items():
-            if tomb:
-                docs = docs[seq > np.array([tomb.get((u, d), -1) for d in docs.tolist()],
-                                           dtype=np.int64)]
+            if u in tomb:
+                docs = docs[seq > _newest_tomb(tomb[u], docs)]
 
             def lookup(field, term, data=data, key_offs=key_offs, offsets=offsets,
                        postings=postings):
@@ -1289,19 +1329,26 @@ class Collection:
         return self._resident.stats()
 
     def _tomb_latest_map(self) -> dict:
-        """(user_id, doc_id) -> newest tombstone seq_no, for masking on
-        the driver. Collected again only when the tombstone directory's
-        listing changes, since another writer may append to it; the
-        listing is taken before the collect, so a file landing in
-        between costs one more collect, never a missed tombstone."""
+        """user_id -> (doc ids, newest tombstone seq_no of each), sorted
+        by doc id, for masking on the driver with _newest_tomb. Collected
+        again only when the tombstone directory's listing changes, since
+        another writer may append to it; the listing is taken before the
+        collect, so a file landing in between costs one more collect,
+        never a missed tombstone."""
         if not self._has_tombstones():
             return {}
         listing = tuple(sorted(os.listdir(self._tombstone_dir())))
         kept = self._tomb_kept
         if kept is None or kept[0] != listing:
             rows = self._tomb_latest(self.tombstones()).collect()
-            kept = self._tomb_kept = (
-                listing, {(r["_tu"], r["_td"]): r["tomb_seq"] for r in rows})
+            user, doc, seq = (np.array([r[c] for r in rows], dtype=np.int64)
+                              for c in ("_tu", "_td", "tomb_seq"))
+            o = np.lexsort((doc, user))
+            user, doc, seq = user[o], doc[o], seq[o]
+            users, starts = np.unique(user, return_index=True)
+            ends = np.r_[starts[1:], len(user)]
+            kept = self._tomb_kept = (listing, {
+                u: (doc[a:b], seq[a:b]) for u, a, b in zip(users.tolist(), starts, ends)})
         return kept[1]
 
     def _ann_resident(self, cand: tuple, query_vector, k: int, *,
@@ -1317,21 +1364,23 @@ class Collection:
         user, ids, seq, vec = cand
         keep = np.ones(len(ids), dtype=bool)
         tomb = self._tomb_latest_map()  # V20
-        if tomb:
-            keep &= np.array([tomb.get((u, i), -1) < s for u, i, s in
-                              zip(user.tolist(), ids.tolist(), seq.tolist())], dtype=bool)
+        for u in tomb.keys() & set(np.unique(user).tolist()):
+            m = user == u
+            keep[m] &= seq[m] > _newest_tomb(tomb[u], ids[m])
         if pre_filter_ids is not None and keep.any():
-            pre = pre_filter_ids.select("id")
+            pre = pre_filter_ids
             if not _held_on_driver(pre):
                 # only the candidates' ids are read, so a large id set
                 # is never pulled to the driver: one SQL IN list (isin
                 # makes one py4j call per id)
                 wanted = ",".join(map(str, np.unique(ids[keep]).tolist()))
-                pre = pre.filter(f"id IN ({wanted})")
-            # collected as rows: toArrow runs a job even on a local
-            # relation, which collect reads with none
+                pre = pre.select("id").filter(f"id IN ({wanted})")
+            # a local relation is collected as it is, whatever its other
+            # columns: a select would cost 9 py4j round trips. Rows, not
+            # Arrow: toArrow runs a job even on a local relation, which
+            # collect reads with none
             rows = pre.collect()
-            keep &= np.isin(ids, np.array([r[0] for r in rows], dtype=np.int64))
+            keep &= np.isin(ids, np.array([r["id"] for r in rows], dtype=np.int64))
         user, ids = user[keep], ids[keep]
         score = score_np(self.config.metric, vec[keep], query_vector)
         # min per (user, id): the first row of each group in (user, id,
@@ -1401,13 +1450,19 @@ class Collection:
         posting arrays in numpy and returns a local relation. A user's
         first request then runs the centroid and postings collects, a
         warm one no Spark job (plus one when the tombstone directory
-        changed; pre_filter_ids is read whole when it is a local
-        relation such as term_search_indexed's, which runs no job, and
-        otherwise only at the candidates' ids). Otherwise _ann_plan runs
-        phase 2 as one Spark plan. Both give the same rows. Each
-        segment's index tables are opened once per handle
-        (load_segment_index), so a warm request lists no files and
-        infers no schema."""
+        changed) and, without pre_filter_ids, 2 py4j round trips: those
+        of the result's build (_local). Otherwise _ann_plan runs phase 2
+        as one Spark plan. Both give the same rows. Each segment's index
+        tables are opened once per handle (load_segment_index), so a
+        warm request lists no files and infers no schema.
+
+        On the driver path, pre_filter_ids is read by the name of its id
+        column. A local relation, such as a projection of
+        term_search_indexed's result, is collected as it is, whatever
+        its other columns: no job, and 10 more round trips with the
+        local check. Any other DataFrame is read only at the
+        candidates' ids, by one SQL IN list, so a large id set never
+        reaches the driver."""
         q = lookup(self.config.quantizer, multi_user=True, dedup=True)
         if num_probes is None:
             num_probes = k

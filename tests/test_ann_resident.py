@@ -59,14 +59,17 @@ def base(request, spark, tmp_path_factory):
 @pytest.fixture(scope="module", params=["none", "remove", "remove+reinsert"])
 def col(request, spark, base, tmp_path_factory):
     """A copy of the base collection with a tombstone state applied:
-    none, user 0's docs 0-2 and user 1's doc 41 removed, or those
-    removes followed by a re-insert of docs 1 and 41 (later seq_no)."""
+    none, user 0's docs 0-2 and user 1's doc 41 removed (and user 9,
+    who has no docs, removing user 0's other ids: they stay visible),
+    or those removes followed by a re-insert of docs 1 and 41 (later
+    seq_no)."""
     root = tmp_path_factory.mktemp("variant") / "c"
     shutil.copytree(base / "c", root)
     col = Collection.open(spark, str(root.parent), "c")
     if request.param != "none":
         col.remove([0], [0, 1, 2])
         col.remove([1], [41])
+        col.remove([9], list(range(3, 40)))
     if request.param == "remove+reinsert":
         col.insert(spark.createDataFrame(
             [(0, 1, [0.5] * DIM), (1, 41, [-0.25] * DIM)], SCHEMA))

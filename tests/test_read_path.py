@@ -6,7 +6,8 @@ resident, a warm term_search / term_search_indexed is evaluated on the
 driver from the term index entries it keeps resident, and no tombstone
 mask is planned while no tombstone file exists. Pins the wins (a warm
 request infers no parquet schema; a warm resident ann, term or hybrid
-request runs no Spark job and plans a local relation; a user's first
+request runs no Spark job and plans a local relation, built in 2 py4j
+round trips, 12 for a hybrid with a local pre-filter; a user's first
 term request runs at most two jobs; a request that takes the Spark plan
 runs at most two jobs and plans no window, broadcast or anti join) and
 the rules that keep the caches honest (removes, re-inserts, new
@@ -15,9 +16,13 @@ are always seen)."""
 
 import os
 import re
+import threading
 import uuid
+from unittest import mock
 
+import pyarrow as pa
 import pytest
+from py4j.clientserver import ClientServerConnection
 
 from muopdb_spark.catalog import collection as collection_mod
 from muopdb_spark.catalog.collection import Collection, CollectionConfig
@@ -277,6 +282,64 @@ def test_hybrid_reads_only_the_candidates_of_a_large_pre_filter(col, spark, monk
     assert collected and max(collected) <= 6, collected
     assert _ids(got.collect()) == [1, 2, 3, 4, 5, 9_999]
     assert _ids(_ann(col, k=10, pre_filter_ids=big, **PLAN).collect()) == [1, 2, 3, 4, 5, 9_999]
+
+
+def _round_trips(build):
+    """(build(), py4j round trips this thread made while it ran). The
+    finalizer thread's object deletes are not counted."""
+    me, n = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        n[0] += threading.get_ident() == me
+        return send(self, command)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counted):
+        return build(), n[0]
+
+
+def test_warm_requests_build_their_result_in_two_round_trips(col):
+    """A warm resident request crosses into the JVM only to build its
+    result: one call reads the Arrow batches, one makes the relation
+    (createDataFrame(pyarrow.Table) takes 21)."""
+    for name, build in _requests(col).items():
+        build().collect()
+        df, trips = _round_trips(build)
+        assert _local_only(df), name
+        assert trips <= 2, (name, trips)
+
+
+def _hybrid_pre_filter(col):
+    hits = col.term_search_indexed([0, 1], [("title", "run")], 100)
+    return hits.select(hits["doc_id"].alias("id"))
+
+
+def test_warm_hybrid_with_a_local_pre_filter_takes_twelve_round_trips(col):
+    """A local pre_filter_ids is checked (3 round trips), collected as
+    it is (7) and the result built (2); a select on it would cost 9
+    more and createDataFrame 19 more."""
+    _ann(col, pre_filter_ids=_hybrid_pre_filter(col)).collect()
+    pre = _hybrid_pre_filter(col)
+    df, trips = _round_trips(lambda: _ann(col, pre_filter_ids=pre))
+    assert _ids(df.collect()) == [1, 5]
+    assert trips <= 12, trips
+
+
+def test_local_pre_filter_with_other_columns_equals_the_spark_plan(
+        col, spark, tmp_path, monkeypatch):
+    """A local pre_filter_ids is read whole, by the name of its id
+    column, whatever other columns it carries and wherever id sits."""
+    pre = spark.createDataFrame(pa.table({
+        "tag": ["a", "b", "c", "d"], "id": [5, 2, 9, 2], "w": [0.5, 1.0, 2.0, 3.0]}))
+    assert collection_mod._held_on_driver(pre)
+    got = _ann(col, pre_filter_ids=pre)
+    assert _local_only(got)
+    got = got.collect()
+    assert _ids(got) == [2, 5]
+    monkeypatch.setattr(collection_mod, "RESIDENT_POSTINGS_BYTES", 1)
+    want = _ann(Collection.open(spark, str(tmp_path), "rp"), pre_filter_ids=pre)
+    assert "FileScan" in _plan(want)
+    assert got == want.collect()
 
 
 def test_remove_is_seen_by_resident_term_requests(col, spark):

@@ -67,14 +67,17 @@ def base(spark, tmp_path_factory):
 def col(request, spark, base, tmp_path_factory):
     """A copy of the base collection with a tombstone state applied:
     none; user 0's docs 1, 2 (both rows) and 4 and user 1's doc 7
-    removed; or those removes followed by re-inserts of user 0's docs 1
-    and 4 and user 1's doc 7 with other fields, into a third segment."""
+    removed (and doc 6 of user 9, who has no docs: users 0's and 1's
+    doc 6 stay visible); or those removes followed by re-inserts of
+    user 0's docs 1 and 4 and user 1's doc 7 with other fields, into a
+    third segment."""
     root = tmp_path_factory.mktemp("variant") / "c"
     shutil.copytree(base / "c", root)
     col = Collection.open(spark, str(root.parent), "c")
     if request.param != "none":
         col.remove([0], [1, 2, 4])
         col.remove([1], [7])
+        col.remove([9], [6])
     if request.param == "remove+reinsert":
         col.insert(spark.createDataFrame([
             _row(0, 1, "gamma gamma", "misc"), _row(0, 4, None, "news"),
