@@ -256,9 +256,9 @@ class _ResidentPostings:
     segment's `kind` index, one LRU per Collection handle capped by
     numpy nbytes at RESIDENT_POSTINGS_BYTES — the analog of the
     reference's block cache (rs/utils/src/block_cache/cache.rs). Kind
-    "ivf" holds the ann postings (_fetch_postings), kind "terms" the
-    term index and doc visibility (_fetch_terms). Hits and misses count
-    entry lookups; a lock guards every access."""
+    "ivf" holds the ann postings (_fetch_postings), kind "term_rows" the
+    term index over the user's rows (_fetch_terms). Hits and misses
+    count entry lookups; a lock guards every access."""
 
     def __init__(self):
         self._lock = threading.Lock()
@@ -469,7 +469,7 @@ class Collection:
         segment).
 
         indexes maps segment -> list of durable index artifacts under
-        segments/<seg>/index/ ("ivf", "terms") — the TOC is the single
+        segments/<seg>/index/ ("ivf", "term_rows") — the TOC is the single
         source of truth for what a reader may open (TableOfContent
         analog, rs/index/src/collection/mod.rs:20-53). Entries for
         unchanged segments carry forward; dropped segments drop theirs."""
@@ -773,26 +773,26 @@ class Collection:
         """§3.2 TermSearch over flushed docs, answered as the reference
         does (planner.rs:41-169, snapshot.rs:82-94): the filter tree is
         compiled once on the driver (compile_sets) and evaluated per
-        (segment, user) over that user's term index and visible docs,
-        which this handle keeps resident (_resident_terms); the union of
-        the matches is sorted, deduplicated and cut to `limit` and
-        returned as a local relation. A user's first request runs the
-        two collects that fill its entries, a warm one no Spark job.
+        (segment, user) over the rows of that user's resident term index
+        entry (_term_hits); the matching visible rows' doc ids are
+        sorted, deduplicated, cut to `limit` and returned as a local
+        relation. A user's first request runs the one collect that fills
+        its entries, a warm one no Spark job.
 
-        The scan takes over when a segment has no terms index yet (no
-        build_index since its flush), when the entries do not fit in
-        RESIDENT_POSTINGS_BYTES, or when a doc has several rows in one
-        segment (the index cannot tell which row a term came from): it
-        tokenizes and stems every flushed doc's fields and filters them
-        with compile_filter. Both give the same rows."""
+        The scan takes over when a segment has no term_rows index yet,
+        when the entries do not fit in RESIDENT_POSTINGS_BYTES, or when
+        an entry holds two rows with one (doc_id, seq_no) — one insert
+        batch that carries a doc twice, the only rows the index cannot
+        tell apart. It tokenizes and stems every flushed doc's fields and
+        filters them with compile_filter. Both give the same rows."""
         schema = FilterSchema(self._term_fields())
         evaluate = compile_sets(filter_tree, schema)
         toc = self.toc(version)
         segs, indexes = toc["segments"], toc.get("indexes", {})
         users = [int(u) for u in dict.fromkeys(user_ids)]
-        if all("terms" in indexes.get(s, []) for s in segs):
+        if all("term_rows" in indexes.get(s, []) for s in segs):
             entries = self._resident_terms(segs, users)
-            if entries is not None and not any(len(multi) for *_, multi in entries.values()):
+            if entries is not None and not any(dup for *_, dup in entries.values()):
                 hits = [ids for _, ids in self._term_hits(entries, evaluate)]
                 ids = np.unique(np.concatenate([NO_IDS] + hits))
                 return _local(self.spark, "doc_id long", doc_id=ids[:limit])
@@ -1047,13 +1047,19 @@ class Collection:
     def build_index(self) -> dict:
         """S5's index-build half, durable: for every current-TOC segment
         lacking an index, build per-user IVF tables (+ codes when the
-        collection is quantized) and the inverted term index, write
-        them under segments/<seg>/index/{ivf,terms}/, and commit a TOC
-        version referencing them (the flush artifact of core.rs:867-976
-        / multi_spann/writer.rs + terms/writer.rs:22-56). A new session
-        reopens with Collection.open() + ann_search without rebuilding.
-        Incremental by construction: a later flush indexes ONLY the new
-        segment."""
+        collection is quantized) and the inverted term index over rows,
+        write them under segments/<seg>/index/{ivf,term_rows}/, and
+        commit a TOC version referencing them (the flush artifact of
+        core.rs:867-976 / multi_spann/writer.rs + terms/writer.rs:22-56).
+        A new session reopens with Collection.open() + ann_search without
+        rebuilding. Incremental: a later flush indexes ONLY the new segment.
+
+        The term index keys each posting by its row, a (doc_id, seq_no)
+        struct, over all of the segment's rows, tombstoned or not
+        (readers mask rows when they read); its reserved entry (field
+        and term null) lists the user's rows. A segment with only the
+        doc-keyed "terms" index of earlier builds is indexed again, and
+        "terms" leaves its TOC list."""
         from muopdb_spark.index.terms import build_term_index
 
         toc = self.toc()
@@ -1066,7 +1072,7 @@ class Collection:
             have = set(indexes.get(seg, []))
             # an index the TOC does not list yet may be rewritten below:
             # never keep a handle opened on an earlier write of it
-            stale = {"ivf", "terms"} - have
+            stale = {"ivf", "term_rows"} - have
             self._resident.drop([seg], stale)
             if "ivf" in stale:
                 stale.add("centroids")  # read from the ivf index
@@ -1090,19 +1096,16 @@ class Collection:
                     idx.quantizer = q.name
                 multi_ivf_save(idx, self._seg_index_dir(seg, "ivf"))
                 have.add("ivf")
-            if term_fields and "terms" not in have:
-                # from the tombstone-masked rows: a row removed before
-                # its segment was flushed (a doc removed and re-inserted
-                # before one flush) must not lend the doc its terms;
-                # a later remove masks every row of the doc there, so
-                # readers mask per doc (_term_hits, _term_plan)
-                tdf = build_term_index(
-                    self._apply_tombstones(self.segment_docs(seg)), term_fields,
-                    id_col="doc_id", user_col="user_id",
-                )
+            if term_fields and "term_rows" not in have:
+                docs = self.segment_docs(seg).withColumn("_row", F.struct("doc_id", "seq_no"))
+                rows = docs.groupBy("user_id").agg(
+                    F.sort_array(F.collect_list("_row")).alias("postings"), F.count("*").alias("df"))
+                tdf = build_term_index(docs, term_fields, id_col="_row", user_col="user_id")
+                tdf = tdf.unionByName(rows, allowMissingColumns=True)  # field, term null
                 tdf.write.mode("overwrite").partitionBy("user_id").parquet(
-                    self._seg_index_dir(seg, "terms"))
-                have.add("terms")
+                    self._seg_index_dir(seg, "term_rows"))
+                have.add("term_rows")
+            have.discard("terms")
             if have != set(indexes.get(seg, [])):
                 indexes[seg] = sorted(have)
                 built.append(seg)
@@ -1187,21 +1190,20 @@ class Collection:
         return out
 
     def _terms_table(self, seg: str) -> DataFrame:
-        return self._open_once(seg, "terms", lambda: self.spark.read.parquet(
-            self._seg_index_dir(seg, "terms")))
+        return self._open_once(seg, "term_rows", lambda: self.spark.read.parquet(
+            self._seg_index_dir(seg, "term_rows")))
 
     def _fetch_terms(self, keys: list[tuple]) -> dict:
-        """(segment, user, "terms") -> (key_data, key_offsets, offsets,
-        postings, docs, seq, multi) arrays of that user's part of the
-        segment: the term index's "field\\x1fterm" keys in byte order,
-        key i being key_data[key_offsets[i]:key_offsets[i + 1]] in
-        UTF-8 (variable width, so nbytes is the keys' real size), key
-        i's posting list as postings[offsets[i]:offsets[i + 1]], the
-        user's doc ids in the segment with the newest seq_no of each,
-        and the doc ids that have more than one row there. Filled by one
-        collect over those segments' terms tables and one over their
-        docs (user_id, doc_id and seq_no only), filtered to those
-        users."""
+        """(segment, user, "term_rows") -> (key_data, key_offsets,
+        offsets, postings, doc, seq, dup) arrays of that user's part of
+        the segment's term index: the "field\\x1fterm" keys in byte
+        order, key i being key_data[key_offsets[i]:key_offsets[i + 1]]
+        in UTF-8 (variable width, so nbytes is the keys' real size); the
+        user's rows (doc, seq), unique and sorted, from the reserved
+        entry; key i's postings[offsets[i]:offsets[i + 1]] as positions
+        in those rows; and dup, whether two rows shared one (doc_id,
+        seq_no). Filled by ONE collect over those segments' term_rows
+        tables filtered to those users."""
         by_seg = _users_by_segment(keys)
         segs = list(by_seg)
         t = _union([
@@ -1209,24 +1211,19 @@ class Collection:
             .select(F.lit(i).alias("_seg"), "user_id", "field", "term", "postings")
             for i, s in enumerate(segs)
         ]).toArrow()
-        d = _union([
-            self.segment_docs(s).filter(F.col("user_id").isin(by_seg[s]))
-            .select(F.lit(i).alias("_seg"), "user_id", "doc_id", "seq_no")
-            for i, s in enumerate(segs)
-        ]).toArrow()
         t_seg, t_user = (np.asarray(t.column(c), dtype=np.int64) for c in ("_seg", "user_id"))
+        reserved = np.asarray(t.column("field").is_null(), dtype=bool)
         names = pc.binary_join_element_wise(
             t.column("field"), t.column("term"), _TERM_SEP).combine_chunks()
         lists = t.column("postings").combine_chunks()
         offsets = np.asarray(lists.offsets, dtype=np.int64)
         offsets -= offsets[0]
-        flat = np.asarray(lists.flatten(), dtype=np.int64)
-        d_seg, d_user, d_doc, d_seq = (np.asarray(d.column(c), dtype=np.int64) for c in (
-            "_seg", "user_id", "doc_id", "seq_no"))
+        p_doc, p_seq = (np.asarray(a, dtype=np.int64) for a in lists.flatten().flatten())
         out = {}
         for key in keys:
             i, u = segs.index(key[0]), key[1]
-            rows = np.flatnonzero((t_seg == i) & (t_user == u))
+            mine = (t_seg == i) & (t_user == u)
+            rows = np.flatnonzero(mine & ~reserved)
             sel = names.take(rows)
             o = np.asarray(pc.sort_indices(sel), dtype=np.int64)
             rows, enc = rows[o], sel.take(o).cast(pa.binary()).to_pylist()
@@ -1237,14 +1234,16 @@ class Collection:
             starts, lengths = offsets[rows], offsets[rows + 1] - offsets[rows]
             offs = np.zeros(len(rows) + 1, dtype=np.int64)
             np.cumsum(lengths, out=offs[1:])
-            postings = flat[np.repeat(starts - offs[:-1], lengths) + np.arange(offs[-1])]
-            m = (d_seg == i) & (d_user == u)
-            o = np.lexsort((d_seq[m], d_doc[m]))
-            doc, seq = d_doc[m][o], d_seq[m][o]
-            last = np.ones(len(doc), dtype=bool)
-            last[:-1] = doc[1:] != doc[:-1]
-            out[key] = (key_data, key_offs, offs, postings,
-                        doc[last], seq[last], np.unique(doc[~last]))
+            at = np.repeat(starts - offs[:-1], lengths) + np.arange(offs[-1])
+            # the reserved entry's rows, then every posting: the unique
+            # pairs are the row table, the inverse each one's position
+            table = [np.arange(offsets[r], offsets[r + 1]) for r in np.flatnonzero(mine & reserved)]
+            n = sum(map(len, table))
+            at = np.concatenate(table + [at])
+            pairs, pos = np.unique(np.stack([p_doc[at], p_seq[at]], axis=1), axis=0,
+                                   return_inverse=True)
+            out[key] = (key_data, key_offs, offs, pos[n:], pairs[:, 0].copy(),
+                        pairs[:, 1].copy(), np.array(len(pairs) < n))
         return out
 
     def _resident_entries(self, keys: list[tuple], files, fetch) -> dict | None:
@@ -1291,23 +1290,22 @@ class Collection:
         this handle's resident entries, or None when they do not fit in
         RESIDENT_POSTINGS_BYTES (_resident_entries)."""
         return self._resident_entries(
-            [(s, u, "terms") for s in segs for u in users],
-            lambda s, u: [os.path.join(self._seg_index_dir(s, "terms"), f"user_id={u}"),
-                          os.path.join(self._segment_dir(s), "docs", f"user_id={u}")],
+            [(s, u, "term_rows") for s in segs for u in users],
+            lambda s, u: [os.path.join(self._seg_index_dir(s, "term_rows"), f"user_id={u}")],
             self._fetch_terms)
 
     def _term_hits(self, entries: dict, evaluate) -> list[tuple[int, np.ndarray]]:
         """(user, doc ids) per resident term entry: `evaluate` (a
-        compile_sets / compile_keys function) over the entry's postings
-        and visible docs, kept to the visible ones. Visible means the
-        doc's newest seq_no in that segment is above the newest
-        tombstone for (user, doc): the scan's seq_no-aware mask, applied
-        per segment."""
+        compile_sets / compile_keys function) over the entry's row
+        postings and visible rows, kept to the visible rows and projected
+        to their unique doc ids. A row is visible when its seq_no is above
+        the newest tombstone for (user, doc), the scan's seq_no-aware
+        mask, even for a tombstone that lands after build_index."""
         tomb = self._tomb_latest_map()  # V20
         hits = []
-        for (_, u, _), (data, key_offs, offsets, postings, docs, seq, _) in entries.items():
-            if u in tomb:
-                docs = docs[seq > _newest_tomb(tomb[u], docs)]
+        for (_, u, _), (data, key_offs, offsets, postings, doc, seq, _) in entries.items():
+            visible = (np.flatnonzero(seq > _newest_tomb(tomb[u], doc)) if u in tomb
+                       else np.arange(len(doc)))
 
             def lookup(field, term, data=data, key_offs=key_offs, offsets=offsets,
                        postings=postings):
@@ -1319,7 +1317,8 @@ class Collection:
                     return postings[offsets[i]:offsets[i + 1]]
                 return postings[:0]
 
-            hits.append((u, np.intersect1d(evaluate(lookup, docs), docs)))
+            rows = np.intersect1d(evaluate(lookup, visible, doc), visible)
+            hits.append((u, np.unique(doc[rows])))
         return hits
 
     def resident_stats(self) -> dict:
@@ -1374,13 +1373,20 @@ class Collection:
                 # is never pulled to the driver: one SQL IN list (isin
                 # makes one py4j call per id)
                 wanted = ",".join(map(str, np.unique(ids[keep]).tolist()))
-                pre = pre.select("id").filter(f"id IN ({wanted})")
+                cols = ["user_id", "id"] if "user_id" in pre.columns else ["id"]
+                pre = pre.select(*cols).filter(f"id IN ({wanted})")
             # a local relation is collected as it is, whatever its other
             # columns: a select would cost 9 py4j round trips. Rows, not
             # Arrow: toArrow runs a job even on a local relation, which
             # collect reads with none
             rows = pre.collect()
-            keep &= np.isin(ids, np.array([r["id"] for r in rows], dtype=np.int64))
+            pre_ids = np.array([r["id"] for r in rows], dtype=np.int64)
+            if rows and "user_id" in rows[0].__fields__:  # scoped per user
+                pre_user = np.array([r["user_id"] for r in rows], dtype=np.int64)
+                for u in np.unique(user).tolist():
+                    keep[user == u] &= np.isin(ids[user == u], pre_ids[pre_user == u])
+            else:
+                keep &= np.isin(ids, pre_ids)
         user, ids = user[keep], ids[keep]
         score = score_np(self.config.metric, vec[keep], query_vector)
         # min per (user, id): the first row of each group in (user, id,
@@ -1405,14 +1411,15 @@ class Collection:
         """Phase 2 as one Spark plan: each segment's postings filtered to
         its probed pairs as literal partition filters, unioned,
         tombstone-masked seq_no-aware (only when tombstone files exist),
-        semi-joined to pre_filter_ids, then multi_ivf.rank with the
+        semi-joined to pre_filter_ids on (user_id, id) when it has a
+        user_id column and on id otherwise, then multi_ivf.rank with the
         collection's root codebook."""
         scan = _union([self.load_segment_index(s).postings.filter(probed_filter(probed))
                        for s, probed in pairs.items()])
         scan = self._apply_tombstones(scan, id_col="id")  # V20
         if pre_filter_ids is not None:
-            scan = scan.join(pre_filter_ids.select("id").distinct(), on="id",
-                             how="left_semi")
+            on = ["user_id", "id"] if "user_id" in pre_filter_ids.columns else ["id"]
+            scan = scan.join(pre_filter_ids.select(*on).distinct(), on=on, how="left_semi")
         # the authoritative codebook lives at the collection root (a
         # per-segment copy of a per-user table may predate users added
         # by later segments' extension); per-user entries collect or
@@ -1456,8 +1463,11 @@ class Collection:
         tables are opened once per handle (load_segment_index), so a
         warm request lists no files and infers no schema.
 
-        On the driver path, pre_filter_ids is read by the name of its id
-        column. A local relation, such as a projection of
+        pre_filter_ids keeps the listed (user_id, id) pairs when it has a
+        user_id column; an id-only one admits its ids for every user.
+
+        On the driver path, pre_filter_ids is read by the names of its
+        user_id and id columns. A local relation, such as a projection of
         term_search_indexed's result, is collected as it is, whatever
         its other columns: no job, and 10 more round trips with the
         local check. Any other DataFrame is read only at the
@@ -1485,14 +1495,15 @@ class Collection:
                             version: int | None = None) -> DataFrame:
         """§3.2 TermSearch over the DURABLE per-segment term indexes
         (terms/writer.rs on-disk layout analog) for exact (field, term)
-        pairs: the docs holding all of them (mode "and") or any (mode
-        "or") in one segment, among the user's visible docs there, as
-        unique (user_id, doc_id) pairs ordered by (doc_id, user_id) and
-        cut to `limit` (snapshot.rs:141-146). Answered on the driver from
-        the handle's resident term entries (compile_keys, _term_hits) as
-        a local relation; _term_plan runs the same as a Spark plan when
-        the entries do not fit in RESIDENT_POSTINGS_BYTES."""
-        segs = self._indexed_segments("terms", version)
+        pairs: the docs with a visible row that holds all of them (mode
+        "and") or any (mode "or"), as unique (user_id, doc_id) pairs
+        ordered by (doc_id, user_id) and cut to `limit` (snapshot.rs:
+        141-146). Answered on the driver from the handle's resident term
+        entries (compile_keys, _term_hits) as a local relation; _term_plan
+        runs the same as a Spark plan when the entries do not fit in
+        RESIDENT_POSTINGS_BYTES. Within one insert batch that carries a
+        doc twice, the doc's two rows count as one."""
+        segs = self._indexed_segments("term_rows", version)
         if not segs or not terms:
             return _local(self.spark, "user_id long, doc_id long")
         users = [int(u) for u in dict.fromkeys(user_ids)]
@@ -1500,45 +1511,31 @@ class Collection:
         if entries is None:
             return self._term_plan(segs, users, terms, limit, mode)
         hits = self._term_hits(entries, compile_keys(terms, mode))
-        user = np.concatenate([NO_IDS] + [np.full(len(ids), u, dtype=np.int64)
-                                           for u, ids in hits])
-        doc = np.concatenate([NO_IDS] + [ids for _, ids in hits])
-        o = np.lexsort((user, doc))
-        user, doc = user[o], doc[o]
-        first = np.ones(len(doc), dtype=bool)
-        first[1:] = (doc[1:] != doc[:-1]) | (user[1:] != user[:-1])
+        pairs = np.unique(np.concatenate([np.zeros((0, 2), dtype=np.int64)] + [
+            np.stack([ids, np.full(len(ids), u, dtype=np.int64)], axis=1) for u, ids in hits
+        ]), axis=0)[:limit]  # (doc_id, user_id), unique and sorted
         return _local(self.spark, "user_id long, doc_id long",
-                      user_id=user[first][:limit], doc_id=doc[first][:limit])
+                      user_id=pairs[:, 1], doc_id=pairs[:, 0])
 
     def _term_plan(self, segs: list[str], users: list[int], terms, limit: int,
                    mode: str) -> DataFrame:
-        """term_search_indexed as one Spark plan: per segment, the
-        queried pairs' postings exploded and intersected (a distinct-pair
-        count) or unioned, then semi-joined to that segment's
-        tombstone-masked docs, since index postings carry no seq_no (a
-        doc removed and re-inserted elsewhere must not match on its old
-        terms); the segments' hits are unioned, deduplicated, sorted and
-        cut. Without tombstones the join could drop nothing and is not
-        planned."""
+        """term_search_indexed as one Spark plan: the queried pairs'
+        postings of every segment exploded into (user_id, doc_id, seq_no)
+        rows, tombstone-masked seq_no-aware (only when tombstones exist),
+        intersected per row (a distinct-pair count) or unioned, projected
+        to unique (user_id, doc_id), sorted and cut."""
         cond = functools.reduce(operator.or_, [
             (F.col("field") == f_) & (F.col("term") == t_) for f_, t_ in terms])
-        masked = self._has_tombstones()
-        parts = []
-        for s in segs:
-            matched = self._terms_table(s).filter(F.col("user_id").isin(users) & cond).select(
-                "user_id", "field", "term", F.explode("postings").alias("doc_id"))
-            if mode == "and":
-                hits = (
-                    matched.groupBy("user_id", "doc_id")
-                    .agg(F.countDistinct("field", "term").alias("n"))
-                    .filter(F.col("n") == len({(f_, t_) for f_, t_ in terms}))
-                    .select("user_id", "doc_id")
-                )
-            else:
-                hits = matched.select("user_id", "doc_id")
-            if masked:
-                visible = self._apply_tombstones(self.segment_docs(s))
-                hits = hits.join(visible.select("user_id", "doc_id"),
-                                 on=["user_id", "doc_id"], how="left_semi")
-            parts.append(hits)
-        return _union(parts).distinct().orderBy("doc_id", "user_id").limit(limit)
+        rows = _union([self._terms_table(s).filter(F.col("user_id").isin(users) & cond)
+                       for s in segs]).select(
+            "user_id", "field", "term", F.explode("postings").alias("_row"),
+        ).select("user_id", "field", "term", "_row.doc_id", "_row.seq_no")
+        rows = self._apply_tombstones(rows)  # V20
+        if mode == "and":
+            rows = (
+                rows.groupBy("user_id", "doc_id", "seq_no")
+                .agg(F.countDistinct("field", "term").alias("n"))
+                .filter(F.col("n") == len({(f_, t_) for f_, t_ in terms}))
+            )
+        return (rows.select("user_id", "doc_id").distinct()
+                .orderBy("doc_id", "user_id").limit(limit))

@@ -26,11 +26,11 @@ Semantics matrix (planner.rs:244-493 is the test model):
   - Empty And/Or/missing filter => matches nothing (planner.rs:124-148).
 
 Driver target (compile_sets): the same tree compiled to a function over
-sorted doc-id arrays, evaluated once per (segment, user) against that
-user's resident term index (Collection.term_search). This is the
-reference's own planner target — posting lists combined per user —
-with numpy set algebra (intersect1d / union1d / setdiff1d) in place of
-leapfrog iterators.
+sorted row positions of a (segment, user)'s resident term index
+(Collection.term_search), so an And holds on one row as in the scan;
+the caller projects matching rows to doc ids. This is the reference's
+planner target — posting lists of segment-local point ids, combined
+per user — with numpy set algebra in place of leapfrog iterators.
 
 JSON encoding (FIXTURES.md F4):
     {"and": [f, ...]} | {"or": [f, ...]}
@@ -161,33 +161,33 @@ def compile_filter(
 
 # ------------------------------------------------------ driver target
 
-# (postings, visible) -> doc ids: postings(field, term) gives the sorted
-# doc ids of one (field, term) posting list in a (segment, user)'s term
-# index, visible the sorted ids of that user's visible docs in the
-# segment.
-SetFilter = Callable[[Callable[[str, str], np.ndarray], np.ndarray], np.ndarray]
+# (postings, visible, doc) -> row positions in a (segment, user)'s row
+# table: postings(field, term) gives the sorted positions of the rows
+# holding one (field, term), visible the sorted positions of that
+# user's visible rows in the segment, doc the doc id at every position.
+SetFilter = Callable[[Callable[[str, str], np.ndarray], np.ndarray, np.ndarray], np.ndarray]
 
 NO_IDS = np.zeros(0, dtype=np.int64)
 
 
-def _nothing(postings, visible) -> np.ndarray:
+def _nothing(postings, visible, doc) -> np.ndarray:
     return NO_IDS
 
 
 def _key(field: str, term: str) -> SetFilter:
-    return lambda postings, visible: postings(field, term)
+    return lambda postings, visible, doc: postings(field, term)
 
 
 def _all(kids: list[SetFilter]) -> SetFilter:
     if not kids:
         return _nothing
-    return lambda p, v: functools.reduce(np.intersect1d, [k(p, v) for k in kids])
+    return lambda p, v, d: functools.reduce(np.intersect1d, [k(p, v, d) for k in kids])
 
 
 def _any(kids: list[SetFilter]) -> SetFilter:
     if not kids:
         return _nothing
-    return lambda p, v: functools.reduce(np.union1d, [k(p, v) for k in kids])
+    return lambda p, v, d: functools.reduce(np.union1d, [k(p, v, d) for k in kids])
 
 
 def _contains_sets(path: str, value: Any, schema: FilterSchema) -> SetFilter:
@@ -201,12 +201,13 @@ def _contains_sets(path: str, value: Any, schema: FilterSchema) -> SetFilter:
 
 def compile_sets(tree: dict | str | None, schema: FilterSchema) -> SetFilter:
     """Compile a DocumentFilter JSON tree for the driver, with
-    compile_filter's semantics: And intersects, Or unions, Contains
-    looks up the value's stemmed tokens and intersects them,
-    NotContains is the visible docs minus its Contains, Ids is the
-    literal ids among the visible docs, and an empty filter, And or Or
-    or a value without tokens matches nothing. Leaves may return ids of
-    docs that are not visible; the caller keeps the visible ones."""
+    compile_filter's semantics per row: And intersects, Or unions,
+    Contains looks up the value's stemmed tokens and intersects them,
+    NotContains is the visible rows minus its Contains, Ids is the
+    visible rows whose doc is listed, and an empty filter, And or Or or
+    a value without tokens matches nothing. Leaves may return rows that
+    are not visible; the caller keeps the visible ones and projects
+    them to doc ids."""
     if isinstance(tree, str):
         tree = json.loads(tree) if tree.strip() else {}
     if tree is None or tree == {}:
@@ -221,10 +222,10 @@ def compile_sets(tree: dict | str | None, schema: FilterSchema) -> SetFilter:
     if "not_contains" in tree:
         node = tree["not_contains"]
         inner = _contains_sets(node["path"], node["value"], schema)
-        return lambda p, v: np.setdiff1d(v, inner(p, v))
+        return lambda p, v, d: np.setdiff1d(v, inner(p, v, d))
     if "ids" in tree:
-        ids = np.unique(np.asarray(tree["ids"], dtype=np.int64))
-        return lambda p, v: np.intersect1d(ids, v, assume_unique=True)
+        ids = np.asarray(tree["ids"], dtype=np.int64)
+        return lambda p, v, d: v[np.isin(d[v], ids)]
     raise ValueError(f"unknown DocumentFilter node: {list(tree)}")
 
 

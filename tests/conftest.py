@@ -8,6 +8,23 @@ from pyspark.sql import SparkSession
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # keep test JVM small
 
 
+# node ids of the `slow` tests that the -m expression deselected
+_SLOW_DESELECTED: list[str] = []
+
+
+def pytest_deselected(items):
+    _SLOW_DESELECTED.extend(i.nodeid for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    """Name what the default `-m 'not slow'` (pyproject addopts) left
+    out, and the command that runs it."""
+    if _SLOW_DESELECTED and "not slow" in (config.getoption("markexpr") or ""):
+        terminalreporter.write_line(
+            f"{len(_SLOW_DESELECTED)} slow tests deselected by -m 'not slow'; run them "
+            "with: python -m pytest tests/ -q -p no:cacheprovider -m slow")
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     from muopdb_spark.session import get_spark

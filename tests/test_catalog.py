@@ -204,12 +204,12 @@ def test_build_index_durable_round_trip(col, spark, tmp_path):
     col.insert(_docs_df(spark, R2)); col.flush()
     built = col.build_index()
     toc = col.toc()
-    assert all(set(v) == {"ivf", "terms"} for v in built.values())
-    assert toc["indexes"] == {s: ["ivf", "terms"] for s in toc["segments"]}
+    assert all(set(v) == {"ivf", "term_rows"} for v in built.values())
+    assert toc["indexes"] == {s: ["ivf", "term_rows"] for s in toc["segments"]}
     for seg in toc["segments"]:
         d = os.path.join(col.root, "segments", seg, "index")
         assert os.path.exists(os.path.join(d, "ivf", "meta.json"))
-        assert os.path.isdir(os.path.join(d, "terms"))
+        assert os.path.isdir(os.path.join(d, "term_rows"))
     before = col.ann_search([0, 1], [1.0, 0.0, 0.0, 0.0], 3,
                             num_probes=col.config.num_centroids,
                             centroid_distance_ratio=None).collect()
@@ -665,7 +665,7 @@ def test_language_tagged_schema_survives_reopen(spark, tmp_path):
     col.flush()
     # the durable terms index must be built for the tagged field
     built = col.build_index()
-    assert all("terms" in kinds for kinds in built.values()), built
+    assert all("term_rows" in kinds for kinds in built.values()), built
     # stemmed German contains on the fresh handle...
     q = {"contains": {"path": "body", "value": "laufen"}}
     assert [r["doc_id"] for r in col.term_search([1], q, 10).collect()] \

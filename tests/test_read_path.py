@@ -8,7 +8,7 @@ mask is planned while no tombstone file exists. Pins the wins (a warm
 request infers no parquet schema; a warm resident ann, term or hybrid
 request runs no Spark job and plans a local relation, built in 2 py4j
 round trips, 12 for a hybrid with a local pre-filter; a user's first
-term request runs at most two jobs; a request that takes the Spark plan
+term request runs one job; a request that takes the Spark plan
 runs at most two jobs and plans no window, broadcast or anti join) and
 the rules that keep the caches honest (removes, re-inserts, new
 segments, index rewrites, garbage-collected segments and the byte cap
@@ -239,13 +239,13 @@ def test_warm_term_requests_run_no_job_and_plan_a_local_relation(col, spark):
     assert names == [] and df.collect() == []
 
 
-def test_first_term_request_runs_at_most_two_jobs(col, spark):
+def test_first_term_request_runs_one_job(col, spark):
     col.term_search([0], RUN, 10).collect()  # opens both segments' tables
     _, first = _job_names(spark, lambda: col.term_search([1], RUN, 10))
     _, again = _job_names(spark, lambda: col.term_search([1], RUN, 10))
-    # one collect of user 1's term index and one of its docs' seq_nos,
-    # both over the two segments that hold it
-    assert 0 < len(first) <= 2 and again == [], (first, again)
+    # one collect of user 1's term index, its rows included, over the
+    # two segments that hold it
+    assert len(first) == 1 and again == [], (first, again)
     _, indexed = _job_names(spark, lambda: col.term_search_indexed([1], [("title", "run")], 10))
     assert indexed == []  # the same entries
 
@@ -366,12 +366,13 @@ def test_tiny_cap_falls_back_to_the_term_scan_and_plan(col, spark, tmp_path, mon
                 assert "FileScan" in _plan(df), name
                 assert df.collect() == want[name], name
     assert fresh.resident_stats()["entries"] == 0
-    # the Spark plan masks only when tombstones exist, and then per segment
+    # the Spark plan masks only when tombstones exist, and then once,
+    # over every segment's rows
     indexed = _requests(col)["term_search_indexed"]
-    assert "LeftSemi" not in _plan(indexed())
+    assert "LeftAnti" not in _plan(indexed())
     col.remove([0], [1])
     df = indexed()
-    assert _plan(df).count("LeftSemi") == 2  # one per segment
+    assert _plan(df).count("LeftAnti") == 1 and "LeftSemi" not in _plan(df)
     assert _ids(df.collect()) == [5]
 
 
@@ -403,14 +404,14 @@ def test_gc_versions_evicts_deleted_segments(col, spark):
     col.term_search_indexed([0], [("title", "run")], 10).collect()
     assert _kept_centroids(col) == set(col.toc()["segments"])
     assert _kept_postings(col) == set(col.toc()["segments"])
-    assert _kept_postings(col, "terms") == set(col.toc()["segments"])
+    assert _kept_postings(col, "term_rows") == set(col.toc()["segments"])
     merged = col.merge_segments()
     col.build_index()
     gone = col.gc_versions(keep_latest=1)
     assert len(gone["segments"]) == 2
     assert _kept_centroids(col) == set()
     assert _kept_postings(col) == set()
-    assert _kept_postings(col, "terms") == set()
+    assert _kept_postings(col, "term_rows") == set()
     assert col.resident_stats()["bytes"] == 0
     assert os.listdir(os.path.join(col.root, "segments")) == [merged]
     assert _ids(_ann(col).collect()) == [1, 2, 3, 4, 5]
@@ -427,7 +428,7 @@ def test_build_index_rewrite_drops_kept_centroids(col, spark, tmp_path):
     # a TOC that no longer lists the first segment's ivf index makes
     # build_index write it again, here with one centroid per user
     toc = col.toc()
-    col._commit_toc(segs, toc["flushed_seq_no"], indexes={segs[0]: ["terms"]})
+    col._commit_toc(segs, toc["flushed_seq_no"], indexes={segs[0]: ["term_rows"]})
     col.config.num_centroids = 1
     col.build_index()
     assert (segs[0], "centroids") not in col._opened
@@ -447,15 +448,60 @@ def test_build_index_rewrite_drops_kept_term_entries(col, spark):
     segs = col.toc()["segments"]
     _ann(col).collect()
     assert _ids(_requests(col)["term_search"]().collect()) == [1, 5]
-    assert _kept_postings(col, "terms") == set(segs)
-    # a TOC that no longer lists the terms index of R2's segment makes
+    assert _kept_postings(col, "term_rows") == set(segs)
+    # a TOC that no longer lists the term_rows index of R2's segment makes
     # build_index write it again, here without the title field
     r2 = next(s for s in segs if col.segment_docs(s).filter("doc_id = 5").count())
     toc = col.toc()
     col._commit_toc(segs, toc["flushed_seq_no"], indexes={r2: ["ivf"]})
     col.config.attribute_schema = {"title": "keyword", "category": "keyword"}
     col.build_index()
-    assert _kept_postings(col, "terms") == set(segs) - {r2}
+    assert _kept_postings(col, "term_rows") == set(segs) - {r2}
     assert _kept_postings(col) == set(segs)  # the ann postings stay
     got = col.term_search_indexed([0, 1], [("title", "running connections")], 10)
     assert [tuple(r) for r in got.collect()] == [(1, 5)]
+
+
+def test_build_index_backfills_an_old_layout_segment(col):
+    """A segment whose TOC lists only the doc-keyed "terms" index of
+    earlier builds takes the no-index paths until build_index writes
+    its term_rows index and drops "terms" from its list."""
+    segs = col.toc()["segments"]
+    col._commit_toc(segs, col.toc()["flushed_seq_no"],
+                    indexes={s: ["ivf", "terms"] for s in segs})
+    reqs = _requests(col)
+    with pytest.raises(ValueError, match="term_rows"):
+        reqs["term_search_indexed"]()
+    assert "FileScan" in _plan(reqs["term_search"]())
+    assert col.build_index() == {s: ["ivf", "term_rows"] for s in segs}
+    for name in ("term_search", "term_search_indexed"):
+        df = reqs[name]()
+        assert _local_only(df) and _ids(df.collect()) == [1, 5], name
+
+
+def test_a_pre_filter_with_user_ids_admits_only_its_pairs(spark, tmp_path):
+    """Users 1 and 2 share doc id 5. A pre_filter_ids with a user_id
+    column admits only its (user_id, id) pairs, on both paths and
+    whether or not it is a local relation; an id-only one crosses
+    users."""
+    col = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="scoped", num_features=4, attribute_schema={"title": "text"}))
+    col.insert(spark.createDataFrame([
+        (1, 5, [1.0, 0.0, 0.0, 0.0], "apple pie"),
+        (2, 5, [0.9, 0.1, 0.0, 0.0], "banana bread"),
+        (2, 7, [0.8, 0.2, 0.0, 0.0], "apple tart"),
+    ], "user_id long, doc_id long, vector array<float>, title string"))
+    col.flush()
+    col.build_index()
+    hits = col.term_search_indexed([1, 2], [("title", "appl")], 10)
+    assert [tuple(r) for r in hits.collect()] == [(1, 5), (2, 7)]
+    scoped = hits.select("user_id", hits["doc_id"].alias("id"))
+    remote = spark.createDataFrame([(1, 5), (2, 7)], "user_id long, id long")
+    ids_only = hits.select(hits["doc_id"].alias("id"))
+    for pre, want in ((scoped, [(1, 5), (2, 7)]), (remote, [(1, 5), (2, 7)]),
+                      (ids_only, [(1, 5), (2, 5), (2, 7)])):
+        got = _ann(col, users=[1, 2], pre_filter_ids=pre)
+        assert _local_only(got)
+        plan = _ann(col, users=[1, 2], pre_filter_ids=pre, **PLAN)
+        for df in (got, plan):
+            assert sorted((r["user_id"], r["id"]) for r in df.collect()) == want

@@ -3,10 +3,10 @@ paths: the driver's set algebra over the resident term index entries
 returns the same rows, in the same order, as the scan (term_search) and
 as the Spark plan (term_search_indexed). Random filter trees from
 test_filters_property's strategy run on a 2-segment collection with
-three users whose doc ids overlap, null text and keyword fields and a
-doc present in both segments, under no tombstones, removes, and removes
-followed by re-inserts into a third segment; users include an unknown
-one, and limits cut the results."""
+three users whose doc ids overlap, null text and keyword fields, a doc
+present in both segments and a doc with two rows in one segment, under
+no tombstones, removes, and removes followed by re-inserts into a third
+segment; users include an unknown one, and limits cut the results."""
 
 import shutil
 from unittest import mock
@@ -49,16 +49,20 @@ def _docs():
 @pytest.fixture(scope="module")
 def base(spark, tmp_path_factory):
     """Two segments: even doc ids in the first, odd ones in the second,
-    and user 0's doc 2 in both (a second row with other words)."""
+    user 0's doc 2 in both (a second row with other words), and user
+    1's doc 9 inserted twice, with other words, before the second
+    flush."""
     root = tmp_path_factory.mktemp("term-resident")
     col = Collection.create(spark, str(root), CollectionConfig(
         name="c", num_features=2, num_centroids=2,
         attribute_schema={"body": "text", "cat": "keyword"}))
     docs = _docs()
-    for rows in ([r for r in docs if r[1] % 2 == 0],
-                 [r for r in docs if r[1] % 2 == 1] + [_row(0, 2, "gamma running", "misc")]):
-        col.insert(spark.createDataFrame(rows, SCHEMA))
-        col.flush()
+    col.insert(spark.createDataFrame([r for r in docs if r[1] % 2 == 0], SCHEMA))
+    col.flush()
+    col.insert(spark.createDataFrame(
+        [r for r in docs if r[1] % 2 == 1] + [_row(0, 2, "gamma running", "misc")], SCHEMA))
+    col.insert(spark.createDataFrame([_row(1, 9, "alpha gamma", "news")], SCHEMA))
+    col.flush()
     col.build_index()
     return root
 
@@ -111,6 +115,10 @@ def _plan(df) -> str:
 @example(tree={"not_contains": {"path": "body", "value": "beta"}}, users=(0, 1, 2), limit=100)
 @example(tree={"not_contains": {"path": "cat", "value": None}}, users=(0,), limit=100)
 @example(tree={"contains": {"path": "cat", "value": None}}, users=(0, 1, 2), limit=100)
+# ... an And over two rows of one doc (doc 9 of user 1) ...
+@example(tree={"and": [{"contains": {"path": "body", "value": "alpha"}},
+                       {"contains": {"path": "body", "value": "beta"}}]},
+         users=(0, 1, 2), limit=100)
 # ... and a cut
 @example(tree={"or": [{"ids": [0, 1, 2, 3]}, {"contains": {"path": "body", "value": "runs"}}]},
          users=(0, 1, 2), limit=3)
@@ -134,6 +142,7 @@ KEYS = [("body", "alpha"), ("body", "beta"), ("body", "run"), ("body", "zzz"),
 @example(terms=[("body", "alpha")], mode="or", users=(0, 1, 2), limit=100)
 @example(terms=[("body", "run"), ("body", "run")], mode="and", users=(0, 1), limit=100)
 @example(terms=[("body", "gamma"), ("body", "run")], mode="and", users=(0,), limit=100)
+@example(terms=[("body", "alpha"), ("body", "beta")], mode="and", users=(1,), limit=100)
 @example(terms=[("cat", "news"), ("body", "alpha")], mode="or", users=(0, 1, 2), limit=3)
 def test_resident_term_search_indexed_equals_the_spark_plan(col, terms, mode, users, limit):
     got = col.term_search_indexed(list(users), terms, limit, mode=mode)
@@ -144,22 +153,68 @@ def test_resident_term_search_indexed_equals_the_spark_plan(col, terms, mode, us
     assert _rows(got) == _rows(plan), (terms, mode)
 
 
-def test_a_doc_twice_in_one_segment_takes_the_scan(spark, tmp_path):
-    """Two rows of one doc in one segment: the term index cannot tell
-    which row a term came from, so term_search scans and matches per
-    row."""
+def _twice(spark, tmp_path, *batches):
+    """A collection of user 3's rows, one insert per batch, flushed into
+    one segment and indexed."""
     col = Collection.create(spark, str(tmp_path), CollectionConfig(
         name="twice", num_features=2, attribute_schema={"body": "text", "cat": "keyword"}))
-    col.insert(spark.createDataFrame([_row(3, 1, "alpha", "news")], SCHEMA))
-    col.insert(spark.createDataFrame([_row(3, 1, "beta", "blog")], SCHEMA))
+    for rows in batches:
+        col.insert(spark.createDataFrame(rows, SCHEMA))
     col.flush()
     col.build_index()
-    both = {"and": [{"contains": {"path": "body", "value": "alpha"}},
-                    {"contains": {"path": "body", "value": "beta"}}]}
-    got = col.term_search([3], both, 10)
-    assert "FileScan" in _plan(got) and got.collect() == []
-    either = {"or": both["and"]}
-    assert [r["doc_id"] for r in col.term_search([3], either, 10).collect()] == [1]
+    return col
+
+
+BOTH = {"and": [{"contains": {"path": "body", "value": "alpha"}},
+                {"contains": {"path": "body", "value": "beta"}}]}
+EITHER = {"or": BOTH["and"]}
+
+
+def test_a_doc_twice_in_one_segment_answers_on_the_driver(spark, tmp_path):
+    """Two inserts of one doc before a flush: two rows with their own
+    seq_nos, which the term index tells apart, so term_search answers on
+    the driver and matches per row, as the scan does."""
+    col = _twice(spark, tmp_path, [_row(3, 1, "alpha", "news")], [_row(3, 1, "beta", "blog")])
+    for tree, want in ((BOTH, []), (EITHER, [(1,)])):
+        got = col.term_search([3], tree, 10)
+        assert "FileScan" not in _plan(got) and _rows(got) == want, tree
+        assert _rows(_on_the_spark_side(lambda: col.term_search([3], tree, 10))) == want
+    got = col.term_search_indexed([3], [("body", "alpha"), ("body", "beta")], 10)
+    assert _rows(got) == []
+
+
+def test_a_doc_twice_in_one_batch_takes_the_scan(spark, tmp_path):
+    """One insert batch that carries a doc twice gives two rows with one
+    (doc_id, seq_no), the only rows the term index cannot tell apart:
+    term_search scans and matches per row."""
+    col = _twice(spark, tmp_path, [_row(3, 1, "alpha", "news"), _row(3, 1, "beta", "blog")])
+    got = col.term_search([3], BOTH, 10)
+    assert "FileScan" in _plan(got) and _rows(got) == []
+    assert _rows(col.term_search([3], EITHER, 10)) == [(1,)]
+
+
+def test_a_tombstone_that_lands_after_build_index_hides_its_rows(spark, tmp_path):
+    """A remove claims its seq_no, the doc is re-inserted, flushed and
+    indexed, and only then the tombstone is written: it hides the row
+    written before it, so the old words match nothing on any path."""
+    col = Collection.create(spark, str(tmp_path), CollectionConfig(
+        name="late", num_features=2, attribute_schema={"body": "text", "cat": "keyword"}))
+    col.insert(spark.createDataFrame([_row(1, 5, "apple pie", "news")], SCHEMA))
+    claimed = col._next_seq_no()
+    col.insert(spark.createDataFrame([_row(1, 5, "banana bread", "news")], SCHEMA))
+    col.flush()
+    col.build_index()
+    col.term_search([1], BOTH, 10).collect()  # the entries are resident before the tombstone
+    with mock.patch.object(col, "_next_seq_no", return_value=claimed):
+        col.remove([1], [5])
+    apple = {"contains": {"path": "body", "value": "apple"}}
+    for request in (lambda: col.term_search([1], apple, 10),
+                    lambda: col.term_search_indexed([1], [("body", "appl")], 10)):
+        assert _rows(request()) == []
+        assert _rows(_on_the_spark_side(request)) == []
+    bread = {"contains": {"path": "body", "value": "bread"}}
+    assert _rows(col.term_search([1], bread, 10)) == [(5,)]
+    assert _rows(col.term_search_indexed([1], [("body", "bread")], 10)) == [(1, 5)]
 
 
 def test_a_long_keyword_value_costs_its_own_length(spark, tmp_path):
@@ -178,7 +233,7 @@ def test_a_long_keyword_value_costs_its_own_length(spark, tmp_path):
                    {"contains": {"path": "cat", "value": "k7"}}]}
     got = col.term_search([0], tree, 10)
     assert "FileScan" not in _plan(got) and _rows(got) == [(7,), (300,)]
-    (entry,) = [e for key, e in col._resident._entries.items() if key[2] == "terms"]
+    (entry,) = [e for key, e in col._resident._entries.items() if key[2] == "term_rows"]
     keys = [f"cat\x1fk{d}" for d in range(300)] + [f"cat\x1f{long}", "body\x1falpha",
                                                      "body\x1fbeta"]
     assert entry[0].nbytes == sum(len(k.encode()) for k in keys)
