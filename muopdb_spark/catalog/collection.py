@@ -65,7 +65,7 @@ from muopdb_spark.functions.distance import score_np
 from muopdb_spark.functions.text import stemmed_tokens
 from muopdb_spark.index.multi_ivf import (
     build_multi_ivf, centroid_arrays, multi_ivf_load, multi_ivf_save, probe,
-    probed_filter, rank,
+    probed_filter, rank_request,
 )
 from muopdb_spark.index.quantizer import QUANTIZERS, lookup
 
@@ -1411,22 +1411,19 @@ class Collection:
         """Phase 2 as one Spark plan: each segment's postings filtered to
         its probed pairs as literal partition filters, unioned,
         tombstone-masked seq_no-aware (only when tombstone files exist),
-        semi-joined to pre_filter_ids on (user_id, id) when it has a
-        user_id column and on id otherwise, then multi_ivf.rank with the
-        collection's root codebook."""
+        then multi_ivf.rank_request (the pre_filter_ids semi-join,
+        scoring and rank) with the collection's root codebook."""
         scan = _union([self.load_segment_index(s).postings.filter(probed_filter(probed))
                        for s, probed in pairs.items()])
         scan = self._apply_tombstones(scan, id_col="id")  # V20
-        if pre_filter_ids is not None:
-            on = ["user_id", "id"] if "user_id" in pre_filter_ids.columns else ["id"]
-            scan = scan.join(pre_filter_ids.select(*on).distinct(), on=on, how="left_semi")
         # the authoritative codebook lives at the collection root (a
         # per-segment copy of a per-user table may predate users added
         # by later segments' extension); per-user entries collect or
         # join only the REQUESTED users' books
         codebook = q.read_artifact(self.spark, self.root) if q is not None else None
-        return rank(scan, q, codebook, self.config.metric, query_vector, users, k,
-                    rerank=rerank, per_user=per_user, score_decimals=score_decimals)
+        return rank_request(scan, q, codebook, self.config.metric, query_vector, users, k,
+                            pre_filter_ids=pre_filter_ids, rerank=rerank, per_user=per_user,
+                            score_decimals=score_decimals)
 
     def ann_search(
         self,

@@ -20,18 +20,24 @@ centroids + IVF posting lists per centroid
     - phase 1: exact distances query x centroids (the centroid table is
       small by construction, so the HNSW graph walk of the reference is
       replaced by brute force over centroids — V2's mathematical
-      contract, not its pointer-chasing implementation)
+      contract, not its pointer-chasing implementation), on the driver
+      for one query (multi_ivf.probe), one window for a batch
+      (multi_ivf.probe_window)
     - centroid_distance_ratio prune (V19, spann/index.rs:233-246)
     - phase 2: scan only the probed centroids' postings (partition
-      pruning), score, global top-k with the ordering contract
-      (score asc NaN last, id tiebreak — utils.rs:95-113)
+      pruning) and score them, exactly or on the quantizer's codes;
+      multi_ivf.rank, the one ranking tail of every ANN search, dedups,
+      cuts and re-scores the quantized candidates and takes the top-k
+      with the ordering contract (score asc NaN last, id tiebreak —
+      utils.rs:95-113). The index ranks as one constant user_id 0,
+      projected away.
 
   At 100 TB: postings are hash-partitioned by centroid_id, so phase 2
   reads |probed|/|centroids| of the data; the centroid table stays tiny
   and broadcast; no stage shuffles the corpus after build.
 
 Multi-assignment means a point can appear in several probed postings —
-search dedups by id before top-k (the reference's visited-set, V21).
+rank dedups by id before top-k (the reference's visited-set, V21).
 """
 
 from __future__ import annotations
@@ -44,7 +50,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from muopdb_spark.functions.distance import score_expr
-from muopdb_spark.index.multi_ivf import centroid_arrays, probe, probe_window
+from muopdb_spark.index.multi_ivf import (
+    centroid_arrays,
+    probe,
+    probe_window,
+    rank,
+    rank_request,
+)
 from muopdb_spark.index.quantizer import lookup
 
 
@@ -354,8 +366,9 @@ def ivf_search_batch(
     stream; phase 2 joins the probed (query_id, centroid_id) pairs with
     the postings on centroid_id — the join key matches the postings'
     hash partitioning, so postings shuffle zero times and only probed
-    centroids are read. Dedup (V21) and the (score, id) ordering
-    contract (utils.rs:95-113) are per query via one window.
+    centroids are read. Dedup (V21), the candidate cut and the (score,
+    id) top-k (utils.rs:95-113) are multi_ivf.rank's, keyed per query,
+    with the index ranked as one constant user.
 
     pre_filter_ids is the PER-QUERY F8 `plan_with_ids` contract
     (planner.rs:45-61 — the reference's hybrid Search RPC carries one
@@ -384,7 +397,8 @@ def ivf_search_batch(
         index, queries, query_id_col=query_id_col, query_vec_col=query_vec_col,
         num_probes=num_probes, centroid_distance_ratio=centroid_distance_ratio,
     )
-    cand = probes.join(index.postings, "centroid_id")
+    # the index is one constant user of the shared ranking tail
+    cand = probes.join(index.postings, "centroid_id").withColumn("user_id", F.lit(0))
     if pre_filter_ids is not None:
         cand = cand.join(
             pre_filter_ids.select(
@@ -394,65 +408,12 @@ def ivf_search_batch(
         )
     if tombstones is not None:
         cand = cand.join(tombstones.select("id").distinct(), on="id", how="left_anti")
-    exact = score_expr(index.metric, F.col("vector"), F.col("qv"))
+    approx = None
     if q is not None:
         cand, approx = q.score_batch(index.codebook, cand, queries)
-        carry = ["qv", "vector"] if rerank is not None else []
-        scored = cand.select("query_id", "id", *carry, approx.alias("adc"))
-        # V21 dedup per (query, id), then per-query candidate cut.
-        # r17 (guide §2.4, r16 VERDICT #5): ONE exchange instead of
-        # two — an explicit repartition on query_id satisfies both the
-        # dedup aggregate (its (query_id, id) grouping is a superset
-        # of the clustering) and every later per-query window, where
-        # the old row_number-over-(query_id, id) dedup forced its own
-        # (query_id, id) exchange that the following per-query window
-        # could not reuse. Duplicate (query, id) candidate rows are
-        # multi-assignment copies with IDENTICAL adc/qv/vector (codes
-        # are centroid-independent, checked by the lookup above), so
-        # min/first reproduce the old keep-one-row semantics exactly.
-        wcut = Window.partitionBy("query_id").orderBy(
-            F.col("adc").asc_nulls_last(), F.col("id").asc()
-        )
-        pool = (
-            scored.repartition("query_id")
-            .groupBy("query_id", "id")
-            .agg(
-                F.min("adc").alias("adc"),
-                *[F.first(c).alias(c) for c in carry],
-            )
-            .withColumn("rk", F.row_number().over(wcut))
-            .filter(F.col("rk") <= (rerank if rerank is not None else k))
-        )
-        score = exact if rerank is not None else F.col("adc")
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("score").asc_nulls_last(), F.col("id").asc()
-        )
-        return (
-            pool.select("query_id", "id", score.alias("score"))
-            .withColumn("rn2", F.row_number().over(wk))
-            .filter(F.col("rn2") <= k)
-            .select("query_id", "id", "score")
-        )
-    score = F.round(exact, score_decimals) if score_decimals is not None else exact
-    # (examined r17, left alone: this aggregate already rides the
-    # probe window's hashpartitioning(query_id) through the broadcast
-    # postings join — plan-verified zero extra exchange, so the
-    # quantized branch's repartition treatment has nothing to save
-    # here)
-    per_pair = (
-        cand.select("query_id", "id", score.alias("score"))
-        .groupBy("query_id", "id").agg(F.min("score").alias("score"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        per_pair.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "id", "score")
-    )
+    return rank(cand, score_expr(index.metric, F.col("vector"), F.col("qv")), k,
+                approx=approx, keys=["query_id"], rerank=rerank,
+                score_decimals=score_decimals).drop("user_id")
 
 
 def ivf_search(
@@ -471,8 +432,9 @@ def ivf_search(
     """Two-phase ANN search returning (id, score) top-k.
 
     num_probes defaults to k (search_params.rs:21-23: num_explored_
-    centroids defaults to top_k). Multi-assigned points are deduped by id
-    (min score) before the final top-k — the visited-set analog (V21).
+    centroids defaults to top_k). Phase 2 is multi_ivf.rank_request over
+    the index as one constant user: multi-assigned points are deduped by
+    id before the final top-k — the visited-set analog (V21).
 
     pre_filter_ids is the F8 `plan_with_ids` contract (planner.rs:45-61,
     applied inside the posting scan at ivf/block_based/index.rs:214-227):
@@ -491,14 +453,13 @@ def ivf_search(
     standard IVF-quantize + re-rank plan (N bounds the exact work to a
     constant per query regardless of corpus size).
     """
-    q = lookup(index.quantizer, multi_user=False, metric=index.metric)
+    q = lookup(index.quantizer, multi_user=False, metric=index.metric, dedup=True)
     if num_probes is None:
         num_probes = k
     probed = probe_centroids(
         index, query_vector, num_probes=num_probes,
         centroid_distance_ratio=centroid_distance_ratio,
     )
-    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
     scan = index.postings.filter(F.col("centroid_id").isin(probed))
     if pre_filter is not None:
         scan = scan.filter(pre_filter)
@@ -506,34 +467,6 @@ def ivf_search(
         scan = scan.join(pre_filter_ids.select("id").distinct(), on="id", how="left_semi")
     if tombstones is not None:
         scan = scan.join(tombstones.select("id").distinct(), on="id", how="left_anti")
-    exact = score_expr(index.metric, F.col("vector"), qv)
-    if q is not None:
-        scan, approx = q.score(index.codebook, query_vector, scan, None)
-        cand = (
-            scan.select("id", "vector", approx.alias("adc"))
-            # dedup multi-assignment by id before the candidate cut (V21)
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.col("adc").asc())
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .orderBy(F.col("adc").asc_nulls_last(), F.col("id").asc())
-            .limit(rerank if rerank is not None else k)
-        )
-        score = exact if rerank is not None else F.col("adc")
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        return (
-            cand.select("id", score.alias("score"))
-            .orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-            .limit(k)
-        )
-    score = F.round(exact, score_decimals) if score_decimals is not None else exact
-    return (
-        scan.select("id", score.alias("score"))
-        .groupBy("id").agg(F.min("score").alias("score"))  # dedup multi-assignment
-        .orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-        .limit(k)
-    )
+    return rank_request(scan.withColumn("user_id", F.lit(0)), q, index.codebook,
+                        index.metric, query_vector, [0], k, rerank=rerank,
+                        score_decimals=score_decimals).select("id", "score")

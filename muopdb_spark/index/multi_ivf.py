@@ -21,16 +21,20 @@ projection (user_id, id, vector) flows through it). The fit asserts
 the bound, so a regression fails loudly instead of OOMing. AQE
 skew-join handles the assignment join.
 
-Search has one core per shape. A single request (any number of users)
-collects the requested users' centroids, probes them on the driver
-(`probe`), reads only the probed (user_id, centroid_id) postings
-partitions through literal filters (`probed_filter` — the
-partition-pruning analog of per-user index-blob opens,
-multi_spann/index.rs:100-137) and ranks them (`rank`);
-Collection.ann_search runs the same three steps over its segments, or,
-when the postings it keeps on the driver cover an unquantized request,
-ranks them in numpy by `rank`'s rules (Collection._ann_resident). A
-batch of requests probes with one window (`probe_window`) instead.
+Search has one probe per shape and one ranking tail. A single request
+(any number of users) collects the requested users' centroids, probes
+them on the driver (`probe`), reads only the probed (user_id,
+centroid_id) postings partitions through literal filters
+(`probed_filter` — the partition-pruning analog of per-user index-blob
+opens, multi_spann/index.rs:100-137) and scores them against the
+literal query vector (`rank_request`); Collection.ann_search runs the
+same steps over its segments, or, when the postings it keeps on the
+driver cover an unquantized request, ranks them in numpy by `rank`'s
+rules (Collection._ann_resident). A batch of requests probes with one
+window (`probe_window`) and scores each row against its own `qv`.
+Every shape then ends in `rank`, keyed by nothing for one request and
+by the request (or query) id for a batch; ivf.py's single-tenant
+searches run through it as one constant user.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -298,67 +302,93 @@ def probe_window(scored: DataFrame, keys: Sequence[str], num_probes: int,
 
 
 def rank(
-    scan: DataFrame,
-    q,
-    codebook,
-    metric: str,
-    query_vector: Sequence[float],
-    users: Sequence[int],
+    cand: DataFrame,
+    exact: Column,
     k: int,
     *,
+    approx: Column | None = None,
+    keys: Sequence[str] = (),
     rerank: int | None = None,
     per_user: bool = False,
     score_decimals: int | None = None,
 ) -> DataFrame:
-    """Phase 2's ranking tail over the probed postings `scan`: score,
-    dedup multi-assignment copies per (user, id) (V21), top-k — global
-    across users (the reference's cross-user merge, snapshot.rs:60-61)
-    or, per_user=True, per user.
+    """Phase 2's one ranking tail, for every search shape: `keys` is []
+    for a single request, ["request_id"] or ["query_id"] for a batch.
+    `cand` is the probed, pre-filtered candidate rows (`keys`, user_id,
+    id, vector, [qv]) and the caller has scored them: `exact` is the
+    exact distance Column, `approx` the quantizer's estimate of it (None
+    when unquantized).
 
-    `q` is the quantizer entry (None when unquantized): the stored codes
-    are scored inside the scan (mod.rs:145-149), then each user's top
-    `rerank` (or k) candidates — a recall-safe superset of a global cut
-    — are kept, and re-scored exactly when `rerank` is set (exact given
-    candidate containment, recall-pytest-gated)."""
-    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
-    exact = score_expr(metric, F.col("vector"), qv)
-    if q is not None:
-        scan, adc = q.score(codebook, query_vector, scan, users)
-        wu = Window.partitionBy("user_id").orderBy(
+    Multi-assignment copies are deduped per (keys, user, id) (V21): the
+    min exact score, or, quantized, the min estimate with the first
+    vector (copies carry identical codes, so any copy is the one —
+    lookup(..., dedup=True) refuses codes for which that fails). A
+    quantized request then keeps each user's top `rerank` (or k)
+    candidates by (estimate, id), a recall-safe superset of a global
+    cut, and re-scores them exactly when `rerank` is set (exact given
+    candidate containment, recall-pytest-gated). The final top-k by
+    (score asc NaN last, id) (utils.rs:95-113) is per `keys`, across
+    the users (the reference's cross-user merge, snapshot.rs:60-61), or
+    per (keys, user) with per_user=True. A single request's output is
+    ordered: by (score, id), or per_user by (user, score, id).
+
+    The quantized branch repartitions on `keys` (on user_id for a
+    single request) before the dedup: that one exchange serves the
+    aggregate and both windows, where the aggregate alone would shuffle
+    on (keys, user, id) and the windows again. The unquantized
+    aggregate adds none: it rides the batch probe window's
+    partitioning."""
+    pair = [*keys, "user_id", "id"]
+    order = [F.col("score").asc_nulls_last(), F.col("id").asc()]
+    if approx is not None:
+        # the columns `exact` reads: the vector, and a batch's query
+        carry = [c for c in ("vector", "qv") if c in cand.columns] if rerank is not None else []
+        wcut = Window.partitionBy(*keys, "user_id").orderBy(
             F.col("adc").asc_nulls_last(), F.col("id").asc())
         cand = (
-            scan.select("user_id", "id", "vector", adc.alias("adc"))
-            .groupBy("user_id", "id").agg(
-                F.min("adc").alias("adc"), F.first("vector").alias("vector"))
-            .withColumn("crnk", F.row_number().over(wu))
+            cand.select(*pair, *carry, approx.alias("adc"))
+            .repartition(*(keys or ["user_id"]))
+            .groupBy(*pair)
+            .agg(F.min("adc").alias("adc"), *[F.first(c).alias(c) for c in carry])
+            .withColumn("crnk", F.row_number().over(wcut))
             .filter(F.col("crnk") <= (rerank if rerank is not None else k))
         )
         score = exact if rerank is not None else F.col("adc")
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        deduped = cand.select("user_id", "id", score.alias("score"))
     else:
         score = exact
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        deduped = (
-            scan.select("user_id", "id", score.alias("score"))
-            .groupBy("user_id", "id").agg(F.min("score").alias("score"))
-        )
-    if per_user:
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("score").asc_nulls_last(), F.col("id").asc())
-        return (
-            deduped.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("user_id", "id", "score")
-            .orderBy("user_id", F.col("score").asc_nulls_last(), "id")
-        )
-    return (
-        deduped.orderBy(F.col("score").asc_nulls_last(), F.col("id").asc())
-        .limit(k)
-        .select("user_id", "id", "score")
+    if score_decimals is not None:
+        score = F.round(score, score_decimals)
+    deduped = cand.select(*pair, score.alias("score"))
+    if approx is None:
+        deduped = deduped.groupBy(*pair).agg(F.min("score").alias("score"))
+    cut = [*keys, "user_id"] if per_user else list(keys)
+    if not cut:
+        return deduped.orderBy(*order).limit(k).select(*pair, "score")
+    out = (
+        deduped.withColumn("rnk", F.row_number().over(Window.partitionBy(*cut).orderBy(*order)))
+        .filter(F.col("rnk") <= k)
+        .select(*pair, "score")
     )
+    return out if keys else out.orderBy("user_id", *order)
+
+
+def rank_request(scan: DataFrame, q, codebook, metric: str,
+                 query_vector: Sequence[float], users: Sequence[int], k: int, *,
+                 pre_filter_ids: DataFrame | None = None, **tail) -> DataFrame:
+    """Phase 2 of one request over its probed postings `scan`, the core
+    multi_ivf_search_users, Collection.ann_search and ivf_search share:
+    the pre_filter_ids semi-join (F8 plan_with_ids, planner.rs:45-61) on
+    (user_id, id) when it has a user_id column and on id otherwise, the
+    quantizer's score against the literal query vector (the stored
+    codes scored inside the scan, mod.rs:145-149), then `rank`."""
+    if pre_filter_ids is not None:
+        on = ["user_id", "id"] if "user_id" in pre_filter_ids.columns else ["id"]
+        scan = scan.join(pre_filter_ids.select(*on).distinct(), on=on, how="left_semi")
+    approx = None
+    if q is not None:
+        scan, approx = q.score(codebook, query_vector, scan, users)
+    qv = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    return rank(scan, score_expr(metric, F.col("vector"), qv), k, approx=approx, **tail)
 
 
 def multi_ivf_search_users(
@@ -383,11 +413,13 @@ def multi_ivf_search_users(
     (`probed_filter`), pre-filtered, and ranked by `rank`.
 
     per_user=False: global top-k across users. per_user=True: top-k PER
-    user. pre_filter_ids: F8 plan_with_ids as a leftsemi join on id —
+    user. pre_filter_ids: F8 plan_with_ids as a leftsemi join, on
+    (user_id, id) when it has a user_id column (each user keeps only its
+    listed ids) and on id otherwise (the ids are kept for every user);
     the match set never collects to the driver. Quantized indexes score
     the stored codes inside the scan; `rerank=N` re-scores each user's
     quantized top-N exactly. Collection.ann_search runs the same probe
-    and the same `rank` over its segments."""
+    and the same `rank_request` over its segments."""
     q = lookup(index.quantizer, multi_user=True, metric=index.metric, dedup=True)
     if num_probes is None:
         num_probes = k
@@ -401,10 +433,9 @@ def multi_ivf_search_users(
     scan = index.postings.filter(probed_filter(probed))
     if pre_filter is not None:
         scan = scan.filter(pre_filter)
-    if pre_filter_ids is not None:
-        scan = scan.join(pre_filter_ids.select("id").distinct(), on="id", how="left_semi")
-    return rank(scan, q, index.codebook, index.metric, query_vector, users, k,
-                rerank=rerank, per_user=per_user, score_decimals=score_decimals)
+    return rank_request(scan, q, index.codebook, index.metric, query_vector, users, k,
+                        pre_filter_ids=pre_filter_ids, rerank=rerank, per_user=per_user,
+                        score_decimals=score_decimals)
 
 
 def multi_ivf_search(
@@ -445,7 +476,8 @@ def multi_ivf_search_batch(
     centroid) rows to the postings ON THE POSTINGS' PARTITIONING KEY
     (user_id, centroid_id) — postings never shuffle, only the slim probe
     table moves. Per-request dedup and top-k (global across the
-    request's users, per_user=True for per-user cuts) in one window.
+    request's users, per_user=True for per-user cuts) are `rank`'s,
+    keyed by request_id.
 
     pre_filter_ids: PER-REQUEST F8 plan_with_ids (planner.rs:45-61; the
     Search RPC carries one filter per request) — a (request_id, id)
@@ -488,64 +520,9 @@ def multi_ivf_search_batch(
             ).distinct(),
             on=["request_id", "id"], how="left_semi",
         )
-    exact = score_expr(index.metric, F.col("vector"), F.col("qv"))
-    keys = ["request_id", "user_id"] if per_user else ["request_id"]
+    approx = None
     if q is not None:
         cand, approx = q.score_batch(index.codebook, cand, req)
-        carry = ["qv", "vector"] if rerank is not None else []
-        scored = cand.select(
-            "request_id", "user_id", "id", *carry, approx.alias("adc")
-        )
-        # r17 (guide §2.4, r16 VERDICT #5): one repartition on the
-        # output keys serves the dedup aggregate and both later
-        # windows — the old row_number-over-(request, user, id) dedup
-        # forced its own exchange the per-request windows could not
-        # reuse. Duplicate candidate rows are multi-assignment copies
-        # with identical adc/qv/vector (centroid-independent codes,
-        # checked by the lookup above), so min/first keep the same row
-        # content. Same change as ivf.ivf_search_batch. The candidate
-        # cut is per (request, user), `rank`'s rule, so batch ==
-        # per-request; repartition(request_id) already clusters it.
-        wcut = Window.partitionBy("request_id", "user_id").orderBy(
-            F.col("adc").asc_nulls_last(), F.col("id").asc()
-        )
-        pool = (
-            scored.repartition(*keys)
-            .groupBy("request_id", "user_id", "id")
-            .agg(
-                F.min("adc").alias("adc"),
-                *[F.first(c).alias(c) for c in carry],
-            )
-            .withColumn("rk", F.row_number().over(wcut))
-            .filter(F.col("rk") <= (rerank if rerank is not None else k))
-        )
-        score = exact if rerank is not None else F.col("adc")
-        if score_decimals is not None:
-            score = F.round(score, score_decimals)
-        wk = Window.partitionBy(*keys).orderBy(
-            F.col("score").asc_nulls_last(), F.col("id").asc()
-        )
-        return (
-            pool.select("request_id", "user_id", "id", score.alias("score"))
-            .withColumn("rn2", F.row_number().over(wk))
-            .filter(F.col("rn2") <= k)
-            .select("request_id", "user_id", "id", "score")
-        )
-    score = F.round(exact, score_decimals) if score_decimals is not None else exact
-    # (examined r17, left alone: this aggregate already rides phase
-    # 1's hashpartitioning(request_id, user_id) through the broadcast
-    # postings join — plan-verified zero extra exchange; forcing a
-    # repartition on the output keys would shuffle the raw candidate
-    # rows instead of the deduped ones for no exchange win)
-    deduped = (
-        cand.select("request_id", "user_id", "id", score.alias("score"))
-        .groupBy("request_id", "user_id", "id").agg(F.min("score").alias("score"))
-    )
-    wk = Window.partitionBy(*keys).orderBy(
-        F.col("score").asc_nulls_last(), F.col("id").asc()
-    )
-    return (
-        deduped.withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select("request_id", "user_id", "id", "score")
-    )
+    return rank(cand, score_expr(index.metric, F.col("vector"), F.col("qv")), k,
+                approx=approx, keys=["request_id"], rerank=rerank, per_user=per_user,
+                score_decimals=score_decimals)

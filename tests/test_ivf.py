@@ -250,9 +250,13 @@ def test_batch_search_one_plan_matches_per_query(index, clustered, spark):
             assert got[qid] == single, f"query {qid} cfg {cfg}"
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("quantizer", ["pq", "opq", "rabitq", "sq"])
-@pytest.mark.parametrize("rerank", [None, 50])
+# two cases run in the default tier, so it sees the shared ranking
+# tail's quantized branch with and without the exact re-score
+@pytest.mark.parametrize("quantizer,rerank", [
+    pytest.param(quant, rerank, marks=() if (quant, rerank) in (
+        ("pq", 50), ("sq", None)) else pytest.mark.slow)
+    for quant in ("pq", "opq", "rabitq", "sq") for rerank in (None, 50)
+])
 def test_batch_search_quantized_matches_per_query(clustered, spark, quantizer, rerank):
     """Quantized batch path (each registry entry's batch score Column
     wired into ivf_search_batch), for every quantizer a single-user ivf

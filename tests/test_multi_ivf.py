@@ -107,6 +107,39 @@ def test_pre_filter_ids_semi_join(index, users_df):
     assert got and all(r["id"] % 2 == 0 for r in got)
 
 
+def test_pre_filter_ids_with_users_admits_only_its_pairs(spark):
+    """Two users share id 3. A pre-filter with a user_id column keeps
+    only its (user_id, id) pairs; an id-only one admits the id for every
+    user."""
+    rng = np.random.default_rng(5)
+    rows = [(user, i, [float(x) for x in rng.normal(0.0, 1.0, DIM)])
+            for user in (0, 1) for i in range(10)]
+    df = spark.createDataFrame(rows, "user_id long, doc_id long, vector array<float>")
+    idx = build_multi_ivf(df, num_centroids=1, seed=3)
+    for pre, want in (
+        (spark.createDataFrame([(0, 3)], "user_id long, id long"), [(0, 3)]),
+        (spark.createDataFrame([(3,)], "id long"), [(0, 3), (1, 3)]),
+    ):
+        got = multi_ivf_search_users(idx, [0, 1], [0.0] * DIM, 10,
+                                     centroid_distance_ratio=None,
+                                     pre_filter_ids=pre).collect()
+        assert sorted((r["user_id"], r["id"]) for r in got) == want
+
+
+def test_quantized_multi_user_search_plans_one_exchange(users_df):
+    """The shared ranking tail repartitions a quantized request's
+    candidates once, on user_id: the dedup aggregate, the per-user
+    candidate cut and the final top-k all run over that one exchange."""
+    idx = build_multi_ivf(users_df, num_centroids=2, seed=9, quantizer="pq",
+                          pq_subvectors=3, pq_centers=16)
+    df = multi_ivf_search_users(idx, [0, 1], [75.0] * DIM, 5, num_probes=2,
+                                rerank=10, score_decimals=6)
+    # the request's own operators, above the cached index's build plan
+    plan = df._jdf.queryExecution().executedPlan().toString().split("InMemoryRelation")[0]
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+    assert len(df.collect()) == 5
+
+
 def test_cross_user_merge(index):
     # query at 100: user 0's cluster @100 beats user 1's clusters @50/150
     got = multi_ivf_search_users(index, [0, 1], [100.0] * DIM, 6,

@@ -31,10 +31,11 @@ def postings(spark):
 @pytest.mark.parametrize("name", list(ENTRIES))
 def test_codes_independent_of_centroid(postings, name):
     """A multi-assigned vector is posted under several centroids; the
-    min/first dedup of ivf_search_batch, multi_ivf_search_batch and
-    Collection.ann_search keeps one copy, which is exact only when the
-    copies carry identical codes. Encode the same vectors under two
-    centroid ids and compare every code column."""
+    min/first dedup of the shared ranking tail (multi_ivf.rank, behind
+    every ivf / multi_ivf search and Collection.ann_search) keeps one
+    copy, which is exact only when the copies carry identical codes.
+    Encode the same vectors under two centroid ids and compare every
+    code column."""
     q = ENTRIES[name]
     assert q.codes_centroid_independent
     book = q.train(postings, num_subvectors=2, num_centers=4)
@@ -52,14 +53,22 @@ def test_codes_independent_of_centroid(postings, name):
 
 def test_dedup_sites_refuse_centroid_dependent_codes(spark, tmp_path, monkeypatch):
     from muopdb_spark.catalog import Collection, CollectionConfig
-    from muopdb_spark.index.ivf import IvfIndex, ivf_search_batch
-    from muopdb_spark.index.multi_ivf import MultiIvfIndex, multi_ivf_search_batch
+    from muopdb_spark.index.ivf import IvfIndex, ivf_search, ivf_search_batch
+    from muopdb_spark.index.multi_ivf import (
+        MultiIvfIndex,
+        multi_ivf_search_batch,
+        multi_ivf_search_users,
+    )
 
     residual = copy.copy(QUANTIZERS["pq"])
     residual.codes_centroid_independent = False
     monkeypatch.setitem(QUANTIZERS, "pq", residual)
     with pytest.raises(ValueError, match="centroid"):
+        ivf_search(IvfIndex(None, None, quantizer="pq"), [0.0] * DIM, 5)
+    with pytest.raises(ValueError, match="centroid"):
         ivf_search_batch(IvfIndex(None, None, quantizer="pq"), None, 5)
+    with pytest.raises(ValueError, match="centroid"):
+        multi_ivf_search_users(MultiIvfIndex(None, None, quantizer="pq"), [0], [0.0] * DIM, 5)
     with pytest.raises(ValueError, match="centroid"):
         multi_ivf_search_batch(MultiIvfIndex(None, None, quantizer="pq"), None, 5)
     col = Collection(spark, str(tmp_path), CollectionConfig(
