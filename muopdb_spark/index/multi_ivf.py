@@ -332,23 +332,27 @@ def rank(
     per (keys, user) with per_user=True. A single request's output is
     ordered: by (score, id), or per_user by (user, score, id).
 
-    The quantized branch repartitions on `keys` (on user_id for a
-    single request) before the dedup: that one exchange serves the
-    aggregate and both windows, where the aggregate alone would shuffle
-    on (keys, user, id) and the windows again. The unquantized
-    aggregate adds none: it rides the batch probe window's
-    partitioning."""
+    A quantized batch repartitions on its final cut's keys before the
+    dedup: that one exchange serves the aggregate and both windows,
+    where the aggregate alone would shuffle on (keys, user, id) and the
+    windows again. A single request adds none: its aggregate reduces
+    partially before hashing on (user, id), and the per-user cut keeps
+    a partial top-`rerank` per task before its exchange, so no one task
+    receives every candidate. The unquantized aggregate adds none
+    either: it rides the batch probe window's partitioning."""
     pair = [*keys, "user_id", "id"]
+    cut = [*keys, "user_id"] if per_user else list(keys)
     order = [F.col("score").asc_nulls_last(), F.col("id").asc()]
     if approx is not None:
         # the columns `exact` reads: the vector, and a batch's query
-        carry = [c for c in ("vector", "qv") if c in cand.columns] if rerank is not None else []
+        carry = (["vector", "qv"] if keys else ["vector"]) if rerank is not None else []
+        cand = cand.select(*pair, *carry, approx.alias("adc"))
+        if keys:
+            cand = cand.repartition(*cut)
         wcut = Window.partitionBy(*keys, "user_id").orderBy(
             F.col("adc").asc_nulls_last(), F.col("id").asc())
         cand = (
-            cand.select(*pair, *carry, approx.alias("adc"))
-            .repartition(*(keys or ["user_id"]))
-            .groupBy(*pair)
+            cand.groupBy(*pair)
             .agg(F.min("adc").alias("adc"), *[F.first(c).alias(c) for c in carry])
             .withColumn("crnk", F.row_number().over(wcut))
             .filter(F.col("crnk") <= (rerank if rerank is not None else k))
@@ -361,7 +365,6 @@ def rank(
     deduped = cand.select(*pair, score.alias("score"))
     if approx is None:
         deduped = deduped.groupBy(*pair).agg(F.min("score").alias("score"))
-    cut = [*keys, "user_id"] if per_user else list(keys)
     if not cut:
         return deduped.orderBy(*order).limit(k).select(*pair, "score")
     out = (

@@ -3,6 +3,8 @@ vectors (the reference's recall-dataset recipe — py/create_test_hdf5.py:
 clusters at i*100, sigma 5, seed 42 — ground truth by construction) and
 exactness when probing everything."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -85,8 +87,14 @@ def test_pq_in_scan_and_exact_rerank(clustered):
     assert "pq_code" in idx.postings.columns and idx.codebook is not None
     q = [205.0] * DIM
     exact = knn(clustered, q, 10, id_col="vec_id").collect()
-    got = ivf_search(idx, q, 10, num_probes=N_CLUSTERS,
-                     centroid_distance_ratio=None, rerank=100).collect()
+    df = ivf_search(idx, q, 10, num_probes=N_CLUSTERS,
+                    centroid_distance_ratio=None, rerank=100)
+    # the index ranks as one constant user, yet its candidates never
+    # meet in one task: the dedup hashes them on id
+    plan = df._jdf.queryExecution().executedPlan().toString().split("InMemoryRelation")[0]
+    assert "SinglePartition" not in plan, plan
+    assert re.search(r"Exchange hashpartitioning\([^)]*\bid#", plan), plan
+    got = df.collect()
     assert [r["id"] for r in got] == [r["vec_id"] for r in exact]
     for a, e in zip(got, exact):
         assert a["score"] == pytest.approx(e["score"], rel=1e-12)

@@ -126,17 +126,20 @@ def test_pre_filter_ids_with_users_admits_only_its_pairs(spark):
         assert sorted((r["user_id"], r["id"]) for r in got) == want
 
 
-def test_quantized_multi_user_search_plans_one_exchange(users_df):
-    """The shared ranking tail repartitions a quantized request's
-    candidates once, on user_id: the dedup aggregate, the per-user
-    candidate cut and the final top-k all run over that one exchange."""
+def test_quantized_multi_user_search_reduces_before_the_exchange(users_df):
+    """A quantized request's dedup reduces partially, then hashes its
+    candidates on (user_id, id), and the per-user candidate cut keeps a
+    partial top-`rerank` before its own exchange: no one task receives
+    every candidate of a user."""
     idx = build_multi_ivf(users_df, num_centroids=2, seed=9, quantizer="pq",
                           pq_subvectors=3, pq_centers=16)
     df = multi_ivf_search_users(idx, [0, 1], [75.0] * DIM, 5, num_probes=2,
                                 rerank=10, score_decimals=6)
-    # the request's own operators, above the cached index's build plan
     plan = df._jdf.queryExecution().executedPlan().toString().split("InMemoryRelation")[0]
-    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 1, plan
+    assert "SinglePartition" not in plan, plan
+    assert re.search(r"Exchange hashpartitioning\(user_id#\d+L, id#", plan), plan
+    assert "partial_min(adc" in plan, plan
+    assert re.search(r"WindowGroupLimit .*, Partial", plan), plan
     assert len(df.collect()) == 5
 
 

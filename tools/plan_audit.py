@@ -95,11 +95,10 @@ CHECKS = {
          "manifest plan"),
     ],
     "v26_ivf_sq_rerank": [
-        ("TakeOrderedAndProject", "the exact re-ranked top-k is a "
-         "partial heap, after the shared ranking tail's SQ-estimated "
-         "candidate cut (one window over one exchange); codes score "
-         "inside the probed posting scan (the PQ-ADC shape with a pure "
-         "JVM zip_with fold)"),
+        ("TakeOrderedAndProject", "SQ-estimated candidate cut and exact "
+         "re-ranked top-k are partial heaps; codes score inside the "
+         "probed posting scan (the PQ-ADC shape with a pure JVM "
+         "zip_with fold)"),
         ("InMemoryTableScan", "the probed centroid_id IN predicate is "
          "pushed into the cached postings scan (the persisted serving "
          "tier); on a cold artifact the same predicate prunes the "
